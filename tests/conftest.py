@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 
 import pytest
 
@@ -33,10 +34,6 @@ def pytest_collection_modifyitems(config, items):
     FULL tier (everything) runs with ``--runslow`` or
     ``SPARK_GRAFT_RUN_SLOW=1`` and is part of the repo's own
     round-end verification (see OPTIMIZATION_r14.md)."""
-    if config.getoption("--runslow") or os.environ.get(
-        "SPARK_GRAFT_RUN_SLOW"
-    ):
-        return
     manifest = os.path.join(os.path.dirname(__file__), "slow_tests.txt")
     slow_ids: set[str] = set()
     if os.path.exists(manifest):
@@ -46,6 +43,27 @@ def pytest_collection_modifyitems(config, items):
                 for ln in f
                 if ln.strip() and not ln.startswith("#")
             }
+    # a renamed slow test would otherwise silently join the default
+    # tier: name every manifest id whose file was collected but which
+    # matches no collected test (node-id arguments collect part of a
+    # file, so they skip the check)
+    collected = {item.nodeid for item in items}
+    files = {nodeid.split("::", 1)[0] for nodeid in collected}
+    stale = sorted(
+        i for i in slow_ids
+        if i.split("::", 1)[0] in files and i not in collected
+    )
+    if stale and not any("::" in a for a in config.args):
+        warnings.warn(
+            pytest.PytestWarning(
+                "tests/slow_tests.txt names tests that no longer exist: "
+                + ", ".join(stale)
+            )
+        )
+    if config.getoption("--runslow") or os.environ.get(
+        "SPARK_GRAFT_RUN_SLOW"
+    ):
+        return
     skip = pytest.mark.skip(
         reason="slow tier (run with --runslow / SPARK_GRAFT_RUN_SLOW=1)"
     )

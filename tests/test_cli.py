@@ -644,16 +644,16 @@ def test_cli_sync_update_set_top_level_split(spark, tmp_path):
     """Review regression (r12): --sync-update-set splits on TOP-LEVEL
     commas only — an expression like round(v,0)+length(',') is one
     entry, not three."""
-    from tms_etl_spark.__main__ import _split_top_level
+    from tms_etl_spark.operators.sqldml import _parse_assignments
     from tms_etl_spark.operators.versioned import (
         read_version,
         write_version,
     )
 
-    assert _split_top_level("a=round(v,2),b='x,y'") == [
-        "a=round(v,2)",
-        "b='x,y'",
-    ]
+    assert _parse_assignments(spark, "a=round(v,2),b='x,y'") == {
+        "a": "round(v,2)",
+        "b": "'x,y'",
+    }
     tdir = str(tmp_path / "t")
     write_version(
         spark.createDataFrame(

@@ -676,34 +676,41 @@ def test_maintain_table_extends_indexes(spark, tmp_path):
     assert "version" in out2  # the rest of the window ran
 
 
-def test_anti_equality_and_like_grammar_parses():
+def _conjunct(spark, c):
+    """The pruning predicates conjunct ``c`` contributes to a
+    conjunction, read by the Catalyst WHERE walker."""
+    from tms_etl_spark.operators.versioned import _where_pruning_groups
+
+    [group] = _where_pruning_groups(spark, f"({c}) AND true")
+    return group
+
+
+def test_anti_equality_and_like_grammar_parses(spark):
     """Grammar units for the r9 skipping ops: != / <> canonicalize,
     NOT IN parses a value set, LIKE 'abc%' decomposes into the prefix
     range, NOT LIKE carries the prefix, and non-prefix patterns stay
     residual-only."""
-    from tms_etl_spark.operators.versioned import _parse_conjunct_multi
-
-    assert _parse_conjunct_multi("seg != 'error'") == [
+    assert _conjunct(spark, "seg != 'error'") == [
         ("seg", "!=", "error")
     ]
-    assert _parse_conjunct_multi("seg <> 'error'") == [
+    assert _conjunct(spark, "seg <> 'error'") == [
         ("seg", "!=", "error")
     ]
-    assert _parse_conjunct_multi("seg NOT IN ('a', 'b')") == [
+    assert _conjunct(spark, "seg NOT IN ('a', 'b')") == [
         ("seg", "notin", ("a", "b"))
     ]
-    assert _parse_conjunct_multi("name LIKE 'ab%'") == [
+    assert _conjunct(spark, "name LIKE 'ab%'") == [
         ("name", ">=", "ab"), ("name", "<", "ac"),
     ]
-    assert _parse_conjunct_multi("name NOT LIKE 'ab%'") == [
+    assert _conjunct(spark, "name NOT LIKE 'ab%'") == [
         ("name", "notlike", "ab")
     ]
     # not plain prefixes: residual-only
-    assert _parse_conjunct_multi("name LIKE '%ab'") == []
-    assert _parse_conjunct_multi("name LIKE 'a_b%'") == []
-    assert _parse_conjunct_multi("name LIKE 'a%b%'") == []
+    assert _conjunct(spark, "name LIKE '%ab'") == []
+    assert _conjunct(spark, "name LIKE 'a_b%'") == []
+    assert _conjunct(spark, "name LIKE 'a%b%'") == []
     # quote unescape inside the prefix
-    assert _parse_conjunct_multi("name LIKE 'it''s%'") == [
+    assert _conjunct(spark, "name LIKE 'it''s%'") == [
         ("name", ">=", "it's"), ("name", "<", "it't"),
     ]
 
@@ -954,17 +961,15 @@ if _HYP:
             max_size=10,
         ),
     )
-    def test_like_prefix_range_is_sound_property(prefix, s):
+    def test_like_prefix_range_is_sound_property(spark, prefix, s):
         """Soundness net for the LIKE-prefix decomposition: every
         string that STARTS WITH the prefix must satisfy every derived
         range predicate (so a file holding it can never be pruned),
         under Python's code-point ordering — the same order the
         zonemaps compare with."""
-        from tms_etl_spark.operators.versioned import _parse_conjunct_multi
-
         if any(ch in prefix for ch in ("%", "_", "\\", "'")):
             return  # not a plain prefix; grammar refuses these
-        preds = _parse_conjunct_multi(f"name LIKE '{prefix}%'")
+        preds = _conjunct(spark, f"name LIKE '{prefix}%'")
         assert preds and preds[0] == ("name", ">=", prefix)
         matching = prefix + s
         for col, op, bound in preds:

@@ -54,6 +54,48 @@ def test_unindexed_late_files_scan_conservatively(spark, tdir):
     assert {r["doc_id"] for r in got.collect()} == {10, 11, 12, 13, 14}
 
 
+def test_unpublished_sidecar_is_not_trusted(spark, tdir):
+    """A sidecar without its _SUCCESS marker — a build still writing,
+    or one torn by a crash — is not trusted: the search scans with the
+    residual predicate and stays exact even though the part files
+    present lack the token's postings."""
+    import glob
+    import os
+
+    write_version(_docs(spark, 0, 50, "straw").repartition(1), tdir, "append")
+    write_version(_docs(spark, 50, 60, "needle").repartition(1), tdir, "append")
+    idx = build_text_index(spark, tdir, "text")
+    os.remove(os.path.join(idx, "_SUCCESS"))
+    for part in glob.glob(os.path.join(idx, "part-*.parquet")):
+        if spark.read.parquet(part).where(F.col("token") == "needle").count():
+            os.remove(part)
+    got = search_token(spark, tdir, "text", "needle")
+    assert {r["doc_id"] for r in got.collect()} == set(range(50, 60))
+
+
+def test_failed_sidecar_write_releases_pins(spark, tdir, monkeypatch):
+    """build/extend pin the postings for the range-partitioned write;
+    a write that throws must still release that checkpoint."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tms_etl_spark.operators.textindex import extend_text_index
+
+    write_version(_docs(spark, 0, 20, "a").repartition(1), tdir, "append")
+    build_text_index(spark, tdir, "text")
+    write_version(_docs(spark, 20, 30, "b").repartition(1), tdir, "append")
+    sc = spark.sparkContext
+    before = len(sc._jsc.getPersistentRDDs())
+
+    def boom(self, *a, **k):
+        raise OSError("sidecar write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
+    for fn in (build_text_index, extend_text_index):
+        with pytest.raises(OSError, match="sidecar write failed"):
+            fn(spark, tdir, "text")
+        assert len(sc._jsc.getPersistentRDDs()) == before
+
+
 def test_no_index_falls_back_to_plain_scan(spark, tdir):
     write_version(_docs(spark, 0, 10, "solo"), tdir, "append")
     assert search_token(spark, tdir, "text", "solo").count() == 10

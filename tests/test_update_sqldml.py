@@ -17,11 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tms_etl_spark.__main__ import main
-from tms_etl_spark.operators.sqldml import (
-    _parse_assignments,
-    _rewrite_aliases,
-    sql_dml,
-)
+from tms_etl_spark.operators.sqldml import _parse_assignments, sql_dml
 from tms_etl_spark.operators.versioned import (
     enable_change_feed,
     read_version,
@@ -196,25 +192,45 @@ def test_update_where_commit_retry_disjoint_append(spark, tmp_path):
 # ---------------------------------------------------------------- sql_dml
 
 
-def test_rewrite_aliases_skips_quoted_literals():
-    assert (
-        _rewrite_aliases("t.v > s.v AND t.s <> 'keep t. here'", "t", "s")
-        == "target.v > source.v AND target.s <> 'keep t. here'"
+def test_rewrite_aliases_skips_quoted_literals(spark, tmp_path):
+    """Alias resplicing (``t.`` → ``target.``, ``s.`` → ``source.``)
+    touches only the columns the parser found qualified: literals
+    holding ``t.`` — with a ``''`` escape too — reach the MERGE
+    conditions verbatim, so the clauses select the right rows."""
+    tdir = str(tmp_path / "t")
+    srcp = str(tmp_path / "src")
+    write_version(
+        _mk(
+            spark, [(1, 10, "keep t. here"), (2, 10, "b")],
+            "k int, v int, s string",
+        ).coalesce(1),
+        tdir,
+        "append",
     )
-    # '' escape inside a literal stays one literal
-    assert (
-        _rewrite_aliases("concat(t.s, 'it''s t.x')", "t", "s")
-        == "concat(target.s, 'it''s t.x')"
+    _mk(
+        spark,
+        [(1, 99, "u"), (2, 99, "u"), (3, 5, "x"), (4, 5, "y")],
+        "k int, v int, s string",
+    ).write.parquet(srcp)
+    sql_dml(
+        spark,
+        f"MERGE INTO '{tdir}' AS t USING '{srcp}' AS s ON t.k = s.k "
+        "WHEN MATCHED AND t.s <> 'keep t. here' AND s.v > t.v "
+        "THEN UPDATE SET * "
+        "WHEN NOT MATCHED AND concat(s.s, 'it''s t.x') = 'xit''s t.x' "
+        "THEN INSERT *",
     )
+    got = {r["k"]: (r["v"], r["s"]) for r in read_version(spark, tdir).collect()}
+    assert got == {1: (10, "keep t. here"), 2: (99, "u"), 3: (5, "x")}
 
 
-def test_parse_assignments_depth_and_quotes():
+def test_parse_assignments_depth_and_quotes(spark):
     got = _parse_assignments(
-        "a = coalesce(b, 'x=y'), c = if(d <= 2, 1, 0)"
+        spark, "a = coalesce(b, 'x=y'), c = if(d <= 2, 1, 0)"
     )
     assert got == {"a": "coalesce(b, 'x=y')", "c": "if(d <= 2, 1, 0)"}
     with pytest.raises(ValueError, match="bad SET"):
-        _parse_assignments("a >= 2")
+        _parse_assignments(spark, "a >= 2")
 
 
 def test_sql_dml_merge_update_delete_roundtrip(spark, tmp_path):
@@ -274,6 +290,7 @@ def test_sql_dml_refusals(spark, tmp_path):
         (f"UPDATE '{tdir}' SET v = 1", "WHERE"),
         (f"DROP TABLE '{tdir}'", "unsupported DML"),
         (f"UPDATE '{str(tmp_path)}' SET v = 1 WHERE k = 1", "versioned"),
+        (f"UPDATE '{tdir}' SET v = = 1 WHERE k = 1", "unparseable"),
     ]:
         with pytest.raises(ValueError, match=msg):
             sql_dml(spark, bad)

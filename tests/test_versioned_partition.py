@@ -306,6 +306,15 @@ def test_optimize_incremental_partitioned(spark, part_table):
     )
 
 
+def _conjunct(spark, c):
+    """The pruning predicates conjunct ``c`` contributes to a
+    conjunction, read by the Catalyst WHERE walker."""
+    from tms_etl_spark.operators.versioned import _where_pruning_groups
+
+    [group] = _where_pruning_groups(spark, f"({c}) AND true")
+    return group
+
+
 def _ts_df(spark, rows):
     """rows: (k, ts_string, val)"""
     df = spark.createDataFrame(rows, "k int, ts_s string, val double")
@@ -859,35 +868,68 @@ def test_dpp_semijoin_prunes_files_and_matches_plain_join(spark, tmp_path):
     assert all("seg=1" in f for f in goth.inputFiles())
 
 
-def test_where_string_conjunct_parser():
-    from tms_etl_spark.operators.versioned import (
-        _parse_conjunct,
-        _split_conjuncts,
-    )
+def test_where_string_conjunct_parser(spark):
+    from tms_etl_spark.operators.versioned import _where_pruning_groups
     import datetime
 
-    assert _split_conjuncts("a = 1 AND b >= 'x AND y' and c < 2.5") == [
-        "a = 1", "b >= 'x AND y'", "c < 2.5",
+    assert _where_pruning_groups(
+        spark, "a = 1 AND b >= 'x AND y' and c < 2.5"
+    ) == [[("a", "=", 1), ("b", ">=", "x AND y"), ("c", "<", 2.5)]]
+    assert _where_pruning_groups(
+        spark, "f(a, b) > 3 AND (x = 1 OR y = 2)"
+    ) == [[]]
+    assert _where_pruning_groups(spark, "androgynous = 'AND'") == [
+        [("androgynous", "=", "AND")],
     ]
-    assert _split_conjuncts("f(a, b) > 3 AND (x = 1 OR y = 2)") == [
-        "f(a, b) > 3", "(x = 1 OR y = 2)",
+    assert _conjunct(spark, "a = 1") == [("a", "=", 1)]
+    assert _conjunct(spark, "a >= -2.5") == [("a", ">=", -2.5)]
+    assert _conjunct(spark, "s = 'it''s'") == [("s", "=", "it's")]
+    assert _conjunct(spark, "d < DATE '2024-03-01'") == [
+        ("d", "<", datetime.date(2024, 3, 1)),
     ]
-    assert _split_conjuncts("androgynous = 'AND'") == [
-        "androgynous = 'AND'",
+    assert _conjunct(spark, "t <= timestamp '2024-03-01 10:30:00'") == [
+        ("t", "<=", datetime.datetime(2024, 3, 1, 10, 30)),
     ]
-    assert _parse_conjunct("a = 1") == ("a", "=", 1)
-    assert _parse_conjunct("a >= -2.5") == ("a", ">=", -2.5)
-    assert _parse_conjunct("s = 'it''s'") == ("s", "=", "it's")
-    assert _parse_conjunct("d < DATE '2024-03-01'") == (
-        "d", "<", datetime.date(2024, 3, 1),
+    # not col-op-literal conjuncts -> residual-only
+    assert _conjunct(spark, "(x = 1 OR y = 2)") == []
+    assert _conjunct(spark, "f(a) > 3") == []
+
+
+def test_where_backslash_literal_prunes_like_the_row_filter(spark, tmp_path):
+    r"""A backslash-escaped string literal — the reference's export
+    path shape ``C:\TMSDATA\YYYY-MM`` — prunes with the value Spark's
+    row filter compares (the parser unescapes ``\\``): the pruned read
+    returns the filter's row, and UPDATE/DELETE WHERE act on it
+    instead of committing no-ops over a wrongly skipped file."""
+    from tms_etl_spark.operators.versioned import (
+        delete_where,
+        read_version,
+        read_version_where,
+        update_where,
     )
-    assert _parse_conjunct("t <= timestamp '2024-03-01 10:30:00'") == (
-        "t", "<=", datetime.datetime(2024, 3, 1, 10, 30),
+
+    tdir = str(tmp_path / "esc")
+    write_version(
+        spark.createDataFrame(
+            [(1, "C:\\TMSDATA\\2024-01", 0), (2, "C:\\TMSDATA\\2024-02", 0)],
+            "k int, p string, v int",
+        ).coalesce(1),
+        tdir,
+        "append",
     )
-    # not simple conjuncts -> residual-only (None)
-    assert _parse_conjunct("(x = 1 OR y = 2)") is None
-    assert _parse_conjunct("f(a) > 3") is None
-    assert _parse_conjunct("a IN (1, 2)") is None
+    where = r"p = 'C:\\TMSDATA\\2024-01'"
+    assert [r["k"] for r in read_version(spark, tdir).where(where).collect()] == [1]
+    assert [r["k"] for r in read_version_where(spark, tdir, where).collect()] == [1]
+    update_where(spark, tdir, where, {"v": "7"})
+    got = {r["k"]: r["v"] for r in read_version(spark, tdir).collect()}
+    assert got == {1: 7, 2: 0}
+    delete_where(spark, tdir, where, key="k")
+    assert [r["k"] for r in read_version(spark, tdir).collect()] == [2]
+    # a malformed string raises the row filter's own ParseException
+    from pyspark.errors import ParseException
+
+    with pytest.raises(ParseException):
+        read_version_where(spark, tdir, "p = = 1")
 
 
 def test_read_version_where_prunes_and_is_exact(spark, tmp_path):
@@ -1022,22 +1064,21 @@ def test_where_between_and_in_parse_and_prune(spark, tmp_path):
     IN yields a value-set predicate — both prune files and both also
     derive generated-partition predicates."""
     from tms_etl_spark.operators.versioned import (
-        _parse_conjunct_multi,
-        _split_conjuncts,
+        _where_pruning_groups,
         read_version_where,
     )
 
-    assert _split_conjuncts("a BETWEEN 1 AND 5 AND b = 'x'") == [
-        "a BETWEEN 1 AND 5", "b = 'x'",
-    ]
-    assert _parse_conjunct_multi("a BETWEEN 1 AND 5") == [
+    assert _where_pruning_groups(
+        spark, "a BETWEEN 1 AND 5 AND b = 'x'"
+    ) == [[("a", ">=", 1), ("a", "<=", 5), ("b", "=", "x")]]
+    assert _conjunct(spark, "a BETWEEN 1 AND 5") == [
         ("a", ">=", 1), ("a", "<=", 5),
     ]
-    assert _parse_conjunct_multi("s IN ('x', 'y,z', 'it''s')") == [
+    assert _conjunct(spark, "s IN ('x', 'y,z', 'it''s')") == [
         ("s", "in", ("x", "y,z", "it's")),
     ]
-    assert _parse_conjunct_multi("k in (1,2,3)") == [("k", "in", (1, 2, 3))]
-    assert _parse_conjunct_multi("k IN (1, other_col)") == []  # not literal
+    assert _conjunct(spark, "k in (1,2,3)") == [("k", "in", (1, 2, 3))]
+    assert _conjunct(spark, "k IN (1, other_col)") == []  # not literal
 
     tdir = str(tmp_path / "betweenin")
     rows = []
@@ -1241,54 +1282,54 @@ def test_where_front_door_never_misprunes_randomized(spark, tmp_path):
         assert got == want, w
 
 
-def test_split_conjuncts_top_level_or_refuses_pruning():
+def test_split_conjuncts_top_level_or_refuses_pruning(spark):
     """SQL binds AND tighter than OR: 'a = 1 AND b = 2 OR c = 3' means
-    (a=1 AND b=2) OR c=3 — no piece may prune alone, so the splitter
-    returns ZERO conjuncts (everything residual). Parenthesized ORs
-    stay inside their conjunct and split normally."""
-    from tms_etl_spark.operators.versioned import _split_conjuncts
+    (a=1 AND b=2) OR c=3 — no piece may prune alone, so a top-level
+    OR gives one group per disjunct (a file is skipped only when
+    every group proves it empty). An OR nested inside a conjunct
+    contributes nothing; the rest of the conjunction still prunes."""
+    from tms_etl_spark.operators.versioned import _where_pruning_groups
 
-    assert _split_conjuncts("a = 1 AND b = 2 OR c = 3") == []
-    assert _split_conjuncts("a BETWEEN 1 AND 5 OR b = 2") == []
-    assert _split_conjuncts("a = 1 OR b = 2") == []
-    assert _split_conjuncts("x = 'a OR b' AND y = 2") == [
-        "x = 'a OR b'", "y = 2",
+    def groups(w):
+        return _where_pruning_groups(spark, w)
+
+    assert groups("a = 1 AND b = 2 OR c = 3") == [
+        [("a", "=", 1), ("b", "=", 2)], [("c", "=", 3)],
+    ]
+    assert groups("a BETWEEN 1 AND 5 OR b = 2") == [
+        [("a", ">=", 1), ("a", "<=", 5)], [("b", "=", 2)],
+    ]
+    assert groups("a = 1 OR b = 2") == [[("a", "=", 1)], [("b", "=", 2)]]
+    assert groups("x = 'a OR b' AND y = 2") == [
+        [("x", "=", "a OR b"), ("y", "=", 2)],
     ]
     # identifiers containing 'or' are not the keyword
-    assert _split_conjuncts("orders = 1 AND majors >= 2") == [
-        "orders = 1", "majors >= 2",
+    assert groups("orders = 1 AND majors >= 2") == [
+        [("orders", "=", 1), ("majors", ">=", 2)],
     ]
-    assert _split_conjuncts("(a = 1 OR b = 2) AND c = 3") == [
-        "(a = 1 OR b = 2)", "c = 3",
-    ]
+    assert groups("(a = 1 OR b = 2) AND c = 3") == [[("c", "=", 3)]]
 
 
-def test_parse_conjunct_multi_paren_tolerant():
-    """Balanced outer parens unwrap before parsing — wrapped
+def test_parse_conjunct_multi_paren_tolerant(spark):
+    """Parentheses disappear in the parse — wrapped
     point/range/BETWEEN/IN conjuncts prune like the bare forms; a
-    wrapped DISJUNCTION stays residual-only (the unwrapped text
-    re-routes through the splitter's OR refusal), and a wrapped
-    nested CONJUNCTION contributes every inner conjunct."""
-    from tms_etl_spark.operators.versioned import (
-        _parse_conjunct_multi,
-        _strip_outer_parens,
-    )
-
-    assert _strip_outer_parens("((a = 1))") == "a = 1"
-    # first paren closes mid-string: NOT a wrapper
-    assert _strip_outer_parens("(a = 1) OR (b = 2)") == "(a = 1) OR (b = 2)"
-    assert _parse_conjunct_multi("(a = 1)") == [("a", "=", 1)]
-    assert _parse_conjunct_multi("( a >= 2.5 )") == [("a", ">=", 2.5)]
-    assert _parse_conjunct_multi("(a BETWEEN 1 AND 5)") == [
+    wrapped DISJUNCTION stays residual-only inside a conjunction, and
+    a wrapped nested CONJUNCTION contributes every inner conjunct."""
+    assert _conjunct(spark, "((a = 1))") == [("a", "=", 1)]
+    # first paren closes mid-string: a disjunction, not a wrapper
+    assert _conjunct(spark, "(a = 1) OR (b = 2)") == []
+    assert _conjunct(spark, "(a = 1)") == [("a", "=", 1)]
+    assert _conjunct(spark, "( a >= 2.5 )") == [("a", ">=", 2.5)]
+    assert _conjunct(spark, "(a BETWEEN 1 AND 5)") == [
         ("a", ">=", 1), ("a", "<=", 5),
     ]
-    assert _parse_conjunct_multi("(a IN (1, 2))") == [("a", "in", (1, 2))]
-    assert _parse_conjunct_multi("(a = 1 AND b = 2)") == [
+    assert _conjunct(spark, "(a IN (1, 2))") == [("a", "in", (1, 2))]
+    assert _conjunct(spark, "(a = 1 AND b = 2)") == [
         ("a", "=", 1), ("b", "=", 2),
     ]
     # the misprune hazards: no bound may leak out of a disjunction
-    assert _parse_conjunct_multi("(a BETWEEN 1 AND 5 OR b = 2)") == []
-    assert _parse_conjunct_multi("(a = 1 OR b = 2)") == []
+    assert _conjunct(spark, "(a BETWEEN 1 AND 5 OR b = 2)") == []
+    assert _conjunct(spark, "(a = 1 OR b = 2)") == []
 
 
 def test_where_top_level_or_is_exact_and_unpruned(spark, tmp_path):
@@ -1550,14 +1591,14 @@ def test_where_or_disjunction_pruning(spark, tmp_path):
         read_version_where,
     )
 
-    assert _where_pruning_groups("k < 50 OR k >= 250") == [
+    assert _where_pruning_groups(spark, "k < 50 OR k >= 250") == [
         [("k", "<", 50)], [("k", ">=", 250)],
     ]
-    assert _where_pruning_groups("a = 1 AND b = 2 OR c = 3") == [
+    assert _where_pruning_groups(spark, "a = 1 AND b = 2 OR c = 3") == [
         [("a", "=", 1), ("b", "=", 2)], [("c", "=", 3)],
     ]
     # unparseable disjunct -> its empty group disables pruning
-    assert _where_pruning_groups("k < 50 OR abs(k - 299) = 0") == [
+    assert _where_pruning_groups(spark, "k < 50 OR abs(k - 299) = 0") == [
         [("k", "<", 50)], [],
     ]
 

@@ -74,7 +74,8 @@ def _parser() -> argparse.ArgumentParser:
     sp.add_argument(
         "--dml", action="store_true",
         help="the statement is DML (MERGE INTO / UPDATE / DELETE "
-        "FROM) over versioned-table DIRECTORIES — lowered onto "
+        "FROM) over versioned-table DIRECTORIES — parsed by Spark's "
+        "Catalyst parser and lowered onto "
         "merge_version/update_where/delete_where (operators/sqldml.py)",
     )
     sp.add_argument(
@@ -529,33 +530,6 @@ def _parser() -> argparse.ArgumentParser:
     return p
 
 
-def _split_top_level(s: str) -> list[str]:
-    """Split COL=EXPR[,COL=EXPR...] on TOP-LEVEL commas only — a
-    comma inside parentheses or a string literal belongs to the
-    expression (``price=round(price,2)`` is one entry)."""
-    out, buf, depth, in_str = [], [], 0, False
-    for ch in s:
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                in_str = False
-            continue
-        if ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth = max(0, depth - 1)
-        elif ch == "," and depth == 0:
-            out.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    if buf:
-        out.append("".join(buf))
-    return out
-
-
 def main(argv: list[str] | None = None) -> int:
     args = _parser().parse_args(argv)
 
@@ -853,11 +827,10 @@ def main(argv: list[str] | None = None) -> int:
         if args.table_cmd == "update":
             from tms_etl_spark.operators.sqldml import _parse_assignments
 
-            # ONE assignment grammar for every DML front door (r13
-            # review): identifier validation, <=/>=/!= awareness, and
-            # ''-escape handling live in sqldml._parse_assignments
+            # ONE assignment grammar for every DML front door: Catalyst
+            # splits the SET list (sqldml._parse_assignments)
             try:
-                assign = _parse_assignments(args.set_)
+                assign = _parse_assignments(spark, args.set_)
             except ValueError as e:
                 print(f"bad --set: {e}", file=sys.stderr)
                 return 2
@@ -892,7 +865,9 @@ def main(argv: list[str] | None = None) -> int:
                 )
 
                 try:
-                    sync_set = _parse_assignments(args.sync_update_set)
+                    sync_set = _parse_assignments(
+                        spark, args.sync_update_set
+                    )
                 except ValueError as e:
                     print(
                         f"bad --sync-update-set: {e} (want COL=EXPR[,...])",

@@ -449,10 +449,12 @@ def graph_pagerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the operator's edge/degree pins (r14, guide §5) — callers replay
     # a 20-row local relation with identical rows and schema instead
     # of a plan whose checkpoints nothing ever unpersists
-    rows = out.collect()
-    schema = out.schema
-    for p in pins:
-        unpersist_checkpoint(p)
+    try:
+        rows = out.collect()
+        schema = out.schema
+    finally:
+        for p in pins:
+            unpersist_checkpoint(p)
     return spark.createDataFrame(rows, schema)
 
 

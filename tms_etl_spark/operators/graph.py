@@ -172,6 +172,10 @@ def triangle_count(
 
     Returns a single row: (n_nodes, n_edges, max_degree,
     n_triangles), all exact longs.
+
+    Eager: the Spark jobs run in this call, which releases its
+    checkpoints and returns a one-row local DataFrame — building the
+    frame only to inspect or explain it costs the full count.
     """
     # e feeds FOUR plan branches (degree x2 via nodes, the orientation
     # join, the edge count) and oriented feeds three more — and the
@@ -278,6 +282,10 @@ def pagerank(
     edge-sized blocks for the life of the session.
 
     Returns (node, rank) after ``iters`` rounds.
+
+    Partly eager: this call runs the jobs that materialize the edge
+    and degree checkpoints and count edges and nodes; only the
+    ``iters`` rank rounds wait for the caller's action.
     """
     spark = edges.sparkSession
     both = edges.select(

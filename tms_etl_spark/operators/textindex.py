@@ -12,8 +12,10 @@ never driver-side — and the probe reads it filtered by token (the
 sidecar is range-partitioned and sorted by token, so parquet
 row-group stats prune the probe scan too). A search then scans only
 the files whose posting admits the token; the residual predicate
-keeps results exact, and files committed after the index build are
-scanned conservatively.
+keeps results exact. A version's sidecar is complete for it by
+construction (the build scans every live file) and is trusted only
+once published — its ``_SUCCESS`` marker, written by Spark's file
+committer at job commit, exists; otherwise a search is a plain scan.
 
 Tokenization is the shared contract between build and probe (and any
 SQL oracle): lowercase, split on runs of non-alphanumerics. It lives
@@ -111,13 +113,15 @@ def build_text_index(
         .localCheckpoint()
     )
     out = _index_dir(table_dir, col, v)
-    (
-        postings.repartitionByRange(n_shards, "token")
-        .sortWithinPartitions("token")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    unpersist_checkpoint(postings)
+    try:
+        (
+            postings.repartitionByRange(n_shards, "token")
+            .sortWithinPartitions("token")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+    finally:
+        unpersist_checkpoint(postings)
     return out
 
 
@@ -201,13 +205,15 @@ def extend_text_index(
     # carried semi-join + fresh postings scan run once, not twice
     out_df = out_df.localCheckpoint()
     out = _index_dir(table_dir, col, v)
-    (
-        out_df.repartitionByRange(n_shards, "token")
-        .sortWithinPartitions("token")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    unpersist_checkpoint(out_df)
+    try:
+        (
+            out_df.repartitionByRange(n_shards, "token")
+            .sortWithinPartitions("token")
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+    finally:
+        unpersist_checkpoint(out_df)
     return out
 
 
@@ -219,13 +225,16 @@ def search_token(
     version: int | None = None,
 ) -> DataFrame:
     """Exact containment search `token ∈ tokens_of(col)` using the
-    inverted sidecar for file skipping. Files the index proves
-    token-free are never opened; index-covered hits plus any files
-    committed after the build are scanned with the residual
-    predicate. Falls back to a plain filtered scan when no index
-    exists, and — correctness first — when the version carries
-    deletion vectors (the tombstone-subtracted scan path owns that
-    case, same policy as `read_version_point`)."""
+    inverted sidecar for file skipping. The version's sidecar is
+    complete for it by construction, so files the index proves
+    token-free are never opened and the hits are scanned with the
+    residual predicate. The sidecar is trusted only once published
+    (its ``_SUCCESS`` marker exists): a build still writing, or one
+    torn by a crash, would otherwise silently skip live files. Falls
+    back to a plain filtered scan when no published index exists,
+    and — correctness first — when the version carries deletion
+    vectors (the tombstone-subtracted scan path owns that case, same
+    policy as `read_version_point`)."""
     import re as _re
 
     tok = token.lower()
@@ -235,7 +244,7 @@ def search_token(
     residual = F.array_contains(tokens_of(col), tok)
     pred_scan = _scan_with_deletes(spark, table_dir, man)
     idx = _index_dir(table_dir, col, v)
-    if not path_exists(spark, idx) or man.get("deletes"):
+    if not path_exists(spark, f"{idx}/_SUCCESS") or man.get("deletes"):
         return pred_scan.where(residual)
     if not _re.fullmatch(r"[a-z0-9]+", tok):
         # the tokenizer only ever emits [a-z0-9]+ runs or "" (split
@@ -259,8 +268,8 @@ def search_token(
     # sidecar read that derived it (a second scan + driver collect of
     # the distinct file list, r13 shape) is gone — one token-pruned
     # probe remains (r14, guide §1.2/§5 "no driver work you can
-    # avoid"). A version with no sidecar still takes the fallback
-    # above.
+    # avoid"). A version with no published sidecar still takes the
+    # fallback above.
     live = _live_rel_files(spark, table_dir, man)
     all_files = [
         _canon(f"{table_dir}/{rel}")

@@ -2106,7 +2106,7 @@ def delete_where(
     from pyspark.sql import functions as F
 
     if commit_retries:
-        groups = _where_pruning_groups(where)
+        groups = _where_pruning_groups(spark, where)
 
         def _attempt():
             try:
@@ -2281,7 +2281,7 @@ def update_where(
     assign = dict(set)
     del set  # unshadow the builtin (the param name is the SQL word)
     if commit_retries:
-        groups0 = _where_pruning_groups(where)
+        groups0 = _where_pruning_groups(spark, where)
 
         def _attempt():
             try:
@@ -2337,7 +2337,7 @@ def update_where(
 
     # 1. zonemap candidates via the predicate's pruning groups (a
     # parse-empty group set admits everything — conservative)
-    groups = _where_pruning_groups(where)
+    groups = _where_pruning_groups(spark, where)
     stats = man.get("stats", {})
     live = _live_rel_files(spark, table_dir, man)
     candidates = []
@@ -2917,372 +2917,166 @@ def read_version_pruned_multi(
     return _pruned_scan(spark, table_dir, predicates, version).where(pred)
 
 
-_CONJUNCT_RE = re.compile(
-    r"^\s*([A-Za-z_]\w*)\s*(>=|<=|<>|!=|=|<|>)\s*(.+?)\s*$"
-)
-_LIT_NUM_RE = re.compile(r"^-?\d+(\.\d+)?$")
-_LIT_STR_RE = re.compile(r"^'((?:[^']|'')*)'$")
-_LIT_TD_RE = re.compile(
-    r"^(?i:(date|timestamp))\s*'([^']+)'$"
-)
+def _catalyst_tree(nodes: list[dict]) -> dict:
+    """Nest Catalyst's pre-order ``toJSON`` node list: each node gets
+    its children, in order, under ``"kids"``."""
+    it = iter(nodes)
+
+    def build() -> dict:
+        n = next(it)
+        n["kids"] = [build() for _ in range(n["num-children"])]
+        return n
+
+    return build()
 
 
-def _split_conjuncts(where: str) -> list[str]:
-    """Top-level AND-separated conjuncts of a WHERE string — quote-
-    and paren-aware, so an AND inside a string literal or a nested
-    expression never splits; the AND that belongs to a pending
-    BETWEEN binds to the BETWEEN, not the conjunction. Anything this
-    can't see as a plain conjunct stays intact (and simply won't
-    parse → residual-only).
-
-    A top-level OR makes the WHOLE string a disjunction — SQL binds
-    AND tighter than OR, so ``a = 1 AND b = 2 OR c = 3`` means
-    ``(a = 1 AND b = 2) OR c = 3`` and NONE of its pieces may prune
-    alone (a file failing ``a = 1`` can still hold ``c = 3`` rows).
-    Returns [] in that case: zero pruning conjuncts, everything
-    residual. ORs nested in parentheses stay inside their conjunct."""
-
-    def _kw_at(i: int, kw: str) -> bool:
-        n = len(where)
-        return (
-            where[i : i + len(kw)].upper() == kw
-            and (i == 0 or not (where[i - 1].isalnum() or where[i - 1] == "_"))
-            and (
-                i + len(kw) >= n
-                or not (
-                    where[i + len(kw)].isalnum()
-                    or where[i + len(kw)] == "_"
-                )
-            )
-        )
-
-    out, buf, depth, in_str = [], [], 0, False
-    pending_between = False
-    i, n = 0, len(where)
-    while i < n:
-        ch = where[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and where[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch in "([":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            buf.append(ch)
-        elif depth == 0 and ch in "oO" and _kw_at(i, "OR"):
-            return []  # top-level disjunction: nothing may prune
-        elif depth == 0 and ch in "bB" and _kw_at(i, "BETWEEN"):
-            pending_between = True
-            buf.append(where[i : i + 7])
-            i += 6
-        elif depth == 0 and ch in "aA" and _kw_at(i, "AND"):
-            if pending_between:
-                pending_between = False
-                buf.append(where[i : i + 3])
-            else:
-                out.append("".join(buf))
-                buf = []
-            i += 2
-        else:
-            buf.append(ch)
-        i += 1
-    out.append("".join(buf))
-    return [c.strip() for c in out if c.strip()]
+def _node_kind(n: dict) -> str:
+    return n["class"].rsplit(".", 1)[-1]
 
 
-def _split_disjuncts(where: str) -> list[str]:
-    """Top-level OR-separated pieces of a WHERE string — quote- and
-    paren-aware like `_split_conjuncts`. AND binds tighter than OR, so
-    each piece is a self-contained conjunction: ``a = 1 AND b = 2 OR
-    c = 3`` gives [``a = 1 AND b = 2``, ``c = 3``]. Returns [where]
-    when there is no top-level OR."""
-
-    def _kw_at(i: int) -> bool:
-        n = len(where)
-        return (
-            where[i : i + 2].upper() == "OR"
-            and (i == 0 or not (where[i - 1].isalnum() or where[i - 1] == "_"))
-            and (
-                i + 2 >= n
-                or not (where[i + 2].isalnum() or where[i + 2] == "_")
-            )
-        )
-
-    out, buf, depth, in_str = [], [], 0, False
-    i, n = 0, len(where)
-    while i < n:
-        ch = where[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and where[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch in "([":
-            depth += 1
-            buf.append(ch)
-        elif ch in ")]":
-            depth -= 1
-            buf.append(ch)
-        elif depth == 0 and ch in "oO" and _kw_at(i):
-            out.append("".join(buf))
-            buf = []
-            i += 1
-        else:
-            buf.append(ch)
-        i += 1
-    out.append("".join(buf))
-    return [d.strip() for d in out if d.strip()]
-
-
-def _strip_target_qualifier(cond: str) -> str:
-    """Drop ``target.`` column qualifiers so the pruning grammar (bare
-    identifiers only) can parse a NOT-MATCHED-BY-SOURCE condition —
-    but ONLY outside string literals: a literal like
-    ``'ping target.ops'`` must survive verbatim or the derived groups
-    would prune files whose rows actually PASS the real condition
-    (silently keeping doomed rows). Segments alternate outside/inside
-    on a single-quote split, so even indexes are safe to rewrite."""
-    parts = cond.split("'")
-    return "'".join(
-        re.sub(r"\btarget\.", "", p) if i % 2 == 0 else p
-        for i, p in enumerate(parts)
-    )
-
-
-def _where_pruning_groups(where: str) -> list[list[tuple]]:
-    """The DNF pruning structure of a WHERE string: a list of
-    disjunct groups, each a conjunctive (col, op, value) list. The
-    sound skipping rule for ``g1 OR g2 OR …`` is: a file is prunable
-    iff EVERY group independently proves it empty (any predicate of
-    the group suffices per group — conjunction rule); a group that
-    parses to nothing can admit anything, and its empty list makes
-    the any() false, disabling pruning automatically. A plain
-    conjunction is the single-group case — same rule, unchanged
-    behavior. This is the disjunction handling a lakehouse format's
-    data-skipping layer applies (Delta/Iceberg evaluate OR trees over
-    file stats the same way)."""
-    return [
-        [
-            p
-            for c in _split_conjuncts(d)
-            for p in _parse_conjunct_multi(c)
-        ]
-        for d in _split_disjuncts(where)
-    ]
-
-
-_BETWEEN_RE = re.compile(
-    r"^\s*([A-Za-z_]\w*)\s+(?i:between)\s+(.+?)\s+(?i:and)\s+(.+?)\s*$"
-)
-_IN_RE = re.compile(r"^\s*([A-Za-z_]\w*)\s+(?i:in)\s*\((.+)\)\s*$")
-_NOTIN_RE = re.compile(
-    r"^\s*([A-Za-z_]\w*)\s+(?i:not)\s+(?i:in)\s*\((.+)\)\s*$"
-)
-_NULL_RE = re.compile(
-    r"^\s*([A-Za-z_]\w*)\s+(?i:is)\s+((?i:not)\s+)?(?i:null)\s*$"
-)
-_LIKE_RE = re.compile(
-    r"^\s*([A-Za-z_]\w*)\s+((?i:not)\s+)?(?i:like)\s+'((?:[^']|'')*)'\s*$"
-)
-
-
-def _like_prefix(pattern: str) -> str | None:
-    """The literal prefix of a ``LIKE 'abc%'`` pattern — exactly one
-    trailing ``%``, no other wildcards or escapes (those shapes stay
-    residual-only). None when the pattern isn't a plain prefix."""
-    if not pattern.endswith("%"):
+def _name_parts(n: dict) -> list[str] | None:
+    """The name parts of an ``UnresolvedAttribute`` node, else None."""
+    if _node_kind(n) != "UnresolvedAttribute":
         return None
-    prefix = pattern[:-1]
-    if not prefix or any(ch in prefix for ch in ("%", "_", "\\")):
-        return None
-    return prefix.replace("''", "'")
+    return n["nameParts"][1:-1].split(", ")
 
 
-def _parse_literal(lit: str):
-    """The Python value of a SQL literal, or None when it isn't one
-    this parser knows. Literals: numbers, 'strings' ('' unescapes),
-    DATE '...', TIMESTAMP '...' — the types zonemaps and derived
-    partition predicates can act on."""
+def _flatten(n: dict, kind: str) -> list[dict]:
+    """The operands of a chain of ``kind`` (And/Or) nodes."""
+    if _node_kind(n) == kind:
+        return [m for k in n["kids"] for m in _flatten(k, kind)]
+    return [n]
+
+
+_CMP_OPS = {
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+
+
+def _literal_value(n: dict):
+    """The Python value of a ``Literal`` node in the types zonemap
+    stats and derived partition predicates act on, else None. Strings
+    arrive unescaped by the parser; timestamps are rendered in the
+    session time zone, which the package pins to UTC."""
     import datetime as _dt
 
-    lit = lit.strip()
-    if _LIT_NUM_RE.match(lit):
-        return float(lit) if "." in lit else int(lit)
-    m2 = _LIT_TD_RE.match(lit)
-    if m2:
-        kind, s = m2.group(1).lower(), m2.group(2)
-        try:
-            if kind == "date":
-                return _dt.date.fromisoformat(s)
-            return _dt.datetime.fromisoformat(s)
-        except ValueError:
-            return None
-    m3 = _LIT_STR_RE.match(lit)
-    if m3:
-        return m3.group(1).replace("''", "'")
-    return None
-
-
-def _split_in_items(body: str) -> list[str]:
-    """Comma-split an IN list body, quote-aware (commas inside string
-    literals don't split)."""
-    items, buf, in_str = [], [], False
-    i, n = 0, len(body)
-    while i < n:
-        ch = body[i]
-        if in_str:
-            buf.append(ch)
-            if ch == "'":
-                if i + 1 < n and body[i + 1] == "'":
-                    buf.append("'")
-                    i += 1
-                else:
-                    in_str = False
-        elif ch == "'":
-            in_str = True
-            buf.append(ch)
-        elif ch == ",":
-            items.append("".join(buf))
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
-    items.append("".join(buf))
-    return items
-
-
-def _strip_outer_parens(conjunct: str) -> str:
-    """Peel balanced OUTER parentheses off a conjunct — quote-aware,
-    and only when the opening paren really wraps the whole string
-    (``(a = 1) AND (b = 2)`` post-split gives ``(a = 1)``, which the
-    grammar should see as ``a = 1``; ``(a = 1) OR (b = 2)`` as one
-    conjunct is NOT wrapped — its first paren closes mid-string — and
-    stays intact/residual)."""
-    s = conjunct.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth, in_str = 0, False
-        wraps = True
-        for i, ch in enumerate(s):
-            if in_str:
-                if ch == "'":
-                    in_str = False
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    wraps = False
-                    break
-        if not wraps or depth != 0:
-            break
-        s = s[1:-1].strip()
-    return s
-
-
-def _parse_conjunct(conjunct: str):
-    """(col, op, value) for a simple ``col op literal`` conjunct, else
-    None (see `_parse_literal` for the literal forms)."""
-    m = _CONJUNCT_RE.match(conjunct)
-    if not m:
+    if _node_kind(n) != "Literal" or n["value"] is None:
         return None
-    col, op, lit = m.groups()
-    if op == "<>":
-        op = "!="  # one canonical anti-equality op downstream
-    v = _parse_literal(lit)
-    return None if v is None else (col, op, v)
+    t, v = n["dataType"], n["value"]
+    try:
+        if t in ("byte", "short", "integer", "long") or t.endswith(",0)"):
+            return int(v)  # integral decimals too: past 2^53 a float errs
+        if t == "double" or t.startswith("decimal"):
+            return float(v)
+        if t == "date":
+            return _dt.date.fromisoformat(v)
+        if t == "timestamp":
+            return _dt.datetime.fromisoformat(v)
+    except ValueError:
+        return None
+    return v if t == "string" else None
 
 
-def _parse_conjunct_multi(conjunct: str) -> list[tuple]:
-    """All pruning predicates a conjunct yields: a simple comparison
-    gives one triple; ``col BETWEEN a AND b`` gives the two bounds;
-    ``col IN (v, ...)`` gives one ('in', tuple-of-values) predicate
-    (prunable iff NO value falls inside a file's [min, max] — the
-    same admission rule as the DPP key check). Unknown shapes give
-    [] — residual-only.
+def _conjunct_preds(n: dict, qualifier: str | None, like_ok: bool) -> list:
+    """The pruning predicates of one parsed conjunct: ``col op lit``
+    (``NOT (col = v)`` is ``!=``), both literal bounds of
+    BETWEEN, ``in``/``notin`` for an all-literal [NOT] IN list
+    (prunable iff no value falls inside a file's [min, max]; NOT IN
+    prunes value-pure files only), ``isnull``/``notnull``, and the
+    prefix range of [NOT] LIKE 'abc%'. Any other shape gives [] —
+    residual-only."""
+    neg = _node_kind(n) == "Not"
+    if neg:
+        n = n["kids"][0]
+    kind, kids = _node_kind(n), n["kids"]
 
-    A parenthesized conjunct — the single most common SQL style,
-    ``(a >= x) AND (b IN (…))`` — is unwrapped and re-routed through
-    the splitter, so it prunes exactly like the bare form (and a
-    paren-wrapped nested conjunction contributes every inner
-    conjunct); the splitter's top-level-OR refusal applies to the
-    unwrapped text too, so ``(a BETWEEN 1 AND 5 OR b = 2)`` stays
-    residual-only instead of leaking its lower bound."""
-    stripped = _strip_outer_parens(conjunct)
-    if stripped != conjunct.strip():
-        return [
-            p
-            for c in _split_conjuncts(stripped)
-            for p in _parse_conjunct_multi(c)
-        ]
-    p = _parse_conjunct(conjunct)
-    if p is not None:
-        return [p]
-    m = _BETWEEN_RE.match(conjunct)
-    if m:
-        col, lo, hi = m.groups()
-        vlo, vhi = _parse_literal(lo), _parse_literal(hi)
-        out = []
-        if vlo is not None:
-            out.append((col, ">=", vlo))
-        if vhi is not None:
-            out.append((col, "<=", vhi))
-        return out
-    m = _NOTIN_RE.match(conjunct)
-    if m:
-        # NOT IN prunes only value-PURE files (min == max ∈ set) —
-        # the partition-dir skip for `seg NOT IN ('a', 'b')`
-        col, body = m.groups()
-        vals = [_parse_literal(s) for s in _split_in_items(body)]
-        if vals and all(v is not None for v in vals):
-            return [(col, "notin", tuple(vals))]
-        return []
-    m = _IN_RE.match(conjunct)
-    if m:
-        col, body = m.groups()
-        vals = [_parse_literal(s) for s in _split_in_items(body)]
-        if vals and all(v is not None for v in vals):
-            return [(col, "in", tuple(vals))]
-    m = _NULL_RE.match(conjunct)
-    if m:
-        return [(m.group(1), "notnull" if m.group(2) else "isnull", None)]
-    m = _LIKE_RE.match(conjunct)
-    if m:
-        col, neg, pattern = m.groups()
-        prefix = _like_prefix(pattern)
-        if prefix is None:
+    def col(k: dict) -> str | None:
+        parts = _name_parts(k) or []
+        if len(parts) == 2 and parts[0].lower() == qualifier:
+            parts = parts[1:]
+        return parts[0] if len(parts) == 1 else None
+
+    if kind in _CMP_OPS:
+        op = _CMP_OPS[kind]
+        c, v = col(kids[0]), _literal_value(kids[1])
+        if c is None or v is None or (neg and op != "="):
+            return []
+        return [(c, "!=" if neg else op, v)]
+    if kind == "In":
+        c, vals = col(kids[0]), [_literal_value(k) for k in kids[1:]]
+        if c is None or None in vals:
+            return []
+        return [(c, "notin" if neg else "in", tuple(vals))]
+    if kind == "Like" and like_ok:
+        # only a plain prefix: one trailing %, no other wildcard or
+        # escape (the pattern arrives unescaped by the parser)
+        c, pattern = col(kids[0]), _literal_value(kids[1])
+        ok = isinstance(pattern, str) and pattern.endswith("%")
+        prefix = pattern[:-1] if ok else ""
+        if c is None or not prefix or any(ch in prefix for ch in "%_\\"):
             return []
         if neg:
             # NOT LIKE 'abc%': prunable only for files PURE on one
             # matching value
-            return [(col, "notlike", prefix)]
+            return [(c, "notlike", prefix)]
         # LIKE 'abc%' ⇔ prefix ≤ col < prefix⁺ under code-point order
         # (Python's string compare AND Spark's UTF-8 binary compare);
         # the upper bound increments the last code point — skipped
         # when the increment would land in the surrogate gap or past
         # the last scalar, where no valid bound string exists
-        out = [(col, ">=", prefix)]
+        out = [(c, ">=", prefix)]
         nxt = ord(prefix[-1]) + 1
         if nxt <= 0x10FFFF and not (0xD800 <= nxt <= 0xDFFF):
-            out.append((col, "<", prefix[:-1] + chr(nxt)))
+            out.append((c, "<", prefix[:-1] + chr(nxt)))
         return out
+    if neg:
+        return []
+    if kind in ("IsNull", "IsNotNull"):
+        c = col(kids[0])
+        op = "isnull" if kind == "IsNull" else "notnull"
+        return [] if c is None else [(c, op, None)]
+    if kind == "UnresolvedFunction" and n["nameParts"] == "[between]" and (
+        len(kids) == 3
+    ):
+        c, lo, hi = col(kids[0]), *map(_literal_value, kids[1:])
+        bounds = ((">=", lo), ("<=", hi))
+        return [(c, op, v) for op, v in bounds if None not in (c, v)]
     return []
+
+
+def _where_pruning_groups(
+    spark: SparkSession, where: str, qualifier: str | None = None
+) -> list[list[tuple]]:
+    """The DNF pruning structure of a WHERE string — a list of
+    disjunct groups, each a conjunctive (col, op, value) list — read
+    off the parse ``F.expr`` runs on the same string (its tree comes
+    back as one ``toJSON`` string), so literals, escapes, precedence
+    and BETWEEN…AND binding are the row filter's, and a malformed
+    string raises the same ParseException. The top-level OR chain
+    gives the groups, each group's AND chain the conjuncts; an OR
+    nested inside a conjunct contributes nothing.
+    A file is prunable iff EVERY group proves it empty (any predicate
+    of the group suffices); a group that yields nothing admits
+    anything, which disables pruning. This is the disjunction rule a
+    lakehouse format's data-skipping layer applies (Delta/Iceberg
+    evaluate OR trees over file stats the same way).
+
+    ``qualifier``: a column qualified by it (``target.c`` in a MERGE
+    condition) is read as the bare column. A LIKE stays residual-only
+    when the string has an ESCAPE clause: the JSON tree omits the
+    escape character, and a non-default one changes the prefix."""
+    parser = spark._jsparkSession.sessionState().sqlParser()
+    root = _catalyst_tree(json.loads(parser.parseExpression(where).toJSON()))
+    like_ok = re.search(r"\bescape\b", where, re.IGNORECASE) is None
+    q = qualifier.lower() if qualifier else None
+    return [
+        [p for c in _flatten(d, "And") for p in _conjunct_preds(c, q, like_ok)]
+        for d in _flatten(root, "Or")
+    ]
 
 
 def read_version_where(
@@ -3299,9 +3093,9 @@ def read_version_where(
     arbitrary Spark SQL boolean expression; its top-level
     ``col op literal`` conjuncts drive manifest zonemap pruning (plus
     derived partition predicates for generated columns) while the
-    ENTIRE string applies as the row filter. Conjuncts the simple
-    parser can't see (functions, OR trees, IN lists) cost nothing in
-    correctness — they just don't prune. This is what a lakehouse
+    ENTIRE string applies as the row filter (both read Catalyst's
+    parse of it). Conjuncts pruning can't use (functions, nested ORs)
+    cost nothing in correctness — they just don't prune. This is what a lakehouse
     format's data-skipping layer does with a query's predicates
     before handing Spark the surviving files; `register_versioned`
     views can't do it (a view is a fixed file list), so the CLI's
@@ -3366,7 +3160,7 @@ def read_version_where(
     if version > 0 and path_exists(spark, _manifest_path(table_dir, version)):
         man_pin = _read_json(spark, _manifest_path(table_dir, version))
 
-    groups = _where_pruning_groups(where)
+    groups = _where_pruning_groups(spark, where)
     preds = groups[0] if len(groups) == 1 else []
     allowed: set[str] | None = None
 
@@ -5241,7 +5035,7 @@ def merge_version(
     # table; a condition lets the zonemap prune the scope back down
     full_sync = nmbs and nmbs_cond is None
     nmbs_groups = (
-        _where_pruning_groups(_strip_target_qualifier(nmbs_cond))
+        _where_pruning_groups(spark, nmbs_cond, qualifier="target")
         if nmbs_cond is not None
         else None
     )

@@ -1035,6 +1035,121 @@ def test_merge_when_not_matched_condition(spark, tmp_path):
         )
 
 
+def test_conditional_merge_row_fates(spark, tmp_path):
+    """Explicit expected rows for every fate the conditional MERGE's
+    one-join projection decides: per-pair guards on duplicate-keyed
+    targets, a NULL guard, the insert condition true/false/NULL, the
+    SQL insert-only form, a schema-evolving source and a renamed
+    (column-mapped) target."""
+
+    def table(name, rows, ddl="k int, v double"):
+        tdir = str(tmp_path / name)
+        for r in rows:  # one append per row: duplicate keys allowed
+            write_version(_mk(spark, [r], ddl), tdir, "append")
+        return tdir
+
+    def rows(tdir):
+        return sorted(
+            tuple(r) for r in read_version(spark, tdir).collect()
+        )
+
+    # duplicate target keys: the guard sees each (target, source) pair
+    # and every pair emits one row; a false guard keeps the target row
+    dup = table("dup", [(1, 10.0), (1, 11.0), (2, 20.0)])
+    merge_version(
+        spark, dup,
+        _mk(spark, [(1, 99.0), (2, 0.0), (3, 5.0)], "k int, v double"),
+        key="k",
+        when_matched_condition="source.v > 0 AND target.v < 11",
+    )
+    assert rows(dup) == [(1, 11.0), (1, 99.0), (2, 20.0), (3, 5.0)]
+    # the insert condition alone makes the merge conditional too: each
+    # matched pair updates (the unconditional merge collapses them)
+    merge_version(
+        spark, dup,
+        _mk(spark, [(1, 50.0), (4, 1.0)], "k int, v double"),
+        key="k",
+        when_not_matched_condition="source.v >= 50",
+    )
+    assert rows(dup) == [(1, 50.0), (1, 50.0), (2, 20.0), (3, 5.0)]
+
+    # a NULL guard keeps the target; the insert condition admits only
+    # TRUE rows (false and NULL are not inserted)
+    fates = table("fates", [(1, 10.0), (2, 20.0)])
+    merge_version(
+        spark, fates,
+        _mk(
+            spark,
+            [(1, None), (2, 30.0), (7, 80.0), (8, 5.0), (9, None)],
+            "k int, v double",
+        ),
+        key="k",
+        when_matched_condition="source.v > 0",
+        when_not_matched_condition="source.v >= 50",
+    )
+    assert rows(fates) == [(1, 10.0), (2, 30.0), (7, 80.0)]
+
+    # the insert condition alone: matched rows update unconditionally
+    merge_version(
+        spark, fates,
+        _mk(spark, [(1, 1.0), (20, None), (21, 60.0)], "k int, v double"),
+        key="k",
+        when_not_matched_condition="v >= 50",  # bare column resolves
+    )
+    assert rows(fates) == [(1, 1.0), (2, 30.0), (7, 80.0), (21, 60.0)]
+
+    # the SQL `WHEN NOT MATCHED THEN INSERT *`-only form
+    ins_only = table("ins", [(1, 10.0)])
+    merge_version(
+        spark, ins_only,
+        _mk(spark, [(1, 99.0), (2, 20.0)], "k int, v double"),
+        key="k",
+        when_matched_condition="false",
+    )
+    assert rows(ins_only) == [(1, 10.0), (2, 20.0)]
+
+    # merge_schema: kept targets null-fill the added column; a
+    # narrower source type lands as the recorded (wider) type
+    evo = table("evo", [(1, 10.0, 100), (2, 20.0, 200)], "k int, v double, n long")
+    merge_version(
+        spark, evo,
+        _mk(
+            spark,
+            [(1, 0.0, 1, "a"), (2, 99.0, 2, "b"), (3, 70.0, 3, "c"),
+             (4, 1.0, 4, "d")],
+            "k int, v double, n int, tag string",
+        ),
+        key="k",
+        when_matched_condition="source.v > 0",
+        when_not_matched_condition="source.v >= 50",
+        merge_schema=True,
+    )
+    evolved = read_version(spark, evo)
+    assert dict(evolved.dtypes)["n"] == "bigint"
+    assert sorted(tuple(r) for r in evolved.collect()) == [
+        (1, 10.0, 100, None),
+        (2, 99.0, 2, "b"),
+        (3, 70.0, 3, "c"),
+    ]
+
+    # renamed key column: the join reads logical names, the CoW
+    # output writes physical ones
+    ren = table("ren", [("d1", 1, 10.0), ("d2", 2, 20.0)],
+                "dt string, tear int, eff double")
+    rename_column(spark, ren, "dt", "shift_day")
+    merge_version(
+        spark, ren,
+        _mk(
+            spark,
+            [("d1", 1, 0.0), ("d2", 2, 99.0), ("d9", 9, 90.0)],
+            "shift_day string, tear int, eff double",
+        ),
+        key=["shift_day", "tear"],
+        when_matched_condition="source.eff > 0",
+    )
+    assert rows(ren) == [("d1", 1, 10.0), ("d2", 2, 99.0), ("d9", 9, 90.0)]
+
+
 def test_stream_read_versioned_starting_version(spark, tmp_path):
     """startingVersion: the stream begins AT that commit — earlier
     history is never emitted; 'latest' emits nothing until a new

@@ -2155,6 +2155,55 @@ def test_count_rows_metadata_only(spark, tdir):
     assert count_rows(spark, tdir) == 79
 
 
+def test_count_rows_metadata_partition_filter(spark, tmp_path):
+    """The touched-month count an import reports,
+    ``count_rows_metadata(man, (col, values))``, equals the filtered
+    scan on a clean month-partitioned table and refuses (None, so the
+    caller scans) after a delete or when files span months."""
+    from tms_etl_spark.operators.versioned import (
+        _manifest_path,
+        _read_json,
+        count_rows_metadata,
+        delete_rows,
+        merge_version,
+    )
+
+    def meta_and_scan(tdir, months):
+        man = _read_json(
+            spark, _manifest_path(tdir, current_version(spark, tdir))
+        )
+        scan = read_version(spark, tdir).where(F.col("month").isin(months))
+        return count_rows_metadata(man, ("month", months)), scan.count()
+
+    rows = spark.range(60).select(
+        "id",
+        (F.col("id") * 10).alias("val"),
+        F.format_string("2024-%02d", F.col("id") % 3 + 1).alias("month"),
+    )
+    part = str(tmp_path / "part")
+    write_version(rows, part, "append", partition_by=["month"])
+    merge_version(
+        spark,
+        part,
+        spark.createDataFrame(
+            [(5, 1, "2024-03"), (100, 2, "2024-01")],
+            "id long, val long, month string",
+        ),
+        "id",
+    )
+    for months, want in (
+        (["2024-01"], 21),
+        (["2024-01", "2024-03"], 41),
+        (["2025-01"], 0),
+    ):
+        assert meta_and_scan(part, months) == (want, want)
+    delete_rows(spark, part, spark.createDataFrame([(3,)], "id long"))
+    assert meta_and_scan(part, ["2024-01"]) == (None, 20)
+    flat = str(tmp_path / "flat")
+    write_version(rows.coalesce(1), flat, "append")
+    assert meta_and_scan(flat, ["2024-01"]) == (None, 20)
+
+
 def test_analyze_table_stats_sidecar(spark, tdir):
     """ANALYZE: one-pass ndv/null/min-max statistics stored as a
     derived sidecar, readable without a scan, version-scoped."""

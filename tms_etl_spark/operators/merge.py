@@ -30,6 +30,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier, so a projection
+    over many columns can be ONE ``selectExpr``/``F.expr`` call instead
+    of a ``F.col(..).alias(..)`` pair of py4j round trips per column
+    (dots and backticks in the name survive the round trip)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dedupe_batch(
     source: DataFrame,
     keys: Sequence[str],
@@ -66,14 +74,15 @@ def dedupe_batch(
     lands last. 8 bytes of extra shuffle payload, not a row copy."""
     others = [c for c in source.columns if c not in keys]
     pref = list(precedence) if precedence is not None else [F.lit(1)]
-    row = F.struct(*[F.col(c) for c in others])
+    row = F.expr(f"struct({', '.join(_ident(c) for c in others)})")
     if content_tiebreak:
         pref.append(F.xxhash64(row))
     won = source.groupBy(*[F.col(k) for k in keys]).agg(
         F.max_by(row, F.struct(*pref)).alias("__row")
     )
-    return won.select(
-        *keys, *[F.col(f"__row.{c}").alias(c) for c in others]
+    return won.selectExpr(
+        *[_ident(k) for k in keys],
+        *[f"__row.{_ident(c)} AS {_ident(c)}" for c in others],
     )
 
 
@@ -160,7 +169,6 @@ def upsert_partitioned(
     from tms_etl_spark.operators.checkpoints import unpersist_checkpoint
 
     spark = source.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ours = None  # OUR checkpoint only — never touch the caller's df
     if path_exists(spark, spark_target_path):
         touched = [r[0] for r in source.select(partition_col).distinct().collect()]
@@ -170,9 +178,11 @@ def upsert_partitioned(
         merged = ours = upsert(target, source, keys).localCheckpoint(eager=True)
     else:  # first write: nothing to merge with
         merged = source
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(
-        spark_target_path
-    )
+    # per-write option, not the session conf: a session-global
+    # dynamic mode would leak into the caller's unrelated overwrites
+    merged.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(spark_target_path)
     # the checkpointed batch is dead once written — release its
     # blocks so a long-lived session doesn't accumulate one pinned
     # batch per MERGE (guide §5)

@@ -42,6 +42,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from tms_etl_spark.operators.checkpoints import unpersist_checkpoint
+from tms_etl_spark.operators.merge import _ident
 from tms_etl_spark.sources.fs import _fs, list_files, path_exists
 
 _MANIFESTS = "_manifests"
@@ -883,10 +884,8 @@ def _to_physical(df: DataFrame, cmap: dict[str, str]) -> DataFrame:
     disk no matter how many renames happened."""
     if not cmap:
         return df
-    from pyspark.sql import functions as F
-
-    return df.select(
-        *[F.col(c).alias(cmap.get(c, c)) for c in df.columns]
+    return df.selectExpr(
+        *[f"{_ident(c)} AS {_ident(cmap.get(c, c))}" for c in df.columns]
     )
 
 
@@ -1010,8 +1009,6 @@ def _read_files(
     TYPES (path-string inference would turn a numeric-looking string
     key into int)."""
     schema_log = _man_schema(man)
-    from pyspark.sql import functions as F
-
     cmap = _column_map(man)
     # files carry PHYSICAL names (stable across renames): scan with
     # the physical schema, alias back to logical at the end
@@ -1077,9 +1074,9 @@ def _read_files(
         # recorded column order regardless of which part came first;
         # mapped tables alias physical → logical here, the one seam
         # where renamed columns get their current name back
-        out = out.select(
+        out = out.selectExpr(
             *[
-                F.col(cmap.get(f.name, f.name)).alias(f.name)
+                f"{_ident(cmap.get(f.name, f.name))} AS {_ident(f.name)}"
                 for f in schema_log.fields
             ]
         )
@@ -4496,6 +4493,115 @@ def _insert_filter(df: DataFrame, cond: str) -> DataFrame:
     return out
 
 
+def _conditional_merge_rows(
+    scan: DataFrame,
+    source: DataFrame,
+    keys: list[str],
+    update: bool,
+    matched_cond: str | None,
+    insert_cond: str | None,
+    out_schema,
+    keep_unmatched_target: bool,
+) -> DataFrame:
+    """The rows a conditional MERGE writes for its touched files, from
+    ONE full outer join of the touched scan (aliased ``target``) and
+    the source (aliased ``source``) — the way Delta Lake plans an
+    upsert MERGE. Each side carries a literal marker column, so a
+    row's side is never inferred from its key's nullness, and one
+    projection picks the row per key:
+
+    - matched, guard true → the source row (``update``) or nothing
+      (delete-merge);
+    - matched, guard false/NULL → the target row (first write wins);
+    - source only → inserted iff ``insert_cond`` holds (false/NULL:
+      not inserted);
+    - target only → kept, unless ``keep_unmatched_target`` is off (a
+      NOT-MATCHED-BY-SOURCE clause decides those rows instead).
+
+    The guard is evaluated per matched (target, source) pair, so each
+    duplicate-keyed target row emits its own output row, like Delta's
+    per-row UPDATE. ``insert_cond`` is evaluated on the source side
+    alone, where bare column names resolve. Output columns follow
+    ``out_schema`` (the post-merge recorded schema): a column one side
+    lacks (``merge_schema``) is NULL on that side's rows, and every
+    column lands as its recorded type. Non-deterministic conditions
+    refuse."""
+    from functools import reduce as _reduce
+    from operator import and_ as _and
+
+    from pyspark.sql import functions as F
+
+    ins = (
+        F.lit(True)
+        if insert_cond is None
+        else F.coalesce(F.expr(insert_cond), F.lit(False))
+    )
+    src = source.alias("source")
+    # determinism is read off a Filter on the bare condition: checking
+    # the wide projection instead costs two py4j calls per column
+    if insert_cond is not None and not _filter_deterministic(src.where(ins)):
+        raise ValueError(
+            f"non-deterministic when_not_matched_condition {insert_cond!r} "
+            "— a replayed or retried merge would insert different rows"
+        )
+    s = src.select(
+        "*", F.lit(True).alias("__msrc"), ins.alias("__mins")
+    ).alias("source")
+    t = scan.select("*", F.lit(True).alias("__mtgt")).alias("target")
+    on = _reduce(
+        _and,
+        [
+            F.col(f"target.{_ident(k)}") == F.col(f"source.{_ident(k)}")
+            for k in keys
+        ],
+    )
+    j = t.join(s, on, "full_outer")
+    t_in = F.col("__mtgt").isNotNull()
+    s_in = F.col("__msrc").isNotNull()
+    take = (
+        F.lit(True)
+        if matched_cond is None
+        else F.coalesce(F.expr(matched_cond), F.lit(False))
+    )
+    if matched_cond is not None and not _filter_deterministic(j.where(take)):
+        raise ValueError(
+            f"non-deterministic when_matched_condition {matched_cond!r} "
+            "— a replayed or retried merge would pick different rows"
+        )
+    # __muse: the row takes the source side. A CASE, so the guard is
+    # only ever evaluated on a matched pair
+    j = j.select(
+        "*",
+        F.when(t_in & s_in, take).otherwise(F.col("__mins")).alias("__muse"),
+    )
+    use = F.coalesce(F.col("__muse"), F.lit(False))
+    emit = (t_in | use) if update else (t_in & ~use)
+    if not keep_unmatched_target:
+        emit = emit & s_in
+    t_cols, s_cols = set(scan.columns), set(source.columns)
+    if out_schema is not None:
+        names = out_schema.fieldNames()
+    else:  # legacy stat-less manifest: the scan's columns (+ added)
+        names = list(scan.columns) + [
+            c for c in source.columns if c not in t_cols
+        ]
+    exprs = []
+    for c in names:
+        tc = f"target.{_ident(c)}" if c in t_cols else "NULL"
+        sc = f"source.{_ident(c)}" if c in s_cols and update else "NULL"
+        exprs.append(f"CASE WHEN __muse THEN {sc} ELSE {tc} END AS {_ident(c)}")
+    out = j.where(emit).selectExpr(*exprs)
+    if out_schema is not None:
+        recast = {
+            f.name: F.col(_ident(f.name)).cast(out_schema[f.name].dataType)
+            for f in out.schema.fields
+            if f.dataType != out_schema[f.name].dataType
+        }
+        if recast:
+            out = out.withColumns(recast)
+    return out
+
+
 # ---------------------------------------------------------------------------
 # Optimistic concurrency for the DML/ALTER verbs (r12). The append path's
 # `commit_retries` can retry BLINDLY — an append commutes with anything —
@@ -4919,6 +5025,11 @@ def merge_version(
     failing rows are silently not inserted. Refused with
     ``when_matched="delete"`` (a delete-merge never inserts).
 
+    Either condition makes the copy-on-write output ONE full outer
+    join of the touched scan and the source with a row-picking
+    projection (`_conditional_merge_rows`), so matched rows — like
+    under the guard — emit once per (target, source) pair.
+
     ``when_not_matched_by_source="delete"`` (r11 — Delta's ``WHEN NOT
     MATCHED BY SOURCE THEN DELETE``): full-sync replication — target
     rows whose key has no source row are deleted, making the table
@@ -5087,10 +5198,10 @@ def merge_version(
     # once the commit returns/raises, released at both exits (r13)
     _pins: list[DataFrame] = []
     if conditional and not nmbs:
-        # the conditional rewrite embeds the source in up to four
-        # branches of ONE write plan (guard-kept pairs, updated
-        # pairs, unmatched survivors, insert anti-join) AND in the
-        # key-stat aggregates / touched-file probe below —
+        # the conditional rewrite's one full outer join (guard-kept
+        # pairs, updated pairs, conditional inserts and unmatched
+        # survivors from one projection) reads the source, and so do
+        # the key-stat aggregates / touched-file probe below —
         # localCheckpoint materializes the batch-sized source ONCE,
         # before ANY derivation, so a non-deterministic source
         # cannot disagree between the probe/src_keys and the write
@@ -5283,67 +5394,36 @@ def merge_version(
             # same plan-reuse move for the touched scan (the source
             # was already checkpointed up front, before src_keys /
             # the probe were derived from it): materialize the
-            # batch-sized touched scan once instead of re-reading
-            # the parquet per branch. Skipped under full-sync, where
+            # batch-sized touched scan once for the one-join write
+            # and the change-feed sidecar. Skipped under full-sync, where
             # "touched" is the whole table and a second materialized
             # copy is exactly the memory pressure to avoid.
             scan = scan.localCheckpoint(eager=False)
             _pins.append(scan)
-        if when_matched_condition is not None:
-            # WHEN MATCHED AND <cond>: evaluated per matched
-            # (target, source) pair under the documented aliases —
-            # pairs failing the guard keep the TARGET row and their
-            # source row does not land (first-write-wins), pairs
-            # passing it update/delete like the unconditioned path.
-            t = scan.alias("target")
-            s = source_df.alias("source")
-            on = _reduce(
-                _and,
-                [
-                    F.col(f"target.{k}") == F.col(f"source.{k}")
-                    for k in keys
-                ],
-            )
-            pairs = t.join(s, on, "inner")
-            cond_true = F.coalesce(
-                F.expr(when_matched_condition), F.lit(False)
-            )
-            guarded = pairs.where(~cond_true)
-            if not _filter_deterministic(guarded):
-                raise ValueError(
-                    "non-deterministic when_matched_condition "
-                    f"{when_matched_condition!r} — a replayed or "
-                    "retried merge would pick different rows"
-                )
-            parts.append(guarded.select("target.*"))
-            if when_matched == "update":
-                parts.append(pairs.where(cond_true).select("source.*"))
-                # inserts only: matched source rows already landed (or
-                # were blocked) above
-                src_effective = source_df.join(
-                    scan.select(*keys).distinct(), keys, "left_anti"
-                )
-        elif (
-            when_not_matched_condition is not None
-            and when_matched == "update"
-        ):
-            # split only when the INSERT clause is conditional:
-            # matched source rows update unconditionally, unmatched
-            # rows insert iff the condition passes (filtered below)
-            src_effective = source_df.join(
-                scan.select(*keys).distinct(), keys, "left_semi"
-            ).unionByName(
-                _insert_filter(
-                    source_df.join(
-                        scan.select(*keys).distinct(), keys, "left_anti"
-                    ),
+        if conditional:
+            # WHEN MATCHED AND <guard> / WHEN NOT MATCHED AND <cond>:
+            # ONE full outer join of the touched scan and the source
+            # yields the guard-kept targets, the updated pairs, the
+            # conditional inserts and (without a NOT-MATCHED-BY-SOURCE
+            # clause) the unmatched survivors in one pass over both
+            # pinned inputs — see `_conditional_merge_rows`
+            parts.append(
+                _conditional_merge_rows(
+                    scan,
+                    source_df,
+                    keys,
+                    when_matched == "update",
+                    when_matched_condition,
                     when_not_matched_condition,
+                    rec_schema,
+                    keep_unmatched_target=not nmbs,
                 )
             )
-        if not nmbs:
+            src_effective = None
+        elif not nmbs:
             # unmatched target rows survive
             parts.append(scan.join(src_keys, keys, "left_anti"))
-        else:
+        if nmbs:
             # WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN
             # DELETE/UPDATE: unmatched target rows failing the
             # condition (NULL counts as fail — the row is KEPT, the
@@ -5406,13 +5486,8 @@ def merge_version(
                 )
             # delete action: doomed rows simply do not land
     if src_effective is not None:
-        if when_not_matched_condition is not None and not (
-            touched and when_matched_condition is None
-        ):
-            # zero-touched-files path (whole source inserts) or the
-            # conditional-matched path (src_effective is the insert
-            # set): filter the inserts; the unconditional-matched
-            # touched path already split + filtered above
+        if when_not_matched_condition is not None:
+            # zero-touched-files path: the whole source is inserts
             src_effective = _insert_filter(
                 src_effective, when_not_matched_condition
             )
@@ -7273,11 +7348,19 @@ def maintain_table(
     return out
 
 
-def count_rows_metadata(man: dict) -> int | None:
+def count_rows_metadata(
+    man: dict, where: tuple[str, Sequence] | None = None
+) -> int | None:
     """COUNT(*) of a snapshot from manifest metadata alone, or None
     when metadata cannot answer exactly: deletion vectors pending
     (row-level subtraction) or files committed before per-file row
-    counts were recorded. Pure function of one manifest — zero I/O."""
+    counts were recorded. Pure function of one manifest — zero I/O.
+
+    ``where=(col, values)`` counts only rows with ``col IN values``
+    (a partition-value filter). It answers only when every live file
+    is either proven disjoint from ``values`` by its zonemap or PURE
+    on one of them (min == max in ``values``, no NULLs) — a file
+    mixing values, or lacking stats for ``col``, returns None."""
     if man.get("deletes"):
         return None
     stats = man.get("stats", {})
@@ -7293,6 +7376,20 @@ def count_rows_metadata(man: dict) -> int | None:
             # pre-rowcount commit in the chain, or a data column
             # literally named "__rows" shadowed the counter
             return None
+        if where is not None:
+            col, values = where
+            if _file_prunable(e, col, "in", values):
+                continue
+            bounds = e.get(col)
+            nulls = e.get("__nulls")
+            if not (
+                bounds
+                and bounds[0] == bounds[1]
+                and bounds[0] in values
+                and isinstance(nulls, dict)
+                and nulls.get(col) == 0
+            ):
+                return None
         total += n
     return total
 

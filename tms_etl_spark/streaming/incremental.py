@@ -90,9 +90,12 @@ def stream_import(
             keys=list(MERGE_KEYS),
             insert_only=is_tear_desligado(),
         )
-        sp.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         ckpt = merged.localCheckpoint(eager=True)
-        ckpt.write.mode("overwrite").partitionBy("month").parquet(target_path)
+        # dynamic overwrite as a per-write option: the session conf
+        # is shared with every other query of the application
+        ckpt.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("month").parquet(target_path)
         # release the batch pin: a streaming driver runs this per
         # micro-batch and would otherwise hold every batch forever
         unpersist_checkpoint(ckpt)

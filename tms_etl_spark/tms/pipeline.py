@@ -7,13 +7,23 @@
 This replaces the reference's serial per-row loop (2 DB round-trips
 per row, commit per row — /root/reference/src/main_01.py:366-437)
 with one distributed plan: the per-row existence probes collapse into
-a single anti-join, and the physical write only rewrites the month
+a single join, and the physical write only rewrites the month
 partitions present in the batch (dynamic partition overwrite) — the
 merge cost scales with the batch's months, not the table's history.
+
+One pinned pass per import: the CSV parse → type → dedupe plan runs
+ONCE into a ``localCheckpoint`` that the batch statistics (one
+per-month aggregate gives both the row count and the touched months)
+and the merge both read, so they describe the same snapshot of the
+lake and the CSVs are parsed once. The versioned import answers
+``table_rows`` from the committed manifest's per-file row counts when
+they prove it exactly, with a scan fallback otherwise.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,12 +39,39 @@ from tms_etl_spark.tms.source import arity_filter, read_daily
 
 @dataclass
 class ImportStats:
-    """``table_rows`` counts the month partitions this batch touched
-    (post-merge), not the whole table — the stat stays O(batch), not
-    O(history)."""
+    """``batch_rows`` counts the cleaned, deduped batch; ``table_rows``
+    counts the month partitions this batch touched (post-merge), not
+    the whole table — the stat stays O(batch), not O(history). Both
+    batch figures come from one aggregate over the pinned batch; the
+    versioned import takes ``table_rows`` from the manifest when its
+    per-file stats prove it, and scans the touched months otherwise."""
 
     batch_rows: int
     table_rows: int
+
+
+@contextmanager
+def _pinned_batch(
+    spark: SparkSession,
+    lake_root: str,
+    months: list[str] | None,
+    encoding: str,
+) -> Iterator[tuple[DataFrame, int, list[str]]]:
+    """The cleaned batch materialized ONCE, with its row count and
+    touched months from a single per-month aggregate over the pin.
+    The pin is released when the block exits, raised or not."""
+    batch = prepare_batch(
+        read_daily(spark, lake_root, months, encoding)
+    ).localCheckpoint(eager=True)
+    try:
+        per_month = batch.groupBy("month").count().collect()
+        yield (
+            batch,
+            sum(r["count"] for r in per_month),
+            [r["month"] for r in per_month],
+        )
+    finally:
+        unpersist_checkpoint(batch)
 
 
 def prepare_batch(df: DataFrame) -> DataFrame:
@@ -68,34 +105,43 @@ def import_daily(
     existing record for the same shift key is never overwritten by a
     desligado row (P4, /root/reference/src/main_01.py:460-473).
     """
-    batch = prepare_batch(read_daily(spark, lake_root, months, encoding))
-    batch_rows = batch.count()
-    months_touched = [r[0] for r in batch.select("month").distinct().collect()]
-
-    # Explicit filesystem probe, never `except Exception` around the
-    # read: a transient read error on an existing table must fail the
-    # job, not take the first-write overwrite branch (data loss).
-    if not path_exists(spark, target_path):
-        # First load: desligado rows may insert (no prior record).
-        merged = batch
-        merged.write.mode("overwrite").partitionBy("month").parquet(target_path)
-    else:
-        target = spark.read.parquet(target_path)
-        target_slice = target.where(F.col("month").isin(months_touched))
-        merged = upsert_guarded(
-            target_slice,
-            batch,
-            keys=list(MERGE_KEYS),
-            insert_only=is_tear_desligado(),
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # The merge plan reads the same partitions the write replaces:
-        # break the dependency by materializing first (localCheckpoint
-        # here; a staging path + atomic rename on a real cluster).
-        ckpt = merged.localCheckpoint(eager=True)
-        ckpt.write.mode("overwrite").partitionBy("month").parquet(target_path)
-        # written and re-read from disk below: the pin is dead state
-        unpersist_checkpoint(ckpt)
+    with _pinned_batch(spark, lake_root, months, encoding) as (
+        batch,
+        batch_rows,
+        months_touched,
+    ):
+        # Explicit filesystem probe, never `except Exception` around
+        # the read: a transient read error on an existing table must
+        # fail the job, not take the first-write overwrite branch
+        # (data loss).
+        if not path_exists(spark, target_path):
+            # First load: desligado rows may insert (no prior record).
+            batch.write.mode("overwrite").partitionBy("month").parquet(
+                target_path
+            )
+        else:
+            target = spark.read.parquet(target_path)
+            target_slice = target.where(F.col("month").isin(months_touched))
+            merged = upsert_guarded(
+                target_slice,
+                batch,
+                keys=list(MERGE_KEYS),
+                insert_only=is_tear_desligado(),
+            )
+            # The merge plan reads the same partitions the write
+            # replaces: break the dependency by materializing first
+            # (localCheckpoint here; a staging path + atomic rename on
+            # a real cluster).
+            ckpt = merged.localCheckpoint(eager=True)
+            try:
+                # dynamic overwrite per write, never via the session
+                # conf: other queries of the session keep their mode
+                ckpt.write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("month").parquet(target_path)
+            finally:
+                # written and re-read from disk below: dead state
+                unpersist_checkpoint(ckpt)
 
     # Post-write stat over the TOUCHED partitions only (partition
     # pruning on `month`) — a full-table count here would be a 100 TB
@@ -135,6 +181,9 @@ def import_daily_versioned(
     merge cost via the tuple zonemap cut instead of month-partition
     overwrite."""
     from tms_etl_spark.operators.versioned import (
+        _manifest_path,
+        _read_json,
+        count_rows_metadata,
         current_version,
         merge_version,
         read_version,
@@ -142,50 +191,57 @@ def import_daily_versioned(
     )
     from tms_etl_spark.tms.quality import is_tear_desligado_sql
 
-    batch = prepare_batch(read_daily(spark, lake_root, months, encoding))
-    batch_rows = batch.count()
-    months_touched = [
-        r[0] for r in batch.select("month").distinct().collect()
-    ]
-    if current_version(spark, table_dir) == 0:
-        # first load: desligado rows may insert (no prior record);
-        # month partitioning becomes a table property
-        write_version(
-            batch,
-            table_dir,
-            "append",
-            partition_by=["month"],
-            txn_id=txn_id,
-            commit_retries=commit_retries,
-        )
-    else:
-        merge_version(
-            spark,
-            table_dir,
-            batch,
-            key=list(MERGE_KEYS),
-            txn_id=txn_id,
-            when_matched_condition=(
-                f"NOT ({is_tear_desligado_sql('source')})"
-            ),
-            # optimistic concurrency: a lost race against a DISJOINT
-            # writer (another month's import, an append) re-runs; a
-            # real conflict raises the named error — safe because the
-            # batch derives deterministically from the CSV files
-            commit_retries=commit_retries,
-        )
-    # Touched-month stat via a Column predicate, NOT an interpolated
+    with _pinned_batch(spark, lake_root, months, encoding) as (
+        batch,
+        batch_rows,
+        months_touched,
+    ):
+        if current_version(spark, table_dir) == 0:
+            # first load: desligado rows may insert (no prior record);
+            # month partitioning becomes a table property
+            write_version(
+                batch,
+                table_dir,
+                "append",
+                partition_by=["month"],
+                txn_id=txn_id,
+                commit_retries=commit_retries,
+            )
+        else:
+            merge_version(
+                spark,
+                table_dir,
+                batch,
+                key=list(MERGE_KEYS),
+                txn_id=txn_id,
+                when_matched_condition=(
+                    f"NOT ({is_tear_desligado_sql('source')})"
+                ),
+                # optimistic concurrency: a lost race against a
+                # DISJOINT writer (another month's import, an append)
+                # re-runs; a real conflict raises the named error —
+                # safe because the re-run merges the same pinned batch
+                commit_retries=commit_retries,
+            )
+    if not months_touched:
+        return ImportStats(batch_rows=batch_rows, table_rows=0)
+    # Touched-month stat: the committed manifest's per-file row counts
+    # answer it with zero data I/O when every live file is provably
+    # outside the touched months or pure on one of them; pending
+    # deletes, stat-less or month-spanning files fall back to a scan.
+    # The scan filters with a Column predicate, NOT an interpolated
     # SQL string: `month` is data-derived (substring of DataTurno from
     # CSVs), and a malformed value containing a quote would break the
     # expression AFTER the merge already committed. `month` is the
-    # hive partition column, so Catalyst partition-prunes the isin —
-    # same O(touched-partitions) cost the SQL form had (IN lists never
-    # drove manifest zonemap pruning anyway, per read_version_where).
-    table_rows = (
-        read_version(spark, table_dir)
-        .where(F.col("month").isin(months_touched))
-        .count()
-        if months_touched
-        else 0
+    # hive partition column, so Catalyst partition-prunes the isin.
+    man = _read_json(
+        spark, _manifest_path(table_dir, current_version(spark, table_dir))
     )
+    table_rows = count_rows_metadata(man, ("month", months_touched))
+    if table_rows is None:
+        table_rows = (
+            read_version(spark, table_dir)
+            .where(F.col("month").isin(months_touched))
+            .count()
+        )
     return ImportStats(batch_rows=batch_rows, table_rows=table_rows)

@@ -10,9 +10,10 @@ Column order mirrors the reference's positional index→name map
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from tms_etl_spark.operators.merge import _ident
 
 _STOP_REASONS = (
     "ParadasUrdume",
@@ -58,28 +59,36 @@ RAW_SCHEMA = T.StructType(
 MERGE_KEYS = ("DataTurno", "Tear")  # upsert key, /root/reference/src/main_01.py:243
 
 
-def num(col: str) -> Column:
+def _num_sql(col: str) -> str:
     """P7: ``float(x or 0)`` → try_cast to double, '' / invalid / missing → 0."""
-    return F.coalesce(F.trim(F.col(col)).try_cast("double"), F.lit(0.0))
+    return f"coalesce(try_cast(trim({_ident(col)}) AS DOUBLE), 0D)"
 
 
 def with_types(raw: DataFrame) -> DataFrame:
     """Typed projection of a raw positional frame: trims strings,
     coerces measures (P7), derives ``data`` (DATE), ``turno`` (A/B/C)
     and ``month`` (partition column) from the DataTurno shift key
-    ``YYYY-MM-DD.X`` (SURVEY.md §1.1)."""
-    cols: list[Column] = [
-        F.trim(F.col(c)).alias(c) for c in STRING_COLUMNS if c != "col3_unused"
+    ``YYYY-MM-DD.X`` (SURVEY.md §1.1). Built as SQL projections — one
+    py4j call per column instead of one per Column-API node, which
+    for 71 columns was most of the import's plan-building cost."""
+    cols = [
+        f"trim({_ident(c)}) AS {_ident(c)}"
+        for c in STRING_COLUMNS
+        if c != "col3_unused"
     ]
-    cols += [num(c).alias(c) for c in NUMERIC_COLUMNS]
+    cols += [f"{_num_sql(c)} AS {_ident(c)}" for c in NUMERIC_COLUMNS]
     # carry through any non-schema columns (e.g. _src_file lineage)
-    extras = [c for c in raw.columns if c not in DAILY_COLUMNS]
-    df = raw.select(*cols, *extras)
-    date_part = F.substring("DataTurno", 1, 10)
-    return (
+    derived = ("data", "turno", "month")
+    extras = [
+        _ident(c)
+        for c in raw.columns
+        if c not in DAILY_COLUMNS and c not in derived
+    ]
+    return raw.selectExpr(*cols, *extras).selectExpr(
+        "*",
         # try_to_date: malformed keys → null (ANSI-safe; the arity
         # filter drops them downstream, P2)
-        df.withColumn("data", F.try_to_date(date_part, "yyyy-MM-dd"))
-        .withColumn("turno", F.substring("DataTurno", 12, 1))
-        .withColumn("month", F.substring("DataTurno", 1, 7))
+        "try_to_date(substring(DataTurno, 1, 10), 'yyyy-MM-dd') AS data",
+        "substring(DataTurno, 12, 1) AS turno",
+        "substring(DataTurno, 1, 7) AS month",
     )

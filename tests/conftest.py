@@ -84,6 +84,27 @@ def spark(tmp_path_factory):
     yield s
 
 
+@pytest.fixture(autouse=True)
+def _stop_leaked_streams(request):
+    """A streaming query a test leaves running keeps sending to the
+    shared session's JVM from its own thread for the rest of the run
+    (noise in every later py4j-count and timing). After each test that
+    used ``spark``, stop whatever is still active and name the test."""
+    yield
+    if "spark" not in request.fixturenames:
+        return
+    active = request.getfixturevalue("spark").streams.active
+    for q in active:
+        q.stop()
+    if active:
+        warnings.warn(
+            pytest.PytestWarning(
+                f"{request.node.nodeid} left {len(active)} streaming "
+                "quer(ies) running; stopped them"
+            )
+        )
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR

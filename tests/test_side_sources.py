@@ -542,3 +542,115 @@ def test_python_writer_refuses_constrained_tables(spark, tmp_path):
         ).save()
     assert "CHECK constraints" in str(ei.value)
     assert current_version(spark, t) == 1  # nothing committed
+
+
+def test_python_writer_refuses_column_mapped_tables(spark, tmp_path):
+    """The Data Source writes LOGICAL names; a renamed column's files
+    carry its PHYSICAL name, so an append onto a column-mapped table
+    would land rows every read null-fills. The commit refuses and the
+    table stays at its version."""
+    import pytest as _pytest
+
+    from tms_etl_spark.operators.versioned import (
+        current_version,
+        read_version,
+        rename_column,
+        write_version,
+    )
+    from tms_etl_spark.sources.pyds import VersionedTableDataSource
+
+    spark.dataSource.register(VersionedTableDataSource)
+    t = str(tmp_path / "vtr")
+    write_version(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), t
+    )
+    rename_column(spark, t, "v", "w")
+    with _pytest.raises(Exception) as ei:
+        spark.createDataFrame([(3, "c")], "k long, w string").write.format(
+            "tms_versioned"
+        ).option("path", t).mode("append").save()
+    assert "column-mapped" in str(ei.value)
+    assert current_version(spark, t) == 2
+    assert sorted(tuple(r) for r in read_version(spark, t).collect()) == [
+        (1, "a"),
+        (2, "b"),
+    ]
+
+
+def test_python_writer_append_keeps_change_feed(spark, tmp_path):
+    """A Data Source append onto a change-feed table keeps the feed
+    on: the appended rows serve as inserts, and a later DELETE still
+    records its sidecar."""
+    from tms_etl_spark.operators.versioned import (
+        _manifest_path,
+        _read_json,
+        delete_rows,
+        enable_change_feed,
+        read_version_cdf,
+        write_version,
+    )
+    from tms_etl_spark.sources.pyds import VersionedTableDataSource
+
+    spark.dataSource.register(VersionedTableDataSource)
+    t = str(tmp_path / "vtcdf")
+    write_version(spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"), t)
+    v_on = enable_change_feed(spark, t)
+    spark.createDataFrame([(3, 30)], "id long, v long").write.format(
+        "tms_versioned"
+    ).option("path", t).mode("append").save()
+    assert _read_json(spark, _manifest_path(t, v_on + 1)).get("change_feed")
+    delete_rows(spark, t, spark.createDataFrame([(1,)], "id long"))
+    got = sorted(
+        (r["id"], r["v"], r["_change_type"], r["_commit_version"])
+        for r in read_version_cdf(spark, t, v_on).collect()
+    )
+    assert got == [(1, 10, "delete", v_on + 2), (3, 30, "insert", v_on + 1)]
+
+
+def test_python_writer_stamps_commit_time(spark, tmp_path):
+    """Data Source commits carry ``committed_at`` like every other
+    commit, so timestamp time travel resolves them."""
+    import time
+
+    from tms_etl_spark.operators.versioned import (
+        _manifest_path,
+        _read_json,
+        version_asof,
+    )
+    from tms_etl_spark.sources.pyds import VersionedTableDataSource
+
+    spark.dataSource.register(VersionedTableDataSource)
+    t = str(tmp_path / "vtts")
+    before = time.time()
+    spark.range(3).write.format("tms_versioned").option("path", t).mode(
+        "append"
+    ).save()
+    at = _read_json(spark, _manifest_path(t, 1)).get("committed_at")
+    assert at is not None and before <= at <= time.time()
+    assert version_asof(spark, t, at) == 1
+
+
+def test_python_writer_lost_race_raises_concurrent_write_error(
+    spark, tmp_path, monkeypatch
+):
+    """A writer that planned against v1 while another committed v2
+    loses the race with the shared ConcurrentWriteError — never a
+    bare error, never a clobbered manifest."""
+    import pytest as _pytest
+    from pyspark.sql import Row
+
+    from tms_etl_spark.operators import versioned as vt
+    from tms_etl_spark.sources.pyds import VersionedTableWriter
+
+    t = str(tmp_path / "vtrace")
+    vt.write_version(spark.range(3), t)
+    w = VersionedTableWriter(spark.range(1).schema, {"path": t}, False)
+    msg = w.write(iter([Row(id=7)]))
+    vt.write_version(spark.range(3, 5), t, "append")  # the winner: v2
+    won = vt._read_json(spark, vt._manifest_path(t, 2))
+    monkeypatch.setattr(vt, "current_version", lambda spark, table_dir: 1)
+    with _pytest.raises(vt.ConcurrentWriteError):
+        w.commit([msg])
+    monkeypatch.undo()
+    assert vt.current_version(spark, t) == 2
+    assert vt._read_json(spark, vt._manifest_path(t, 2)) == won

@@ -282,16 +282,28 @@ def test_plan_building_py4j_budget(spark, lake, tmp_path):
     """Building the import's plans is py4j-bound on wide frames: the
     71-column projections are single ``selectExpr`` calls, not a
     Column-API node chain per column. Bounds are 1.5x the measured
-    144 and 503 sends; the per-column form measured 1,896 sends for
+    92 and 503 sends; the per-column form measured 1,896 sends for
     ``read_version`` and 7,404 for ``prepare_batch(read_daily(...))``
-    on this fixture."""
-    from tms_etl_spark.operators.versioned import read_version
+    on this fixture. Manifest metadata on a local table never touches
+    the JVM: the Hadoop listing and read made 26 and 17 sends here
+    (38 and 32 on a cold 3-version table), and ``read_version`` 144."""
+    from tms_etl_spark.operators.versioned import (
+        _manifest_path,
+        _read_json,
+        current_version,
+        read_version,
+    )
 
     tdir = str(tmp_path / "vt")
     import_daily_versioned(spark, lake, tdir)
     read_version(spark, tdir)  # warm: first-use JVM handles
     assert len(read_version(spark, tdir).columns) == 73
-    assert _py4j_sends(spark, lambda: read_version(spark, tdir)) <= 216
+    assert _py4j_sends(spark, lambda: current_version(spark, tdir)) == 0
+    assert (
+        _py4j_sends(spark, lambda: _read_json(spark, _manifest_path(tdir, 1)))
+        == 0
+    )
+    assert _py4j_sends(spark, lambda: read_version(spark, tdir)) <= 138
     prepare_batch(read_daily(spark, lake))
     assert (
         _py4j_sends(spark, lambda: prepare_batch(read_daily(spark, lake)))
@@ -342,3 +354,45 @@ def test_import_table_rows_falls_back_on_month_spanning_files(
     table = read_version(spark, tdir)
     assert st.table_rows == table.where(F.col("month") == "2024-01").count()
     assert table.count() == st.table_rows + 1
+
+
+def test_import_table_rows_counts_the_committed_version(
+    spark, lake, tmp_path, monkeypatch
+):
+    """``table_rows`` describes the version THIS import committed: a
+    writer that appends into a touched month right after the merge
+    commits is not counted, on the manifest path or the scan path."""
+    from tms_etl_spark.operators import versioned as vt
+
+    tdir = str(tmp_path / "vt")
+    import_daily_versioned(spark, lake, tdir)
+    real_merge = vt.merge_version
+    committed = []
+
+    def merge_then_later_writer(*args, **kwargs):
+        v = real_merge(*args, **kwargs)
+        committed.append(v)
+        later = vt.read_version(spark, tdir, v).limit(2).localCheckpoint()
+        vt.write_version(later, tdir, "append")
+        return v
+
+    monkeypatch.setattr(vt, "merge_version", merge_then_later_writer)
+    st = import_daily_versioned(spark, lake, tdir)
+    jan = F.col("month") == "2024-01"
+    at_commit = vt.read_version(spark, tdir, committed[0]).where(jan).count()
+    assert vt.current_version(spark, tdir) == committed[0] + 1
+    assert st.table_rows == at_commit
+    assert vt.read_version(spark, tdir).where(jan).count() == at_commit + 2
+
+
+def test_read_daily_reads_only_month_dirs(spark, tmp_path):
+    """Without ``months`` every ``<YYYY-MM>/daily/`` dir of the root
+    is read, and nothing else: a stray ``backup/daily/`` beside it is
+    not imported."""
+    root = tmp_path / "lk"
+    for sub, shift in (("2024-01", "2024-01-05.A"), ("backup", "2023-12-01.A")):
+        d = root / sub / "daily"
+        d.mkdir(parents=True)
+        (d / "f.csv").write_text(_row(shift, "00001"), encoding="utf-8")
+    df = read_daily(spark, str(root))
+    assert {r["month"] for r in df.select("month").collect()} == {"2024-01"}

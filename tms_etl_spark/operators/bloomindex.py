@@ -27,11 +27,9 @@ from pyspark.sql import functions as F
 
 from tms_etl_spark.operators.versioned import (
     _live_rel_files,
-    _manifest_path,
     _read_files,
-    _read_json,
     _scan_with_deletes,
-    current_version,
+    _snapshot,
     path_exists,
 )
 
@@ -75,9 +73,7 @@ def build_bloom_index(
     `col = value` filter plus the reader's tombstone handling keep
     results exact."""
     bits, n_hashes = _BITS, _K
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    v, man = _snapshot(spark, table_dir, version)
     live = _live_rel_files(spark, table_dir, man)
     paths = [
         f"{table_dir}/{rel}" for rels in live.values() for rel in rels
@@ -141,8 +137,7 @@ def extend_bloom_index(
     from tms_etl_spark.operators.versioned import _live_rel_files
     from tms_etl_spark.sources.fs import list_files
 
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
+    v, man = _snapshot(spark, table_dir, version)
     root = f"{table_dir}/_indexes/{col}"
     prev_v = 0
     if path_exists(spark, root):
@@ -156,7 +151,6 @@ def extend_bloom_index(
     if prev_v == 0:
         return build_bloom_index(spark, table_dir, col, v)
 
-    man = _read_json(spark, _manifest_path(table_dir, v))
     live = _live_rel_files(spark, table_dir, man)
     live_paths = sorted(
         _canon(f"{table_dir}/{rel}")
@@ -350,9 +344,7 @@ def read_version_point(
         version = resolve_tag(spark, table_dir, tag)
     if asof is not None:
         version = version_asof(spark, table_dir, asof)
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    v, man = _snapshot(spark, table_dir, version)
     pred_scan = _scan_with_deletes(spark, table_dir, man)
     lit = F.lit(value).cast(dict(pred_scan.dtypes)[col])
     admitted = bloom_admitted_files(

@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tms_etl_spark.operators.versioned import (
-    _manifest_path,
-    _read_json,
+    _snapshot,
     current_version,
     merge_version,
     read_version,
@@ -41,12 +40,9 @@ def _last_refreshed_base(spark: SparkSession, mv_dir: str) -> int:
     """Base version the view currently reflects, recovered from the
     txn ledger of the view's LATEST manifest (one metadata read) —
     no external watermark file to lose or corrupt."""
-    cur = current_version(spark, mv_dir)
-    if cur <= 0:
-        return 0
-    man = _read_json(spark, _manifest_path(mv_dir, cur))
+    _, man = _snapshot(spark, mv_dir, empty_ok=True)
     best = 0
-    for t, _v in man.get("recent_txns", []):
+    for t, _v in (man or {}).get("recent_txns", []):
         if t.startswith(_TXN_PREFIX):
             best = max(best, int(t[len(_TXN_PREFIX):]))
     return best

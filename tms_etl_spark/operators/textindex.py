@@ -34,11 +34,9 @@ from pyspark.sql import functions as F
 from tms_etl_spark.operators.checkpoints import unpersist_checkpoint
 from tms_etl_spark.operators.versioned import (
     _live_rel_files,
-    _manifest_path,
     _read_files,
-    _read_json,
     _scan_with_deletes,
-    current_version,
+    _snapshot,
     path_exists,
 )
 
@@ -79,9 +77,7 @@ def build_text_index(
     tombstone handling keep results exact). One explode + distinct
     shuffle; the sidecar lands range-partitioned and sorted by token
     so probes push the token predicate into the parquet scan."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    v, man = _snapshot(spark, table_dir, version)
     live = _live_rel_files(spark, table_dir, man)
     paths = [
         f"{table_dir}/{rel}" for rels in live.values() for rel in rels
@@ -145,8 +141,7 @@ def extend_text_index(
 
     from tms_etl_spark.sources.fs import list_files
 
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
+    v, man = _snapshot(spark, table_dir, version)
     root = f"{table_dir}/_indexes/text_{col}"
     prev_v = 0
     if path_exists(spark, root):
@@ -161,7 +156,6 @@ def extend_text_index(
     if prev_v == 0:
         return build_text_index(spark, table_dir, col, v, n_shards)
 
-    man = _read_json(spark, _manifest_path(table_dir, v))
     live = _live_rel_files(spark, table_dir, man)
     live_paths = sorted(
         _canon(f"{table_dir}/{rel}")
@@ -238,9 +232,7 @@ def search_token(
     import re as _re
 
     tok = token.lower()
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    v, man = _snapshot(spark, table_dir, version)
     residual = F.array_contains(tokens_of(col), tok)
     pred_scan = _scan_with_deletes(spark, table_dir, man)
     idx = _index_dir(table_dir, col, v)

@@ -18,9 +18,14 @@ version:
 
 Commit protocol (same atomicity move as `fs.py:replace_dir`): data
 files land first under a version-private directory nobody references
-yet, then the manifest is written to a temp name and RENAMED into
-place — the rename is the commit point, so a reader either sees the
-complete new version or the previous one, never a torn state.
+yet, then the manifest is written to a temp name and committed into
+place only if absent (`_write_json_atomic`) — that is the commit
+point, so a reader either sees the complete new version or the
+previous one, never a torn state. This module is the only code that
+lists, reads or writes manifests: local tables go through the stdlib
+(no JVM, no session — the Python Data Source runners use the same
+functions), other filesystems through Hadoop, and every verb loads
+its snapshot through `_snapshot`.
 
 Scale properties: every operation except the data write itself is
 METADATA-ONLY — `read_version` is a multi-path parquet scan (Spark
@@ -35,25 +40,51 @@ as `fs.py:expire_files`.
 from __future__ import annotations
 
 import json
+import os
 import re
 from dataclasses import dataclass
 from typing import Sequence
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tms_etl_spark.operators.checkpoints import unpersist_checkpoint
 from tms_etl_spark.operators.merge import _ident
-from tms_etl_spark.sources.fs import _fs, list_files, path_exists
+from tms_etl_spark.sources.fs import FileInfo, _fs, list_files, path_exists
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
+_MANIFEST_NAME = re.compile(r"v(\d+)\.json")
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
     return f"{table_dir}/{_MANIFESTS}/v{version:06d}.json"
 
 
-def _read_json(spark: SparkSession, path: str) -> dict:
+def _local(path: str) -> str | None:
+    """The OS path of a LOCAL ``path`` (scheme '' or 'file'), None for
+    any other scheme. The one switch every manifest listing, read and
+    commit shares: local metadata goes through the stdlib (zero py4j
+    round trips, no session needed — the Python Data Source runners
+    have none), every other filesystem through Hadoop."""
+    parsed = urlparse(path)
+    if parsed.scheme in ("", "file"):
+        return parsed.path if parsed.scheme else path
+    return None
+
+
+def _exists(spark: SparkSession | None, path: str) -> bool:
+    local = _local(path)
+    if local is not None:
+        return os.path.exists(local)
+    return path_exists(spark, path)
+
+
+def _read_json(spark: SparkSession | None, path: str) -> dict:
+    local = _local(path)
+    if local is not None:
+        with open(local, "rb") as fh:
+            return json.loads(fh.read())
     fs, jvm_path, jvm = _fs(spark, path)
     stream = fs.open(jvm_path)
     try:
@@ -130,7 +161,9 @@ def set_conditional_put(fn) -> None:
     _CONDITIONAL_PUT = fn
 
 
-def _write_json_atomic(spark: SparkSession, path: str, payload: dict) -> None:
+def _write_json_atomic(
+    spark: SparkSession | None, path: str, payload: dict
+) -> None:
     """Write to a writer-private tmp, then commit-if-absent — the
     conditional-commit point that arbitrates racing writers.
 
@@ -165,18 +198,14 @@ def _write_json_atomic(spark: SparkSession, path: str, payload: dict) -> None:
     bare S3."""
     import time
     import uuid
-    from urllib.parse import urlparse
 
     # every commit path funnels through here, so this is the one
     # place to stamp the commit wall-clock (timestamp time travel,
     # `version_asof`); pre-stamped payloads (tests) pass through
     payload.setdefault("committed_at", time.time())
     data = json.dumps(payload).encode("utf-8")
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        import os
-
-        local = parsed.path if parsed.scheme else path
+    local = _local(path)
+    if local is not None:
         os.makedirs(os.path.dirname(local), exist_ok=True)
         lock = local + ".lock"
         try:
@@ -241,18 +270,76 @@ def _write_json_atomic(spark: SparkSession, path: str, payload: dict) -> None:
         fs.delete(lock, False)
 
 
-def current_version(spark: SparkSession, table_dir: str) -> int:
+def _manifest_listing(
+    spark: SparkSession | None, table_dir: str
+) -> list[FileInfo] | None:
+    """Every file in the table's ``_manifests`` dir — committed
+    manifests plus lock/tmp debris — in ONE listing, or None when the
+    dir does not exist: ``os.scandir`` for a local table, Hadoop for
+    any other scheme."""
+    root = f"{table_dir}/{_MANIFESTS}"
+    local = _local(root)
+    if local is None:
+        return list_files(spark, root) if path_exists(spark, root) else None
+    out = []
+    try:
+        with os.scandir(local) as it:
+            for e in it:
+                try:
+                    st = e.stat()
+                except FileNotFoundError:
+                    continue  # a racing writer's lock/tmp, already gone
+                out.append(
+                    FileInfo(e.path, st.st_size, int(st.st_mtime * 1000))
+                )
+    except FileNotFoundError:
+        return None
+    return out
+
+
+def _committed(files: list[FileInfo] | None) -> dict[int, FileInfo]:
+    """{version: listing entry} of the committed manifests among a
+    `_manifest_listing`."""
+    out = {}
+    for fi in files or ():
+        m = _MANIFEST_NAME.fullmatch(fi.path.rsplit("/", 1)[-1])
+        if m:
+            out[int(m.group(1))] = fi
+    return out
+
+
+def current_version(spark: SparkSession | None, table_dir: str) -> int:
     """Highest COMMITTED version (0 if the table doesn't exist yet).
     Reads only the manifest listing — metadata-sized."""
-    root = f"{table_dir}/{_MANIFESTS}"
-    if not path_exists(spark, root):
-        return 0
-    best = 0
-    for fi in list_files(spark, root):
-        name = fi.path.rsplit("/", 1)[-1]
-        if name.startswith("v") and name.endswith(".json"):
-            best = max(best, int(name[1:-5]))
-    return best
+    return max(_committed(_manifest_listing(spark, table_dir)), default=0)
+
+
+def _snapshot(
+    spark: SparkSession | None,
+    table_dir: str,
+    version: int | None = None,
+    empty_ok: bool = False,
+) -> tuple[int, dict | None]:
+    """``(version, manifest)`` of one snapshot — ``version``, default
+    the head: the one way a verb loads the manifest it plans against.
+    Raises ValueError for a table with no committed versions
+    (``empty_ok``: the head of an empty table is ``(0, None)`` — the
+    first-write paths), a version past the head, and a version whose
+    manifest retention removed ("expired")."""
+    cur = current_version(spark, table_dir)
+    if cur <= 0 and version is None:
+        if empty_ok:
+            return 0, None
+        raise ValueError(f"no committed versions at {table_dir}")
+    v = cur if version is None else version
+    if not 0 < v <= cur:
+        raise ValueError(
+            f"version {v} not committed at {table_dir} (current {cur})"
+        )
+    p = _manifest_path(table_dir, v)
+    if not _exists(spark, p):
+        raise ValueError(f"version {v} expired at {table_dir}")
+    return v, _read_json(spark, p)
 
 
 @dataclass(frozen=True)
@@ -335,16 +422,14 @@ def _footer_file_stats(
     schema (array/map/struct null counts are leaf-level in footers,
     not row-level), ambiguity (a partition column also present in
     the file), or decode surprise returns ``None``."""
-    import os
-    from urllib.parse import unquote, urlparse
+    from urllib.parse import unquote
 
-    parsed = urlparse(table_dir)
-    if parsed.scheme not in ("", "file") or schema is None:
+    base = _local(table_dir)
+    if base is None or schema is None:
         return None
     for f in schema.fields:
         if "<" in f.dataType.simpleString():
             return None  # nested type: footer null counts are leaf-level
-    base = parsed.path if parsed.scheme else table_dir
     root = os.path.join(base, *rel_dir.split("/"))
     try:
         import pyarrow.parquet as _pq
@@ -1202,10 +1287,7 @@ def write_version(
                 last = e
         raise last
     spark = df.sparkSession
-    cur = current_version(spark, table_dir)
-    prev = (
-        _read_json(spark, _manifest_path(table_dir, cur)) if cur >= 1 else None
-    )
+    cur, prev = _snapshot(spark, table_dir, empty_ok=True)
     part_cols = list(partition_by) if partition_by else None
     part_exprs = dict(partition_exprs) if partition_exprs else None
     if mode == "append" and prev is not None:
@@ -1268,7 +1350,7 @@ def write_version(
         else:  # legacy manifests: per-version txn_id field, scan down
             for past in range(cur, 0, -1):
                 p = _manifest_path(table_dir, past)
-                if not path_exists(spark, p):
+                if not _exists(spark, p):
                     break  # older manifests expired — ids gone too
                 if _read_json(spark, p).get("txn_id") == txn_id:
                     return past
@@ -1523,16 +1605,7 @@ def read_version(
     A multi-path parquet scan — pushdown/pruning apply per file;
     logically-deleted rows (see `delete_rows`) are subtracted by an
     anti-join against the scoped tombstone set."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0 or v > cur:
-        raise ValueError(
-            f"version {v} not committed at {table_dir} (current {cur})"
-        )
-    p = _manifest_path(table_dir, v)
-    if not path_exists(spark, p):
-        raise ValueError(f"version {v} expired at {table_dir}")
-    man = _read_json(spark, p)
+    _, man = _snapshot(spark, table_dir, version)
     return _scan_with_deletes(spark, table_dir, man)
 
 
@@ -1565,13 +1638,11 @@ def version_asof(spark: SparkSession, table_dir: str, ts) -> int:
     mtime. O(versions) metadata reads — listing-scale, no data
     touched. Raises if the table has no version that old."""
     ts = _ts_to_epoch(ts)
-    root = f"{table_dir}/{_MANIFESTS}"
-    if not path_exists(spark, root):
+    committed = _committed(_manifest_listing(spark, table_dir))
+    if not committed:
         raise ValueError(f"no committed versions at {table_dir}")
     best = 0
-    for fi in list_files(spark, root, "v*.json"):
-        name = fi.path.rsplit("/", 1)[-1]
-        v = int(name[1:-5])
+    for v, fi in committed.items():
         man = _read_json(spark, _manifest_path(table_dir, v))
         at = man.get("committed_at", fi.mtime_ms / 1000.0)
         if at <= ts:
@@ -1601,10 +1672,7 @@ def describe_detail(
     reclaim), zonemap column coverage, commit stamp, and the index
     sidecars present. No data files are opened."""
     cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if not (0 < v <= cur):
-        raise ValueError(f"no version {v} at {table_dir} (current {cur})")
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    v, man = _snapshot(spark, table_dir, version)
     live = _live_rel_files(spark, table_dir, man)
     sizes = {
         _rel_of(fi.path, d): fi.size
@@ -1726,14 +1794,8 @@ def register_versioned(
     # EXPIRED version too, O(lifetime versions) RPCs on a long-lived
     # table whose retention keeps only a recent window
     rows = []
-    surviving: list[int] = []
-    mdir = f"{table_dir}/{_MANIFESTS}"
-    if path_exists(spark, mdir):
-        for fi in list_files(spark, mdir, "v*.json"):
-            m = re.search(r"v(\d+)\.json$", fi.path)
-            if m and int(m.group(1)) <= cur:
-                surviving.append(int(m.group(1)))
-    surviving = sorted(set(surviving), reverse=True)
+    listed = _committed(_manifest_listing(spark, table_dir))
+    surviving = sorted((v for v in listed if v <= cur), reverse=True)
     if history_limit is not None:
         surviving = surviving[:history_limit]
     for v in surviving:
@@ -1775,13 +1837,12 @@ def repair_table(
     Returns counts per category."""
     import time
 
-    root = f"{table_dir}/{_MANIFESTS}"
     out = {"stale_locks": 0, "orphan_tmps": 0}
-    if not path_exists(spark, root):
+    files = _manifest_listing(spark, table_dir)
+    if files is None:
         return out
-    fs, _, jvm = _fs(spark, root)
+    fs, _, jvm = _fs(spark, f"{table_dir}/{_MANIFESTS}")
     now_ms = time.time() * 1000.0
-    files = list_files(spark, root)
     names = {fi.path.rsplit("/", 1)[-1] for fi in files}
     for fi in files:
         name = fi.path.rsplit("/", 1)[-1]
@@ -1842,10 +1903,7 @@ def delete_rows(
         )
     if not keys_df.columns:
         raise ValueError("keys_df must have at least one key column")
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    prev = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, prev = _snapshot(spark, table_dir)
     if txn_id is not None and "recent_txns" in prev:
         for t, ver in prev["recent_txns"]:
             if t == txn_id:
@@ -2303,10 +2361,7 @@ def update_where(
         )
     if not assign:
         raise ValueError("UPDATE needs at least one SET column")
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     if txn_id is not None and "recent_txns" in man:
         for t, ver in man["recent_txns"]:
             if t == txn_id:
@@ -2824,17 +2879,8 @@ def _pruned_scan(
     rule for ``(…) OR (…)``; an unparseable group disables pruning by
     construction (its empty any() never proves anything). Each group
     derives its own generated-partition predicates."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0 or v > cur:
-        raise ValueError(
-            f"version {v} not committed at {table_dir} (current {cur})"
-        )
     if man is None:
-        p = _manifest_path(table_dir, v)
-        if not path_exists(spark, p):
-            raise ValueError(f"version {v} expired at {table_dir}")
-        man = _read_json(spark, p)
+        _, man = _snapshot(spark, table_dir, version)
     stats = man.get("stats", {})
     prune_groups = [
         list(g) + _derived_partition_predicates(spark, man, g)
@@ -3144,18 +3190,14 @@ def read_version_where(
         version = resolve_tag(spark, table_dir, tag)
     if asof is not None:
         version = version_asof(spark, table_dir, asof)
-    if version is None:
-        # pin the snapshot ONCE: the DPP key cut, the Bloom probe and
-        # the final scan must all see the SAME manifest. Resolving
-        # current_version independently per step would let a
-        # concurrent commit land between resolutions, so an
-        # admitted-files set built from the OLDER manifest intersects
-        # the NEWER scan and silently drops the new files' rows — a
-        # snapshot-isolation violation commit_retries makes likelier.
-        version = current_version(spark, table_dir)
-    man_pin: dict | None = None
-    if version > 0 and path_exists(spark, _manifest_path(table_dir, version)):
-        man_pin = _read_json(spark, _manifest_path(table_dir, version))
+    # pin the snapshot ONCE: the DPP key cut, the Bloom probe and the
+    # final scan must all see the SAME manifest. Resolving the head
+    # independently per step would let a concurrent commit land
+    # between resolutions, so an admitted-files set built from the
+    # OLDER manifest intersects the NEWER scan and silently drops the
+    # new files' rows — a snapshot-isolation violation commit_retries
+    # makes likelier.
+    version, man_pin = _snapshot(spark, table_dir, version)
 
     groups = _where_pruning_groups(spark, where)
     preds = groups[0] if len(groups) == 1 else []
@@ -3184,14 +3226,11 @@ def read_version_where(
             dpp_hint = False
         else:
             keys = sorted(r["__k"] for r in rows_k if r["__k"] is not None)
-            if man_pin is not None:
-                allowed = (
-                    _semijoin_allowed_files(
-                        spark, table_dir, man_pin, pcol, keys
-                    )
-                    if keys
-                    else set()
-                )
+            allowed = (
+                _semijoin_allowed_files(spark, table_dir, man_pin, pcol, keys)
+                if keys
+                else set()
+            )
     # '=' probes the Bloom sidecar directly; a small IN list probes
     # once per value and unions the admissions (a file may hold any
     # of the values) — capped so a huge list can't turn plan time
@@ -3205,50 +3244,47 @@ def read_version_where(
         for _, op, val in g
     )
     if has_eq:
-        if man_pin is not None:
-            man = man_pin
-            v = version
-            schema = _man_schema(man)
-            if schema is not None:
-                from tms_etl_spark.operators.bloomindex import (
-                    bloom_admitted_files,
-                )
+        schema = _man_schema(man_pin)
+        if schema is not None:
+            from tms_etl_spark.operators.bloomindex import (
+                bloom_admitted_files,
+            )
 
-                types = {f.name: f.dataType.simpleString() for f in schema}
+            types = {f.name: f.dataType.simpleString() for f in schema}
 
-                def _group_admission(g: list[tuple]) -> set[str] | None:
-                    acc: set[str] | None = None
-                    for c, op, val in g:
-                        if op == "=":
-                            xs = [val]
-                        elif op == "in" and len(val) <= 16:
-                            xs = list(val)
-                        else:
-                            continue
-                        if c not in types:
-                            continue
-                        # one multi-value probe per conjunct: the
-                        # admission is the union over the IN values,
-                        # computed in a single sidecar pass (r9)
-                        adm_union = bloom_admitted_files(
-                            spark, table_dir, man, c, xs, v, types[c]
-                        )
-                        if adm_union is not None:
-                            acc = (
-                                adm_union
-                                if acc is None
-                                else acc & adm_union
-                            )
-                    return acc
-
-                adms = [_group_admission(g) for g in groups]
-                if all(a is not None for a in adms):
-                    bloom_all = set().union(*adms)
-                    allowed = (
-                        bloom_all
-                        if allowed is None
-                        else allowed & bloom_all
+            def _group_admission(g: list[tuple]) -> set[str] | None:
+                acc: set[str] | None = None
+                for c, op, val in g:
+                    if op == "=":
+                        xs = [val]
+                    elif op == "in" and len(val) <= 16:
+                        xs = list(val)
+                    else:
+                        continue
+                    if c not in types:
+                        continue
+                    # one multi-value probe per conjunct: the
+                    # admission is the union over the IN values,
+                    # computed in a single sidecar pass (r9)
+                    adm_union = bloom_admitted_files(
+                        spark, table_dir, man_pin, c, xs, version, types[c]
                     )
+                    if adm_union is not None:
+                        acc = (
+                            adm_union
+                            if acc is None
+                            else acc & adm_union
+                        )
+                return acc
+
+            adms = [_group_admission(g) for g in groups]
+            if all(a is not None for a in adms):
+                bloom_all = set().union(*adms)
+                allowed = (
+                    bloom_all
+                    if allowed is None
+                    else allowed & bloom_all
+                )
     base = _pruned_scan(
         spark, table_dir, preds, version,
         allowed_files=allowed, groups=groups, man=man_pin,
@@ -3407,16 +3443,7 @@ def read_version_pruned_semijoin(
     cols: list[str] = [col] if isinstance(col, str) else list(col)
     if key_col is not None and len(cols) != 1:
         raise ValueError("key_col renaming is single-column only")
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0 or v > cur:
-        raise ValueError(
-            f"version {v} not committed at {table_dir} (current {cur})"
-        )
-    p = _manifest_path(table_dir, v)
-    if not path_exists(spark, p):
-        raise ValueError(f"version {v} expired at {table_dir}")
-    man = _read_json(spark, p)
+    _, man = _snapshot(spark, table_dir, version)
     kcs = [key_col] if key_col is not None else cols
     residual_keys = keys_df.select(
         *[F.col(kc).alias(c) for kc, c in zip(kcs, cols)]
@@ -3534,11 +3561,10 @@ def rollback(
         raise ValueError("pass exactly one of to_version / to_tag")
     if to_tag is not None:
         to_version = resolve_tag(spark, table_dir, to_tag)
-    cur = current_version(spark, table_dir)
+    cur, head = _snapshot(spark, table_dir)
     if not (1 <= to_version <= cur):
         raise ValueError(f"cannot roll back to v{to_version} (current {cur})")
     man = _read_json(spark, _manifest_path(table_dir, to_version))
-    head = _read_json(spark, _manifest_path(table_dir, cur))
     v = cur + 1
     payload = {
         "version": v,
@@ -3587,14 +3613,7 @@ def tag_version(
 
     if not _TAG_NAME_RE.match(name):
         raise ValueError(f"invalid tag name {name!r}")
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0 or v > cur:
-        raise ValueError(
-            f"version {v} not committed at {table_dir} (current {cur})"
-        )
-    if not path_exists(spark, _manifest_path(table_dir, v)):
-        raise ValueError(f"version {v} expired at {table_dir}")
+    v, _ = _snapshot(spark, table_dir, version)
     _write_json_atomic(
         spark,
         f"{table_dir}/{_TAGS}/{name}.json",
@@ -3744,10 +3763,7 @@ def rename_column(
             commit_retries,
             lambda: rename_column(spark, table_dir, old, new),
         )
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     schema = _man_schema(man)
     if schema is None:
         raise ValueError(
@@ -3888,10 +3904,7 @@ def add_column(
         dt = T._parse_datatype_string(dtype)
     except Exception as e:  # noqa: BLE001 — surface the parse error
         raise ValueError(f"cannot parse type {dtype!r}: {e}") from e
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     schema = _man_schema(man)
     if schema is None:
         raise ValueError("add_column needs a recorded schema")
@@ -3962,10 +3975,7 @@ def drop_column(
         )
     from pyspark.sql import types as T
 
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     schema = _man_schema(man)
     if schema is None:
         raise ValueError("drop_column needs a recorded schema")
@@ -4067,10 +4077,7 @@ def enable_change_feed(
             commit_retries,
             lambda: enable_change_feed(spark, table_dir, enabled),
         )
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    prev = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, prev = _snapshot(spark, table_dir)
     if bool(prev.get("change_feed")) == bool(enabled):
         return cur
     v = cur + 1
@@ -4100,11 +4107,8 @@ def history(spark: SparkSession, table_dir: str) -> list[VersionInfo]:
     """Commit log, oldest SURVIVING version first — manifests only,
     no data access (expired versions drop out of the log)."""
     out = []
-    for v in range(1, current_version(spark, table_dir) + 1):
-        p = _manifest_path(table_dir, v)
-        if not path_exists(spark, p):
-            continue
-        man = _read_json(spark, p)
+    for v in sorted(_committed(_manifest_listing(spark, table_dir))):
+        man = _read_json(spark, _manifest_path(table_dir, v))
         out.append(VersionInfo(v, len(man["dirs"]), man.get("op", "?")))
     return out
 
@@ -4163,23 +4167,18 @@ def expire_versions(
     kept_versions = set(range(first_kept, cur + 1)) | tagged
     if older_than is not None:
         cutoff = _ts_to_epoch(older_than)
-        mdir = f"{table_dir}/{_MANIFESTS}"
-        if path_exists(spark, mdir):
-            for fi in list_files(spark, mdir, "v*.json"):
-                m = re.search(r"v(\d+)\.json$", fi.path)
-                if not m:
-                    continue
-                v = int(m.group(1))
-                if v in kept_versions or not (1 <= v <= cur):
-                    continue
-                man_t = _read_json(spark, _manifest_path(table_dir, v))
-                at = man_t.get("committed_at", fi.mtime_ms / 1000.0)
-                if at >= cutoff:
-                    kept_versions.add(v)
+        committed = _committed(_manifest_listing(spark, table_dir))
+        for v, fi in committed.items():
+            if v in kept_versions or not (1 <= v <= cur):
+                continue
+            man_t = _read_json(spark, _manifest_path(table_dir, v))
+            at = man_t.get("committed_at", fi.mtime_ms / 1000.0)
+            if at >= cutoff:
+                kept_versions.add(v)
     referenced: set[str] = set()
     for v in sorted(kept_versions):
         p = _manifest_path(table_dir, v)
-        if not path_exists(spark, p):
+        if not _exists(spark, p):
             continue  # already expired before it was tagged
         man = _read_json(spark, p)
         referenced.update(man["dirs"])
@@ -4275,10 +4274,7 @@ def optimize_version(
 
     from tms_etl_spark.sources.fs import total_size
 
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     nbytes = sum(
         total_size(spark, f"{table_dir}/{d}") for d in man["dirs"]
     )
@@ -5150,10 +5146,7 @@ def merge_version(
         if nmbs_cond is not None
         else None
     )
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     if txn_id is not None and "recent_txns" in man:
         for t, ver in man["recent_txns"]:
             if t == txn_id:
@@ -5825,10 +5818,7 @@ def optimize_incremental(
         )
     from math import ceil
 
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     live = _live_rel_files(spark, table_dir, man)
     dead = set(man.get("dead_files", []))
     covered = set()
@@ -5994,10 +5984,7 @@ def optimize_where(
             f"optimize_where: value must not be None for op {op!r} "
             "(only isnull/notnull take no value)"
         )
-    cur = current_version(spark, table_dir)
-    if cur <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, cur))
+    cur, man = _snapshot(spark, table_dir)
     stats = man.get("stats", {})
     live = _live_rel_files(spark, table_dir, man)
     covered = set()
@@ -6461,15 +6448,12 @@ def read_version_changes(
     raises rather than silently scanning both snapshots — callers
     that want a value-level diff of arbitrary snapshots should use
     `cdc_snapshot_diff`'s exceptAll pattern explicitly."""
-    cur = current_version(spark, table_dir)
-    to_v = to_version if to_version is not None else cur
-    if not (0 < from_version <= to_v <= cur):
+    to_v, man_to = _snapshot(spark, table_dir, to_version)
+    if not 0 < from_version <= to_v:
         raise ValueError(
-            f"bad version range ({from_version}, {to_v}] at {table_dir} "
-            f"(current {cur})"
+            f"bad version range ({from_version}, {to_v}] at {table_dir}"
         )
     man_from = _read_json(spark, _manifest_path(table_dir, from_version))
-    man_to = _read_json(spark, _manifest_path(table_dir, to_v))
     if man_from.get("deletes", []) != man_to.get("deletes", []):
         raise ValueError(
             f"versions {from_version}..{to_v} include a row-level "
@@ -6537,15 +6521,12 @@ def read_version_rowdiff(
     so it works retroactively on any version pair."""
     from pyspark.sql import functions as F
 
-    cur = current_version(spark, table_dir)
-    to_v = to_version if to_version is not None else cur
-    if not (0 < from_version <= to_v <= cur):
+    to_v, man_to = _snapshot(spark, table_dir, to_version)
+    if not 0 < from_version <= to_v:
         raise ValueError(
-            f"bad version range ({from_version}, {to_v}] at {table_dir} "
-            f"(current {cur})"
+            f"bad version range ({from_version}, {to_v}] at {table_dir}"
         )
     man_from = _read_json(spark, _manifest_path(table_dir, from_version))
-    man_to = _read_json(spark, _manifest_path(table_dir, to_v))
 
     live_from = _live_rel_files(spark, table_dir, man_from)
     live_to = _live_rel_files(spark, table_dir, man_to)
@@ -6772,14 +6753,11 @@ def read_version_cdf(
     `read_version_rowdiff`."""
     from pyspark.sql import functions as F
 
-    cur = current_version(spark, table_dir)
-    to_v = to_version if to_version is not None else cur
-    if not (0 < from_version <= to_v <= cur):
+    to_v, man_to = _snapshot(spark, table_dir, to_version)
+    if not 0 < from_version <= to_v:
         raise ValueError(
-            f"bad version range ({from_version}, {to_v}] at "
-            f"{table_dir} (current {cur})"
+            f"bad version range ({from_version}, {to_v}] at {table_dir}"
         )
-    man_to = _read_json(spark, _manifest_path(table_dir, to_v))
     to_schema = _man_schema(man_to)
     if to_schema is None:
         raise ValueError(
@@ -7036,19 +7014,54 @@ def commit_existing_dir(
     """Commit data files that ALREADY landed under ``table_dir/
     rel_dir`` as the next version — the manifest half of
     `write_version`, for writers that produce the files themselves
-    (the Python Data Source writer, external bulk loaders). Same
-    recent-txn idempotence, zonemap stats, and conditional-rename
-    commit; the caller guarantees the dir is complete and private."""
+    (external bulk loaders; the Python Data Source writer shares its
+    `_commit_landed_dir` half). Same recent-txn idempotence, zonemap
+    stats, and conditional commit; the caller guarantees the dir is
+    complete and private."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
-    cur = current_version(spark, table_dir)
-    prev = (
-        _read_json(spark, _manifest_path(table_dir, cur)) if cur >= 1 else None
-    )
+    cur, prev = _snapshot(spark, table_dir, empty_ok=True)
     if txn_id is not None and prev is not None and "recent_txns" in prev:
         for t, ver in prev["recent_txns"]:
             if t == txn_id:
                 return ver
+    dir_schema = _nullable_type(
+        spark.read.parquet(f"{table_dir}/{rel_dir}").schema
+    )
+    return _commit_landed_dir(
+        spark,
+        table_dir,
+        rel_dir,
+        mode,
+        cur,
+        prev,
+        dir_schema,
+        lambda rec: _dir_file_stats(spark, table_dir, rel_dir, schema=rec),
+        txn_id,
+        merge_schema,
+    )
+
+
+def _commit_landed_dir(
+    spark: SparkSession | None,
+    table_dir: str,
+    rel_dir: str,
+    mode: str,
+    cur: int,
+    prev: dict | None,
+    dir_schema,
+    dir_stats,
+    txn_id: str | None = None,
+    merge_schema: bool = False,
+) -> int:
+    """The manifest half every writer of already-landed files shares
+    (`commit_existing_dir`, the Python Data Source writer): the
+    complete, private ``rel_dir`` becomes version ``cur + 1`` on top
+    of the head manifest ``prev``. The recorded schema evolves from
+    ``prev`` (`_evolve_schema`, `_guard_revived_names`), table
+    properties and txn ids carry forward, ``dir_stats(rec_schema)``
+    gives the dir's per-file stats, and `_write_json_atomic` is the
+    commit point. ``spark`` may be None on a local table."""
     if mode == "append" and _column_map(prev):
         raise ValueError(
             "commit_existing_dir onto a column-mapped table is not "
@@ -7058,9 +7071,6 @@ def commit_existing_dir(
             "write_version instead"
         )
     v = cur + 1
-    dir_schema = _nullable_type(
-        spark.read.parquet(f"{table_dir}/{rel_dir}").schema
-    )
     rec_schema = dir_schema
     if mode == "append" and prev is not None:
         ps = _man_schema(prev)
@@ -7070,7 +7080,7 @@ def commit_existing_dir(
         # dropped_physicals — an external dir re-introducing the
         # dropped name would resurrect the old files' orphaned data
         _guard_revived_names(prev, rec_schema, "commit_existing_dir")
-    stats = _dir_file_stats(spark, table_dir, rel_dir, schema=rec_schema)
+    stats = dir_stats(rec_schema)
     dirs = [rel_dir]
     deletes: list = []
     dead_files: list = []
@@ -7145,20 +7155,13 @@ def write_version_checked(
     from pyspark.sql import functions as F
 
     spark = df.sparkSession
-    cur = current_version(spark, table_dir)
+    cur, head = _snapshot(spark, table_dir, empty_ok=True)
     # derive generated partition columns BEFORE the drift check — a
     # producer batch legitimately lacks them (that's the feature)
-    gen = dict(partition_exprs or {})
-    if cur >= 1:
-        gen = {
-            **(
-                _read_json(spark, _manifest_path(table_dir, cur)).get(
-                    "partition_exprs"
-                )
-                or {}
-            ),
-            **gen,
-        }
+    gen = {
+        **((head or {}).get("partition_exprs") or {}),
+        **(partition_exprs or {}),
+    }
     for c, e in gen.items():
         if c not in df.columns:
             df = df.withColumn(c, F.expr(e))
@@ -7460,13 +7463,7 @@ def minmax(
     scan (still a single pass for every requested column)."""
     from pyspark.sql import functions as F
 
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0 or v > cur:
-        raise ValueError(
-            f"version {v} not committed at {table_dir} (current {cur})"
-        )
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    _, man = _snapshot(spark, table_dir, version)
     mm = minmax_metadata(man, cols)
     if mm is not None:
         return mm
@@ -7489,11 +7486,7 @@ def count_rows(
     zero data I/O, so a 100 TB table's count returns in the time it
     takes to read one JSON. Tombstoned snapshots fall back to the one
     subtracted scan that defines their row set."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    _, man = _snapshot(spark, table_dir, version)
     n = count_rows_metadata(man)
     if n is not None:
         return n
@@ -7528,11 +7521,7 @@ def analyze_table(
     from the snapshot, last-writer-wins, GC'd with its version."""
     from pyspark.sql import functions as F
 
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0:
-        raise ValueError(f"no committed versions at {table_dir}")
-    man = _read_json(spark, _manifest_path(table_dir, v))
+    v, man = _snapshot(spark, table_dir, version)
     df = _scan_with_deletes(spark, table_dir, man)
     names = cols if cols is not None else df.columns
     missing = [c for c in names if c not in df.columns]
@@ -7590,10 +7579,9 @@ def read_table_stats(
 ) -> dict | None:
     """Previously-ANALYZEd statistics for a snapshot (None if that
     version was never analyzed) — one JSON read, no scan."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
+    v = version if version is not None else current_version(spark, table_dir)
     p = f"{table_dir}/_stats/v{v:06d}.json"
-    return _read_json(spark, p) if path_exists(spark, p) else None
+    return _read_json(spark, p) if _exists(spark, p) else None
 
 
 # in-memory width per Spark type, matching Catalyst's defaults

@@ -16,6 +16,16 @@ loop, which is the whole point at fleet scale.
 Reference semantics preserved (tms_colector.py:209-219 status-marker
 contract): `<loom> ---> <status>` lines, unknown lines skipped,
 latin-1 fallback for the legacy encoding (`source.py:55` discipline).
+
+The versioned-table sources (``tms_versioned`` writer and stream
+reader, ``tms_versioned_cdf``) hold no manifest code of their own:
+their driver-side halves run in Python runners without a
+SparkSession, and they list, read and commit manifests through
+`operators/versioned.py` — `current_version`, `_read_json`,
+`_snapshot` and `_commit_landed_dir` take the stdlib branch for a
+local table, so the one protocol (commit-if-absent, ``committed_at``,
+carried table properties, `ConcurrentWriteError` on a lost race)
+needs no JVM. Only the executor-side data reads live here.
 """
 
 from __future__ import annotations
@@ -32,6 +42,17 @@ from pyspark.sql.datasource import (
     InputPartition,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
+)
+
+from tms_etl_spark.operators.versioned import (
+    _cdf_step_kind,
+    _commit_landed_dir,
+    _footer_file_stats,
+    _manifest_path,
+    _nullable_type,
+    _read_json,
+    _snapshot,
+    current_version,
 )
 
 _STATUS_RE = re.compile(r"^(?P<loom>.+?)\s*--->\s*(?P<status>.+)$")
@@ -178,12 +199,12 @@ class VersionedTableWriter(DataSourceWriter):
     Executor side: each partition streams its rows into ONE parquet
     file of a version-private pending dir via pyarrow — no JVM on the
     write path. Driver side: `commit()` runs only after every task
-    succeeded and turns the pending dir into the next version through
-    `commit_existing_dir` (zonemap stats + conditional manifest
-    rename), so a half-failed write never becomes readable; `abort()`
-    leaves only an unreferenced pending dir for `expire_versions`'
-    grace-aware GC. Local/POSIX paths (tests, NFS) — object stores
-    would swap in pyarrow.fs."""
+    succeeded and commits the pending dir as the next version through
+    the versioned layer's one manifest protocol
+    (`_commit_pending_pure_python`), so a half-failed write never
+    becomes readable; `abort()` leaves only an unreferenced pending
+    dir for `expire_versions`' grace-aware GC. Local/POSIX paths
+    (tests, NFS) — object stores would swap in pyarrow.fs."""
 
     def __init__(self, schema, options: dict, overwrite: bool) -> None:
         import uuid
@@ -197,7 +218,6 @@ class VersionedTableWriter(DataSourceWriter):
         self._pending = f"data/pending-{uuid.uuid4().hex[:8]}"
 
     def write(self, rows) -> _VersionedWriteMessage:
-        import os
         import uuid
 
         import pyarrow as pa
@@ -221,7 +241,9 @@ class VersionedTableWriter(DataSourceWriter):
         n = sum(m.n_rows for m in messages if m is not None)
         if n == 0:
             return  # nothing landed; no version to commit
-        _commit_pending_pure_python(self._table, self._pending, self._mode)
+        _commit_pending_pure_python(
+            self._table, self._pending, self._mode, self._schema
+        )
 
     def abort(self, messages) -> None:
         # pending dir stays unreferenced; expire_versions GCs it
@@ -254,15 +276,12 @@ class VersionedTableDataSource(DataSource):
         if not path:
             raise ValueError("tms_versioned requires .option('path', ...)")
         table = path.removeprefix("file:")
-        cur = _current_version_py(table)
-        if cur <= 0:
-            raise ValueError(f"no committed versions at {table}")
-        man = _read_manifest_py(table, cur)
+        v, man = _snapshot(None, table)
         if man.get("schema"):
             return StructType.fromJson(_json.loads(man["schema"]))
         files = _live_files_py(table, man)
         if not files:
-            raise ValueError(f"version {cur} at {table} has no live files")
+            raise ValueError(f"version {v} at {table} has no live files")
         return from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
 
     def writer(self, schema, overwrite: bool) -> VersionedTableWriter:
@@ -273,101 +292,25 @@ class VersionedTableDataSource(DataSource):
 
 
 def _commit_pending_pure_python(
-    table_dir: str, pending_rel: str, mode: str
+    table_dir: str, pending_rel: str, mode: str, schema
 ) -> int:
-    """Manifest commit without a JVM: the Data Source writer's
-    `commit()` runs in a driver-side Python runner with no
-    SparkSession, so this mirrors `operators/versioned.py`'s protocol
-    with stdlib + pyarrow — per-file zonemaps come from parquet
-    ROW-GROUP METADATA (no data pass at all), the lock is
-    os.open(O_CREAT|O_EXCL) and the commit point an os.rename, both
-    POSIX-atomic. Manifests are format-identical, so every versioned
-    read path (time travel, pruning, CDC tail) works on tables this
-    writer produced. Local/POSIX paths only (matching the writer)."""
-    import glob
-    import json as _json
-    import os
+    """Commit the writer's pending dir as the next version. `commit()`
+    runs in a driver-side Python runner with no SparkSession, so this
+    takes the LOCAL branch of the versioned layer's one protocol: the
+    head through `_snapshot`, the shared payload and the
+    `_write_json_atomic` commit point through `_commit_landed_dir`
+    (the manifest half of `commit_existing_dir`), zonemaps from the
+    parquet footers (`_footer_file_stats`). ``schema`` is the batch's
+    Spark schema, the one every pending file was written with.
 
+    Refused, because this writer has no expression engine: a table
+    with CHECK constraints (it cannot validate them) and an append
+    whose batch lacks a carried partition column (it cannot derive
+    generated columns — schema-applied reads would null-fill them)."""
     import pyarrow.parquet as pq
 
-    man_dir = os.path.join(table_dir, "_manifests")
-    os.makedirs(man_dir, exist_ok=True)
-    cur = 0
-    for f in os.listdir(man_dir):
-        if f.startswith("v") and f.endswith(".json"):
-            cur = max(cur, int(f[1:-5]))
-    prev = None
-    if cur:
-        with open(os.path.join(man_dir, f"v{cur:06d}.json")) as fh:
-            prev = _json.load(fh)
-    v = cur + 1
-
-    stats: dict = {}
-    for fp in sorted(
-        glob.glob(os.path.join(table_dir, pending_rel, "*.parquet"))
-    ):
-        meta = pq.ParquetFile(fp).metadata
-        # per-file row count (same "__rows" key the JVM path records)
-        # keeps metadata-only COUNT(*) exact across writer mixes
-        entry: dict = {"__rows": meta.num_rows}
-        # per-column null counts (same "__nulls" key): parquet column
-        # chunks carry null_count natively, so IS [NOT] NULL pruning
-        # works on pure-Python commits too; a chunk without the stat
-        # poisons that column's count (absent = unknown, never 0)
-        nulls: dict[str, int] = {}
-        null_unknown: set[str] = set()
-        for rg in range(meta.num_row_groups):
-            g = meta.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                st = col.statistics
-                name = col.path_in_schema
-                if st is None or st.null_count is None:
-                    null_unknown.add(name)
-                else:
-                    nulls[name] = nulls.get(name, 0) + st.null_count
-                if st is None or not st.has_min_max:
-                    continue
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    try:
-                        mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
-                    except UnicodeDecodeError:
-                        continue
-                if isinstance(mn, float) and (mn != mn or mx != mx):
-                    continue
-                # mirror the JVM path's _STATS_TYPES posture: zonemaps
-                # only for JSON-native orderable types — pyarrow hands
-                # back datetime.date/datetime/Decimal for temporal and
-                # decimal columns, which the manifest's plain
-                # json.dumps cannot carry (the JVM path skips those
-                # column types for the same reason)
-                if not isinstance(mn, (bool, int, float, str)):
-                    continue
-                name = col.path_in_schema
-                if name in entry:
-                    entry[name] = [min(entry[name][0], mn),
-                                   max(entry[name][1], mx)]
-                else:
-                    entry[name] = [mn, mx]
-        known_nulls = {
-            k: n for k, n in nulls.items() if k not in null_unknown
-        }
-        if known_nulls:
-            entry["__nulls"] = known_nulls
-        rel = f"{pending_rel}/{os.path.basename(fp)}"
-        stats[rel] = entry
-
-    dirs = [pending_rel]
-    recent = list(prev.get("recent_txns", [])) if prev else []
-    deletes: list = []
-    dead_files: list = []
-    carry: dict = {}
+    cur, prev = _snapshot(None, table_dir, empty_ok=True)
     if prev is not None and prev.get("constraints"):
-        # this writer has no expression engine to validate CHECK
-        # constraints — committing unvalidated rows (or silently
-        # dropping the table property) would break the constraint
-        # contract for every later reader, so refuse outright
         raise ValueError(
             "table carries CHECK constraints "
             f"({sorted(prev['constraints'])}) — the pure-Python "
@@ -375,95 +318,45 @@ def _commit_pending_pure_python(
             "path (write_version)"
         )
     if mode == "append" and prev is not None:
-        dirs = list(prev["dirs"]) + dirs
-        stats = {**prev.get("stats", {}), **stats}
-        # tombstones and merge-dead files survive an append — dropping
-        # them here would resurrect deleted/updated rows
-        deletes = list(prev.get("deletes", []))
-        dead_files = list(prev.get("dead_files", []))
-        # table properties survive too: recorded schema, partition
-        # spec, generated-column exprs, hive-layout dirs (this writer
-        # lands PLAIN dirs, so hive_dirs only keeps still-referenced
-        # ones) — dropping them here would silently unpartition a
-        # JVM-created table on the next pure-Python append
-        for k in ("schema", "partition_by", "partition_exprs"):
-            if prev.get(k):
-                carry[k] = prev[k]
-        keep_hive = [d for d in prev.get("hive_dirs", []) if d in dirs]
-        if keep_hive:
-            carry["hive_dirs"] = keep_hive
-        # This writer does NOT derive generated partition columns (no
-        # JVM, no expression engine): a carried partition column must
-        # already be materialized in every landed file, or
-        # schema-applied reads would silently null-fill it. Fail the
-        # commit instead of committing silent NULL partition values.
-        part_cols = list(carry.get("partition_by") or []) + [
-            c
-            for c in (carry.get("partition_exprs") or {})
-            if c not in (carry.get("partition_by") or [])
-        ]
-        if part_cols:
-            for fp in sorted(
-                glob.glob(os.path.join(table_dir, pending_rel, "*.parquet"))
-            ):
-                names = set(pq.ParquetFile(fp).schema_arrow.names)
-                missing = [c for c in part_cols if c not in names]
-                if missing:
-                    raise ValueError(
-                        f"partition column(s) {missing} absent from "
-                        f"{os.path.basename(fp)}: the pure-Python writer "
-                        "cannot derive generated partition columns — "
-                        "materialize them in the batch before writing"
-                    )
-    payload = {
-        "version": v,
-        "dirs": dirs,
-        "op": mode,
-        "stats": stats,
-        "recent_txns": recent[:64],
-        **carry,
-    }
-    if deletes:
-        payload["deletes"] = deletes
-    if dead_files:
-        payload["dead_files"] = dead_files
-    target = os.path.join(man_dir, f"v{v:06d}.json")
-    lock = target + ".lock"
-    fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        os.close(fd)
-        if os.path.exists(target):
-            raise RuntimeError(f"{target} already committed")
-        tmp = f"{target}.{os.getpid()}.tmp"
-        with open(tmp, "w") as fh:
-            _json.dump(payload, fh)
-        os.rename(tmp, target)
-    finally:
-        os.unlink(lock)
-    return v
+        part_cols = set(prev.get("partition_by") or []) | set(
+            prev.get("partition_exprs") or {}
+        )
+        missing = sorted(part_cols - set(schema.fieldNames()))
+        if missing:
+            raise ValueError(
+                f"partition column(s) {missing} absent from the batch: "
+                "the pure-Python writer cannot derive generated "
+                "partition columns — materialize them in the batch "
+                "before writing"
+            )
 
+    def _stats(rec_schema) -> dict:
+        stats = _footer_file_stats(table_dir, pending_rel, rec_schema)
+        if stats is not None:
+            return stats
+        # footers cannot prove the zonemaps (nested or oversized
+        # values): record row counts only, so metadata COUNT(*) stays
+        # exact and reads stay correct, just unpruned
+        pending = os.path.join(table_dir, pending_rel)
+        return {
+            f"{pending_rel}/{f}": {
+                "__rows": pq.ParquetFile(os.path.join(pending, f))
+                .metadata.num_rows
+            }
+            for f in sorted(os.listdir(pending))
+            if f.endswith(".parquet")
+        }
 
-def _read_manifest_py(table_dir: str, version: int) -> dict:
-    import json as _json
-    import os
-
-    with open(
-        os.path.join(table_dir, "_manifests", f"v{version:06d}.json")
-    ) as fh:
-        return _json.load(fh)
-
-
-def _current_version_py(table_dir: str) -> int:
-    import os
-
-    man_dir = os.path.join(table_dir, "_manifests")
-    if not os.path.isdir(man_dir):
-        return 0
-    cur = 0
-    for f in os.listdir(man_dir):
-        if f.startswith("v") and f.endswith(".json"):
-            cur = max(cur, int(f[1:-5]))
-    return cur
+    return _commit_landed_dir(
+        None,
+        table_dir,
+        pending_rel,
+        mode,
+        cur,
+        prev,
+        _nullable_type(schema),
+        _stats,
+    )
 
 
 def _live_files_py(table_dir: str, man: dict) -> list[str]:
@@ -471,7 +364,6 @@ def _live_files_py(table_dir: str, man: dict) -> list[str]:
     Recursive: hive-partitioned dirs nest files under ``col=value``
     subdirectories, and their dead-file rel paths are nested too."""
     import glob
-    import os
 
     dead = set(man.get("dead_files", []))
     out: list[str] = []
@@ -493,8 +385,6 @@ def _tombstones_by_dir(table_dir: str, man: dict) -> dict:
     key columns — what a partition descriptor ships so `read` can
     apply tombstones EXECUTOR-SIDE (mixed key sets are refused at
     write time, so every entry shares one key tuple)."""
-    import os
-
     out: dict[str, list] = {}
     for de in man.get("deletes", []):
         keys = tuple(de.get("keys") or [de["key"]])
@@ -584,7 +474,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     def _start_version(self) -> int:
         if self._starting is not None:
             if str(self._starting).lower() == "latest":
-                return _current_version_py(self._table)
+                return current_version(None, self._table)
             try:
                 sv = int(self._starting)
             except (TypeError, ValueError):
@@ -633,7 +523,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return n, b
 
     def latestOffset(self) -> dict:
-        cur = _current_version_py(self._table)
+        cur = current_version(None, self._table)
         if not self._max_files and not self._max_bytes:
             self._cursor = cur
             return {"version": cur}
@@ -659,9 +549,13 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         end = start
         files = size = 0
         try:
-            prev_man = _read_manifest_py(self._table, end) if end else None
+            prev_man = (
+                _read_json(None, _manifest_path(self._table, end))
+                if end
+                else None
+            )
             while end < cur:
-                man = _read_manifest_py(self._table, end + 1)
+                man = _read_json(None, _manifest_path(self._table, end + 1))
                 n_new, b_new = self._added_cost(prev_man, man)
                 over = (
                     self._max_files
@@ -699,7 +593,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             self._cursor = ev
         if ev <= sv:
             return [_FilePartition("")]
-        man_end = _read_manifest_py(self._table, ev)
+        man_end = _read_json(None, _manifest_path(self._table, ev))
         if sv == 0:
             # DV-aware initial snapshot (r12): active deletion
             # vectors ship IN the partition descriptors and are
@@ -711,7 +605,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             # per-file vector scope.)
             return self._snapshot_partitions(man_end)
         else:
-            man_start = _read_manifest_py(self._table, sv)
+            man_start = _read_json(None, _manifest_path(self._table, sv))
             tolerant = self._ignore_changes
             if man_start.get("deletes", []) != man_end.get(
                 "deletes", []
@@ -752,8 +646,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # appended rows (or a rewrite under ignoreChanges): apply the
         # END manifest's vectors to the emitted files so rows deleted
         # within the batch's own range never reach the stream
-        import os
-
         dels = _tombstones_by_dir(self._table, man_end)
         # renamed columns carry PHYSICAL names in data files (r13 fix,
         # same pairing the snapshot path ships)
@@ -790,7 +682,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         executor-side in read) and, for CDF readers, the constant
         change metadata."""
         import glob
-        import os
 
         dels = _tombstones_by_dir(self._table, man)
         dead = set(man.get("dead_files", []))
@@ -835,7 +726,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     def read(self, partition: _FilePartition):
         if not partition.path:
             return iter(())
-        import os
         from urllib.parse import unquote
 
         import pyarrow as pa
@@ -1012,8 +902,6 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
         the plain costing counts — cost the sidecar files/bytes so
         maxFilesPerTrigger/maxBytesPerTrigger actually throttle
         sidecar-heavy ranges (they costed 0 before, r13)."""
-        import os
-
         if prev_man is None or "changes" not in man:
             return super()._added_cost(prev_man, man)
         rel = man["changes"]
@@ -1057,10 +945,10 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
         # refuse, not silently adopt the newest mapping (r13 review
         # finding).
         resolved: dict | None = None
-        v = _current_version_py(self._table)
+        v = current_version(None, self._table)
         while v > 0:
             try:
-                man = _read_manifest_py(self._table, v)
+                man = _read_json(None, _manifest_path(self._table, v))
             except FileNotFoundError:
                 break  # expired by retention — nothing older exists
             sch = man.get("schema")
@@ -1101,9 +989,6 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
 
     def partitions(self, start: dict, end: dict):
         import glob
-        import os
-
-        from tms_etl_spark.operators.versioned import _cdf_step_kind
 
         sv, ev = start["version"], end["version"]
         if self._cursor is None or ev > self._cursor:
@@ -1112,7 +997,7 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
             return [_FilePartition("")]
         if sv == 0:
             return self._snapshot_partitions(
-                _read_manifest_py(self._table, ev)
+                _read_json(None, _manifest_path(self._table, ev))
             )
         cmap_decl = self._declared_cmap()
         decl_cols = [
@@ -1137,9 +1022,9 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
             return tuple(out)
 
         parts: list[_FilePartition] = []
-        prev = _read_manifest_py(self._table, sv)
+        prev = _read_json(None, _manifest_path(self._table, sv))
         for v in range(sv + 1, ev + 1):
-            man = _read_manifest_py(self._table, v)
+            man = _read_json(None, _manifest_path(self._table, v))
             kind, arg = _cdf_step_kind(prev, man)
             if kind == "sidecar" and arg:
                 rmap_v = {
@@ -1206,11 +1091,7 @@ class VersionedTableCdfDataSource(DataSource):
             raise ValueError(
                 "tms_versioned_cdf requires .option('path', ...)"
             )
-        table = path.removeprefix("file:")
-        cur = _current_version_py(table)
-        if cur <= 0:
-            raise ValueError(f"no committed versions at {table}")
-        man = _read_manifest_py(table, cur)
+        _, man = _snapshot(None, path.removeprefix("file:"))
         if not man.get("schema"):
             raise ValueError(
                 "change feed requires a recorded table schema "

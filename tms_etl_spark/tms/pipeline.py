@@ -181,8 +181,7 @@ def import_daily_versioned(
     merge cost via the tuple zonemap cut instead of month-partition
     overwrite."""
     from tms_etl_spark.operators.versioned import (
-        _manifest_path,
-        _read_json,
+        _snapshot,
         count_rows_metadata,
         current_version,
         merge_version,
@@ -199,7 +198,7 @@ def import_daily_versioned(
         if current_version(spark, table_dir) == 0:
             # first load: desligado rows may insert (no prior record);
             # month partitioning becomes a table property
-            write_version(
+            committed = write_version(
                 batch,
                 table_dir,
                 "append",
@@ -208,7 +207,7 @@ def import_daily_versioned(
                 commit_retries=commit_retries,
             )
         else:
-            merge_version(
+            committed = merge_version(
                 spark,
                 table_dir,
                 batch,
@@ -225,22 +224,22 @@ def import_daily_versioned(
             )
     if not months_touched:
         return ImportStats(batch_rows=batch_rows, table_rows=0)
-    # Touched-month stat: the committed manifest's per-file row counts
-    # answer it with zero data I/O when every live file is provably
-    # outside the touched months or pure on one of them; pending
-    # deletes, stat-less or month-spanning files fall back to a scan.
+    # Touched-month stat, as of the version THIS import committed (a
+    # later writer's commit is not counted): that manifest's per-file
+    # row counts answer it with zero data I/O when every live file is
+    # provably outside the touched months or pure on one of them;
+    # pending deletes, stat-less or month-spanning files fall back to
+    # a scan of the same version.
     # The scan filters with a Column predicate, NOT an interpolated
     # SQL string: `month` is data-derived (substring of DataTurno from
     # CSVs), and a malformed value containing a quote would break the
     # expression AFTER the merge already committed. `month` is the
     # hive partition column, so Catalyst partition-prunes the isin.
-    man = _read_json(
-        spark, _manifest_path(table_dir, current_version(spark, table_dir))
-    )
+    _, man = _snapshot(spark, table_dir, committed)
     table_rows = count_rows_metadata(man, ("month", months_touched))
     if table_rows is None:
         table_rows = (
-            read_version(spark, table_dir)
+            read_version(spark, table_dir, committed)
             .where(F.col("month").isin(months_touched))
             .count()
         )

@@ -17,14 +17,32 @@ BOM), with ``encoding=`` for latin-1/cp1252 roots.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tms_etl_spark.sources.fs import _fs
 from tms_etl_spark.tms.schema import RAW_SCHEMA, with_types
 
 MONTH_DIR_RE = r"^\d{4}-\d{2}$"  # /root/reference/src/main_02.py:812
+
+
+def _month_daily_dirs(spark: SparkSession, root: str) -> list[str]:
+    """``{root}/<month>/daily/`` for every child of ``root`` that is
+    named like a month (`MONTH_DIR_RE`, the reference's dir filter) and
+    has a ``daily`` subdirectory — one listing of the root, so stray
+    trees (``backup/daily/``) are never ingested and Spark is handed
+    plain dirs, not a glob its metadata probe warns about."""
+    fs, _, jvm = _fs(spark, root)
+    hits = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{root}/*/daily"))
+    months = sorted(
+        st.getPath().getParent().getName()
+        for st in hits or []
+        if st.isDirectory()
+    )
+    return [f"{root}/{m}/daily/" for m in months if re.match(MONTH_DIR_RE, m)]
 
 
 def read_daily_raw(
@@ -37,12 +55,18 @@ def read_daily_raw(
 
     ``root`` holds ``<month>/daily/*.csv`` (the reference's layout
     with ``month=YYYY-MM``). ``months`` prunes the listing to those
-    partitions — list-time pruning, not a scan-then-filter.
+    partitions — list-time pruning, not a scan-then-filter; without
+    it every month dir of the root is read. A root with no month dir
+    raises Spark's path-not-found error.
     """
     if months:
         paths = [f"{root}/{m}/daily/" for m in months]
     else:
-        paths = [f"{root}/*/daily/"]
+        # no month dir: a month-shaped glob that matches nothing keeps
+        # Spark's path-not-found error
+        paths = _month_daily_dirs(spark, root) or [
+            f"{root}/[0-9][0-9][0-9][0-9]-[0-9][0-9]/daily/"
+        ]
     return spark.read.schema(RAW_SCHEMA).csv(
         paths,
         header=False,

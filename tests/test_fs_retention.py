@@ -14,7 +14,9 @@ from pyspark.sql import functions as F
 
 from tms_etl_spark.operators.merge import upsert_partitioned
 from tms_etl_spark.sources.fs import (
+    _fs,
     expire_files,
+    list_dirs,
     list_files,
     path_exists,
     total_size,
@@ -80,6 +82,50 @@ def test_path_exists_and_listing(spark, tmp_path):
     assert total_size(spark, str(d), pattern="*.parquet") == 4
     names = {os.path.basename(f.path) for f in list_files(spark, str(d))}
     assert names == {"a.parquet", "_SUCCESS"}
+
+
+def test_local_listing_matches_hadoop(spark, tmp_path):
+    """The stdlib branch of `list_files` / `list_dirs` gives Hadoop's
+    answer on a local table: the same ``file:`` paths, sizes and
+    millisecond mtimes as Hadoop's own recursive ``listFiles``, no
+    checksum files, the same byte total (optimize sizes its rewrite
+    from it) and the same child dirs as ``listStatus``."""
+    from tms_etl_spark.operators.versioned import write_version
+
+    tdir = str(tmp_path / "vt")
+    df = spark.range(0, 40).select(
+        F.col("id"), (F.col("id") % 3).alias("part")
+    )
+    write_version(df.repartition(2), tdir, "append", partition_by=["part"])
+    (version_dir,) = list_dirs(spark, f"{tdir}/data")
+
+    fs, hroot, _ = _fs(spark, version_dir.path)
+    hadoop = set()
+    it = fs.listFiles(hroot, True)
+    while it.hasNext():
+        st = it.next()
+        hadoop.add(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        )
+    listed = list_files(None, version_dir.path)
+    assert {(f.path, f.size, f.mtime_ms) for f in listed} == hadoop
+    assert any(name.endswith(".crc") for name in os.listdir(
+        version_dir.path.removeprefix("file:")
+    ))
+    assert not any(f.path.endswith(".crc") for f in listed)
+    assert total_size(None, version_dir.path) == sum(s for _, s, _ in hadoop)
+
+    hadoop_dirs = {
+        (st.getPath().toString(), st.getModificationTime())
+        for st in fs.listStatus(hroot)
+        if st.isDirectory()
+    }
+    assert len(hadoop_dirs) == 3  # part=0, part=1, part=2
+    assert {
+        (d.path, d.mtime_ms) for d in list_dirs(None, version_dir.path)
+    } == hadoop_dirs
+    assert list_files(None, str(tmp_path / "absent")) == []
+    assert list_dirs(None, str(tmp_path / "absent")) == []
 
 
 def test_upsert_partitioned_update_path(spark, tmp_path):

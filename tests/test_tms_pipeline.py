@@ -286,13 +286,18 @@ def test_plan_building_py4j_budget(spark, lake, tmp_path):
     ``read_version`` and 7,404 for ``prepare_batch(read_daily(...))``
     on this fixture. Manifest metadata on a local table never touches
     the JVM: the Hadoop listing and read made 26 and 17 sends here
-    (38 and 32 on a cold 3-version table), and ``read_version`` 144."""
+    (38 and 32 on a cold 3-version table), and ``read_version`` 144.
+    Nor does a local listing or probe: through Hadoop ``path_exists``
+    made 9 sends, ``list_files`` 63-65 and ``_dir_has_parquet`` (run
+    by every commit) 65."""
     from tms_etl_spark.operators.versioned import (
+        _dir_has_parquet,
         _manifest_path,
         _read_json,
         current_version,
         read_version,
     )
+    from tms_etl_spark.sources.fs import list_dirs, list_files, path_exists
 
     tdir = str(tmp_path / "vt")
     import_daily_versioned(spark, lake, tdir)
@@ -304,6 +309,14 @@ def test_plan_building_py4j_budget(spark, lake, tmp_path):
         == 0
     )
     assert _py4j_sends(spark, lambda: read_version(spark, tdir)) <= 138
+    (data_dir, *_) = list_dirs(spark, f"{tdir}/data")
+    for probe in (
+        lambda: path_exists(spark, data_dir.path),
+        lambda: list_files(spark, data_dir.path),
+        lambda: list_dirs(spark, f"{tdir}/data"),
+        lambda: _dir_has_parquet(spark, data_dir.path),
+    ):
+        assert _py4j_sends(spark, probe) == 0
     prepare_batch(read_daily(spark, lake))
     assert (
         _py4j_sends(spark, lambda: prepare_batch(read_daily(spark, lake)))

@@ -477,6 +477,26 @@ def test_commit_existing_dir_external_loader(spark, tdir):
     assert read_version_pruned(spark, tdir, "id", ">=", 100).count() == 10
 
 
+def test_commit_existing_dir_validates_check_constraints(spark, tdir):
+    """An append through commit_existing_dir carries the table's CHECK
+    constraints onto the new manifest, so a landed dir that violates
+    them is refused like a `write_version` batch: nothing commits and
+    the table reads its old rows."""
+    import pathlib
+
+    from tms_etl_spark.operators.versioned import commit_existing_dir
+
+    write_version(
+        _df(spark, 0, 3), tdir, "append", constraints={"id_nonneg": "id >= 0"}
+    )
+    ext = pathlib.Path(tdir) / "data" / "bulk-bad"
+    _df(spark, -5, -4).write.parquet(str(ext))
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        commit_existing_dir(spark, tdir, "data/bulk-bad", "append")
+    assert current_version(spark, tdir) == 1
+    assert sorted(r.id for r in read_version(spark, tdir).collect()) == [0, 1, 2]
+
+
 def test_delete_rows_logical_then_physical(spark, tdir):
     """delete_rows hides keys immediately without touching data
     files; optimize purges them physically and drops the vectors."""

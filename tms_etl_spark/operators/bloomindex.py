@@ -140,14 +140,13 @@ def extend_bloom_index(
     v, man = _snapshot(spark, table_dir, version)
     root = f"{table_dir}/_indexes/{col}"
     prev_v = 0
-    if path_exists(spark, root):
-        for fi in list_files(spark, root):
-            # list_files yields FILE paths (…/vNNN-bloom/part-*.parquet);
-            # match the dir segment, not end-of-string, else prev_v stays 0
-            # and extend always falls back to a full-table rebuild.
-            m = _re.search(r"v(\d+)-bloom(?:/|$)", fi.path)
-            if m and int(m.group(1)) < v:
-                prev_v = max(prev_v, int(m.group(1)))
+    for fi in list_files(spark, root):
+        # list_files yields FILE paths (…/vNNN-bloom/part-*.parquet);
+        # match the dir segment, not end-of-string, else prev_v stays 0
+        # and extend always falls back to a full-table rebuild.
+        m = _re.search(r"v(\d+)-bloom(?:/|$)", fi.path)
+        if m and int(m.group(1)) < v:
+            prev_v = max(prev_v, int(m.group(1)))
     if prev_v == 0:
         return build_bloom_index(spark, table_dir, col, v)
 

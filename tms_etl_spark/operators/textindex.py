@@ -144,15 +144,14 @@ def extend_text_index(
     v, man = _snapshot(spark, table_dir, version)
     root = f"{table_dir}/_indexes/text_{col}"
     prev_v = 0
-    if path_exists(spark, root):
-        for fi in list_files(spark, root):
-            # list_files yields FILE paths (…/vNNN-tokens/part-*.parquet),
-            # so the version dir is a middle segment — anchor on "/" too,
-            # not only end-of-string, or no prior sidecar is ever found
-            # and every extend silently degrades to a full rebuild.
-            m = _re.search(r"v(\d+)-tokens(?:/|$)", fi.path)
-            if m and int(m.group(1)) < v:
-                prev_v = max(prev_v, int(m.group(1)))
+    for fi in list_files(spark, root):
+        # list_files yields FILE paths (…/vNNN-tokens/part-*.parquet),
+        # so the version dir is a middle segment — anchor on "/" too,
+        # not only end-of-string, or no prior sidecar is ever found
+        # and every extend silently degrades to a full rebuild.
+        m = _re.search(r"v(\d+)-tokens(?:/|$)", fi.path)
+        if m and int(m.group(1)) < v:
+            prev_v = max(prev_v, int(m.group(1)))
     if prev_v == 0:
         return build_text_index(spark, table_dir, col, v, n_shards)
 

@@ -44,13 +44,19 @@ import os
 import re
 from dataclasses import dataclass
 from typing import Sequence
-from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
 from tms_etl_spark.operators.checkpoints import unpersist_checkpoint
 from tms_etl_spark.operators.merge import _ident
-from tms_etl_spark.sources.fs import FileInfo, _fs, list_files, path_exists
+from tms_etl_spark.sources.fs import (
+    FileInfo,
+    _fs,
+    _local,
+    list_dirs,
+    list_files,
+    path_exists,
+)
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
@@ -59,25 +65,6 @@ _MANIFEST_NAME = re.compile(r"v(\d+)\.json")
 
 def _manifest_path(table_dir: str, version: int) -> str:
     return f"{table_dir}/{_MANIFESTS}/v{version:06d}.json"
-
-
-def _local(path: str) -> str | None:
-    """The OS path of a LOCAL ``path`` (scheme '' or 'file'), None for
-    any other scheme. The one switch every manifest listing, read and
-    commit shares: local metadata goes through the stdlib (zero py4j
-    round trips, no session needed — the Python Data Source runners
-    have none), every other filesystem through Hadoop."""
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        return parsed.path if parsed.scheme else path
-    return None
-
-
-def _exists(spark: SparkSession | None, path: str) -> bool:
-    local = _local(path)
-    if local is not None:
-        return os.path.exists(local)
-    return path_exists(spark, path)
 
 
 def _read_json(spark: SparkSession | None, path: str) -> dict:
@@ -270,38 +257,13 @@ def _write_json_atomic(
         fs.delete(lock, False)
 
 
-def _manifest_listing(
+def _committed(
     spark: SparkSession | None, table_dir: str
-) -> list[FileInfo] | None:
-    """Every file in the table's ``_manifests`` dir — committed
-    manifests plus lock/tmp debris — in ONE listing, or None when the
-    dir does not exist: ``os.scandir`` for a local table, Hadoop for
-    any other scheme."""
-    root = f"{table_dir}/{_MANIFESTS}"
-    local = _local(root)
-    if local is None:
-        return list_files(spark, root) if path_exists(spark, root) else None
-    out = []
-    try:
-        with os.scandir(local) as it:
-            for e in it:
-                try:
-                    st = e.stat()
-                except FileNotFoundError:
-                    continue  # a racing writer's lock/tmp, already gone
-                out.append(
-                    FileInfo(e.path, st.st_size, int(st.st_mtime * 1000))
-                )
-    except FileNotFoundError:
-        return None
-    return out
-
-
-def _committed(files: list[FileInfo] | None) -> dict[int, FileInfo]:
-    """{version: listing entry} of the committed manifests among a
-    `_manifest_listing`."""
+) -> dict[int, FileInfo]:
+    """{version: listing entry} of the table's committed manifests —
+    ONE listing of its ``_manifests`` dir (lock/tmp debris skipped)."""
     out = {}
-    for fi in files or ():
+    for fi in list_files(spark, f"{table_dir}/{_MANIFESTS}"):
         m = _MANIFEST_NAME.fullmatch(fi.path.rsplit("/", 1)[-1])
         if m:
             out[int(m.group(1))] = fi
@@ -311,7 +273,7 @@ def _committed(files: list[FileInfo] | None) -> dict[int, FileInfo]:
 def current_version(spark: SparkSession | None, table_dir: str) -> int:
     """Highest COMMITTED version (0 if the table doesn't exist yet).
     Reads only the manifest listing — metadata-sized."""
-    return max(_committed(_manifest_listing(spark, table_dir)), default=0)
+    return max(_committed(spark, table_dir), default=0)
 
 
 def _snapshot(
@@ -337,7 +299,7 @@ def _snapshot(
             f"version {v} not committed at {table_dir} (current {cur})"
         )
     p = _manifest_path(table_dir, v)
-    if not _exists(spark, p):
+    if not path_exists(spark, p):
         raise ValueError(f"version {v} expired at {table_dir}")
     return v, _read_json(spark, p)
 
@@ -1350,7 +1312,7 @@ def write_version(
         else:  # legacy manifests: per-version txn_id field, scan down
             for past in range(cur, 0, -1):
                 p = _manifest_path(table_dir, past)
-                if not _exists(spark, p):
+                if not path_exists(spark, p):
                     break  # older manifests expired — ids gone too
                 if _read_json(spark, p).get("txn_id") == txn_id:
                     return past
@@ -1638,7 +1600,7 @@ def version_asof(spark: SparkSession, table_dir: str, ts) -> int:
     mtime. O(versions) metadata reads — listing-scale, no data
     touched. Raises if the table has no version that old."""
     ts = _ts_to_epoch(ts)
-    committed = _committed(_manifest_listing(spark, table_dir))
+    committed = _committed(spark, table_dir)
     if not committed:
         raise ValueError(f"no committed versions at {table_dir}")
     best = 0
@@ -1684,15 +1646,10 @@ def describe_detail(
     for de in man.get("deletes", []):
         for fi in list_files(spark, f"{table_dir}/{de['dir']}", "*.parquet"):
             tomb_rows += 1  # tombstone FILES (row count would open them)
-    indexes = []
-    idx_root = f"{table_dir}/_indexes"
-    if path_exists(spark, idx_root):
-        fs, hroot, _ = _fs(spark, idx_root)
-        indexes = sorted(
-            s.getPath().getName()
-            for s in fs.listStatus(hroot)
-            if s.isDirectory()
-        )
+    indexes = sorted(
+        fi.path.rsplit("/", 1)[-1]
+        for fi in list_dirs(spark, f"{table_dir}/_indexes")
+    )
     return {
         "version": v,
         "current_version": cur,
@@ -1794,7 +1751,7 @@ def register_versioned(
     # EXPIRED version too, O(lifetime versions) RPCs on a long-lived
     # table whose retention keeps only a recent window
     rows = []
-    listed = _committed(_manifest_listing(spark, table_dir))
+    listed = _committed(spark, table_dir)
     surviving = sorted((v for v in listed if v <= cur), reverse=True)
     if history_limit is not None:
         surviving = surviving[:history_limit]
@@ -1838,8 +1795,8 @@ def repair_table(
     import time
 
     out = {"stale_locks": 0, "orphan_tmps": 0}
-    files = _manifest_listing(spark, table_dir)
-    if files is None:
+    files = list_files(spark, f"{table_dir}/{_MANIFESTS}")
+    if not files:
         return out
     fs, _, jvm = _fs(spark, f"{table_dir}/{_MANIFESTS}")
     now_ms = time.time() * 1000.0
@@ -3626,8 +3583,6 @@ def list_tags(spark: SparkSession, table_dir: str) -> dict[str, int]:
     """All tags of a table: name → version. One listing of the tag
     dir + one tiny JSON read per tag."""
     root = f"{table_dir}/{_TAGS}"
-    if not path_exists(spark, root):
-        return {}
     out: dict[str, int] = {}
     for fi in list_files(spark, root, "*.json"):
         fname = fi.path.rsplit("/", 1)[-1]
@@ -3699,18 +3654,15 @@ def _move_index_generations(
     ``text_<x>`` (its Bloom gens live beside x's token gens). The
     source dir is removed only when the move emptied it."""
     src = f"{table_dir}/_indexes/{src_name}"
-    if not path_exists(spark, src):
+    moving = [
+        g
+        for fi in list_dirs(spark, src)
+        if (g := fi.path.rsplit("/", 1)[-1]).endswith(suffix)
+    ]
+    if not moving:
         return
     fs, hsrc, jvm = _fs(spark, src)
     Path = jvm.org.apache.hadoop.fs.Path
-    gens = [
-        c.getPath().getName()
-        for c in fs.listStatus(hsrc)
-        if c.isDirectory()
-    ]
-    moving = [g for g in gens if g.endswith(suffix)]
-    if not moving:
-        return
     dst = f"{table_dir}/_indexes/{dst_name}"
     hdst = Path(dst)
     if not fs.exists(hdst):
@@ -3719,7 +3671,7 @@ def _move_index_generations(
         d = Path(f"{dst}/{g}")
         if not fs.exists(d):
             fs.rename(Path(f"{src}/{g}"), d)
-    if not list(fs.listStatus(hsrc)):
+    if not list_dirs(spark, src) and not list_files(spark, src):
         fs.delete(hsrc, False)
 
 
@@ -4107,7 +4059,7 @@ def history(spark: SparkSession, table_dir: str) -> list[VersionInfo]:
     """Commit log, oldest SURVIVING version first — manifests only,
     no data access (expired versions drop out of the log)."""
     out = []
-    for v in sorted(_committed(_manifest_listing(spark, table_dir))):
+    for v in sorted(_committed(spark, table_dir)):
         man = _read_json(spark, _manifest_path(table_dir, v))
         out.append(VersionInfo(v, len(man["dirs"]), man.get("op", "?")))
     return out
@@ -4167,7 +4119,7 @@ def expire_versions(
     kept_versions = set(range(first_kept, cur + 1)) | tagged
     if older_than is not None:
         cutoff = _ts_to_epoch(older_than)
-        committed = _committed(_manifest_listing(spark, table_dir))
+        committed = _committed(spark, table_dir)
         for v, fi in committed.items():
             if v in kept_versions or not (1 <= v <= cur):
                 continue
@@ -4178,7 +4130,7 @@ def expire_versions(
     referenced: set[str] = set()
     for v in sorted(kept_versions):
         p = _manifest_path(table_dir, v)
-        if not _exists(spark, p):
+        if not path_exists(spark, p):
             continue  # already expired before it was tagged
         man = _read_json(spark, p)
         referenced.update(man["dirs"])
@@ -4191,33 +4143,30 @@ def expire_versions(
     # referenced by a kept manifest → survive; orphaned (lost commit
     # race) or referenced only by expired history → GC past the same
     # in-flight grace window
+    fs, _, jvm = _fs(spark, table_dir)
+    Path = jvm.org.apache.hadoop.fs.Path
     for root_rel in (_DATA, "_changes"):
-        fs, data_root, jvm = _fs(spark, f"{table_dir}/{root_rel}")
-        if not fs.exists(data_root):
-            continue
-        for status in fs.listStatus(data_root):
-            rel = f"{root_rel}/{status.getPath().getName()}"
+        for fi in list_dirs(spark, f"{table_dir}/{root_rel}"):
+            rel = f"{root_rel}/{fi.path.rsplit('/', 1)[-1]}"
             if rel in referenced:
                 continue
-            if status.getModificationTime() > floor_ms:
+            if fi.mtime_ms > floor_ms:
                 continue  # possibly an in-flight writer's dir
             if not dry_run:
-                fs.delete(status.getPath(), True)
+                fs.delete(Path(fi.path), True)
             removed += 1
     if dry_run:
         return removed
-    for v in range(1, first_kept):
-        if v in kept_versions:
-            continue  # tagged or inside the time-retention window
-        p = _manifest_path(table_dir, v)
-        fs2, hp, _ = _fs(spark, p)
-        if fs2.exists(hp):
-            fs2.delete(hp, False)
-        # derived statistics sidecars die with their version
-        sp = f"{table_dir}/_stats/v{v:06d}.json"
-        fs3, shp, _ = _fs(spark, sp)
-        if fs3.exists(shp):
-            fs3.delete(shp, False)
+    # one listing per dir, deleting the expired versions it shows;
+    # derived statistics sidecars die with their version
+    for sub in (_MANIFESTS, "_stats"):
+        for fi in list_files(spark, f"{table_dir}/{sub}"):
+            m = _MANIFEST_NAME.fullmatch(fi.path.rsplit("/", 1)[-1])
+            if m is None:
+                continue
+            v = int(m.group(1))
+            if v < first_kept and v not in kept_versions:
+                fs.delete(Path(fi.path), False)
     return removed
 
 
@@ -5825,7 +5774,6 @@ def optimize_incremental(
     for de in man.get("deletes", []):
         covered.update(de["covers"])
 
-    fs, _, jvm = _fs(spark, table_dir)
     small: list[str] = []
     big: list[str] = []
     small_bytes = 0
@@ -5833,11 +5781,11 @@ def optimize_incremental(
         rels = live.get(d, [])
         if not rels:
             continue  # fully-dead dir: drop from the new manifest
+        live_set = set(rels)
         nbytes = sum(
-            fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{table_dir}/{rel}")
-            ).getLen()
-            for rel in rels
+            fi.size
+            for fi in list_files(spark, f"{table_dir}/{d}", "*.parquet")
+            if _rel_of(fi.path, d) in live_set
         )
         has_debt = (
             nbytes / len(rels) < min_file_bytes
@@ -6891,23 +6839,17 @@ def vacuum_indexes(
     number of sidecar dirs removed."""
     import re as _re
 
-    root = f"{table_dir}/_indexes"
-    if not path_exists(spark, root):
-        return 0
-    fs, hroot, jvm = _fs(spark, root)
     removed = 0
-    for idx_status in fs.listStatus(hroot):
-        if not idx_status.isDirectory():
-            continue
-        idx_dir = idx_status.getPath()
+    for idx_dir in list_dirs(spark, f"{table_dir}/_indexes"):
         versions = []
-        for s in fs.listStatus(idx_dir):
-            m = _re.match(r"v(\d+)-", s.getPath().getName())
-            if s.isDirectory() and m:
-                versions.append((int(m.group(1)), s.getPath()))
+        for gen in list_dirs(spark, idx_dir.path):
+            m = _re.match(r"v(\d+)-", gen.path.rsplit("/", 1)[-1])
+            if m:
+                versions.append((int(m.group(1)), gen.path))
         versions.sort()
         for _, p in versions[: max(0, len(versions) - keep_last)]:
-            fs.delete(p, True)
+            fs, hp, _ = _fs(spark, p)
+            fs.delete(hp, True)
             removed += 1
     return removed
 
@@ -7016,8 +6958,8 @@ def commit_existing_dir(
     `write_version`, for writers that produce the files themselves
     (external bulk loaders; the Python Data Source writer shares its
     `_commit_landed_dir` half). Same recent-txn idempotence, zonemap
-    stats, and conditional commit; the caller guarantees the dir is
-    complete and private."""
+    stats, CHECK-constraint validation and conditional commit; the
+    caller guarantees the dir is complete and private."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown mode {mode!r}")
     cur, prev = _snapshot(spark, table_dir, empty_ok=True)
@@ -7061,7 +7003,9 @@ def _commit_landed_dir(
     ``prev`` (`_evolve_schema`, `_guard_revived_names`), table
     properties and txn ids carry forward, ``dir_stats(rec_schema)``
     gives the dir's per-file stats, and `_write_json_atomic` is the
-    commit point. ``spark`` may be None on a local table."""
+    commit point. An append validates the table's CHECK constraints
+    on the dir (`_check_constraints` deletes it on a violation).
+    ``spark`` may be None on a local table without constraints."""
     if mode == "append" and _column_map(prev):
         raise ValueError(
             "commit_existing_dir onto a column-mapped table is not "
@@ -7080,6 +7024,14 @@ def _commit_landed_dir(
         # dropped_physicals — an external dir re-introducing the
         # dropped name would resurrect the old files' orphaned data
         _guard_revived_names(prev, rec_schema, "commit_existing_dir")
+        # an append carries the table's CHECK constraints onto the new
+        # manifest, so the landed dir must satisfy them, as a
+        # `write_version` dir must (the Python Data Source writer
+        # refuses such tables before it gets here)
+        _check_constraints(
+            spark, f"{table_dir}/{rel_dir}", prev.get("constraints"),
+            rec_schema,
+        )
     stats = dir_stats(rec_schema)
     dirs = [rel_dir]
     deletes: list = []
@@ -7286,55 +7238,49 @@ def maintain_table(
     out["version"] = after
     if extend_indexes:
         exts: dict[str, str] = {}
-        root = f"{table_dir}/_indexes"
-        if path_exists(spark, root):
-            fs_i, hroot, _ = _fs(spark, root)
-            for s in fs_i.listStatus(hroot):
-                if not s.isDirectory():
-                    continue
-                name = s.getPath().getName()
-                # route by SIDECAR LAYOUT, not name prefix: a Bloom
-                # family on a column literally named ``text_<x>``
-                # shares the ``text_`` prefix with token sidecars, and
-                # a prefix route would misroute it to the text
-                # extender, fail, and let its point reads silently
-                # decay. Generation dirs disambiguate unambiguously —
-                # bloom gens end in ``-bloom``, token gens in
-                # ``-tokens`` — and one family dir may legally hold
-                # both (bloom on ``text_x`` + tokens on ``x``).
-                gens = [
-                    c.getPath().getName()
-                    for c in fs_i.listStatus(s.getPath())
-                    if c.isDirectory()
-                ]
-                kinds: list[tuple[str, str]] = []
-                if any(g.endswith("-tokens") for g in gens) and (
-                    name.startswith("text_")
-                ):
-                    kinds.append(("text", name[5:]))
-                if any(g.endswith("-bloom") for g in gens):
-                    kinds.append(("bloom", name))
-                if not kinds:
-                    exts[name] = "skipped: no recognizable generations"
-                for kind, col_k in kinds:
-                    try:
-                        if kind == "text":
-                            from tms_etl_spark.operators.textindex import (
-                                extend_text_index,
-                            )
+        for fam in list_dirs(spark, f"{table_dir}/_indexes"):
+            name = fam.path.rsplit("/", 1)[-1]
+            # route by SIDECAR LAYOUT, not name prefix: a Bloom
+            # family on a column literally named ``text_<x>``
+            # shares the ``text_`` prefix with token sidecars, and
+            # a prefix route would misroute it to the text
+            # extender, fail, and let its point reads silently
+            # decay. Generation dirs disambiguate unambiguously —
+            # bloom gens end in ``-bloom``, token gens in
+            # ``-tokens`` — and one family dir may legally hold
+            # both (bloom on ``text_x`` + tokens on ``x``).
+            gens = [
+                g.path.rsplit("/", 1)[-1]
+                for g in list_dirs(spark, fam.path)
+            ]
+            kinds: list[tuple[str, str]] = []
+            if any(g.endswith("-tokens") for g in gens) and (
+                name.startswith("text_")
+            ):
+                kinds.append(("text", name[5:]))
+            if any(g.endswith("-bloom") for g in gens):
+                kinds.append(("bloom", name))
+            if not kinds:
+                exts[name] = "skipped: no recognizable generations"
+            for kind, col_k in kinds:
+                try:
+                    if kind == "text":
+                        from tms_etl_spark.operators.textindex import (
+                            extend_text_index,
+                        )
 
-                            extend_text_index(spark, table_dir, col_k)
-                        else:
-                            from tms_etl_spark.operators.bloomindex import (
-                                extend_bloom_index,
-                            )
+                        extend_text_index(spark, table_dir, col_k)
+                    else:
+                        from tms_etl_spark.operators.bloomindex import (
+                            extend_bloom_index,
+                        )
 
-                            extend_bloom_index(spark, table_dir, col_k)
-                        exts[f"{name}:{kind}"] = "extended"
-                    except Exception as e:  # noqa: BLE001 — reported,
-                        # not silent: one stale family (dropped column,
-                        # legacy layout) must not kill the window
-                        exts[f"{name}:{kind}"] = f"error: {e}"
+                        extend_bloom_index(spark, table_dir, col_k)
+                    exts[f"{name}:{kind}"] = "extended"
+                except Exception as e:  # noqa: BLE001 — reported,
+                    # not silent: one stale family (dropped column,
+                    # legacy layout) must not kill the window
+                    exts[f"{name}:{kind}"] = f"error: {e}"
         out["extended_indexes"] = exts
     if keep_last is not None:
         out["expired_versions"] = expire_versions(
@@ -7581,7 +7527,7 @@ def read_table_stats(
     version was never analyzed) — one JSON read, no scan."""
     v = version if version is not None else current_version(spark, table_dir)
     p = f"{table_dir}/_stats/v{v:06d}.json"
-    return _read_json(spark, p) if _exists(spark, p) else None
+    return _read_json(spark, p) if path_exists(spark, p) else None
 
 
 # in-memory width per Spark type, matching Catalyst's defaults

@@ -1,9 +1,12 @@
-"""Filesystem housekeeping through Hadoop's FileSystem API.
-
-Everything here goes through ``org.apache.hadoop.fs.FileSystem`` (via
-the session JVM), not ``os``/``shutil`` — so the same code works on
-local paths in tests and on HDFS/S3A/ABFS on a real cluster, where the
-lake actually lives at 100 TB.
+"""Filesystem housekeeping — the one module that decides how a path
+is listed or probed. A LOCAL path (scheme '' or 'file', `_local`) goes
+through the stdlib: no py4j round trip, no session needed (the Python
+Data Source runners have none), and Hadoop's answer spelled Hadoop's
+way (``file:`` paths, millisecond mtimes, ``.*.crc`` checksum files
+hidden). Every other scheme (HDFS/S3A/ABFS — where the lake lives at
+100 TB) goes through ``org.apache.hadoop.fs.FileSystem`` via the
+session JVM; elsewhere `_fs` serves only mutations and remote
+manifest I/O.
 
 Operators:
 
@@ -11,9 +14,10 @@ Operators:
   instead of ``try: read / except Exception`` (a transient read error
   must NOT be mistaken for "table absent": that turns the first-write
   overwrite branch into data loss).
-- ``list_files`` / ``total_size`` — driver-side listing metadata (file
-  count, bytes, mtimes). Listing is O(files), not O(rows); sizing a
-  compaction from it avoids a full data pass.
+- ``list_files`` / ``total_size`` / ``list_dirs`` — driver-side
+  listing metadata (file count, bytes, mtimes; child dirs). Listing
+  is O(files), not O(rows); sizing a compaction from it avoids a full
+  data pass.
 - ``expire_files`` — the reference's 30-day cleanup job (SURVEY.md P6
   second half): delete lake files whose modification time is older
   than the retention window, mirroring
@@ -24,8 +28,10 @@ Operators:
 from __future__ import annotations
 
 import fnmatch
+import os
 import posixpath
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -37,10 +43,24 @@ def _fs(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
+def _local(path: str) -> str | None:
+    """The OS path of a LOCAL ``path`` (scheme '' or 'file'), None for
+    any other scheme — the one local/remote switch: every listing,
+    probe, manifest read and commit of a local path takes the stdlib
+    branch, every other scheme Hadoop's."""
+    parsed = urlparse(path)
+    if parsed.scheme in ("", "file"):
+        return parsed.path if parsed.scheme else path
+    return None
+
+
+def path_exists(spark: SparkSession | None, path: str) -> bool:
     """True iff ``path`` exists on its filesystem. An explicit probe —
     unlike catching ``Exception`` around a read, a transport error
     here surfaces instead of masquerading as 'no table'."""
+    local = _local(path)
+    if local is not None:
+        return os.path.exists(local)
     fs, hpath, _ = _fs(spark, path)
     return bool(fs.exists(hpath))
 
@@ -52,12 +72,46 @@ class FileInfo:
     mtime_ms: int
 
 
+def _local_info(path: str) -> FileInfo | None:
+    """Hadoop's status of local ``path`` (absolute), or None when it
+    vanished since it was listed (a racing writer's lock or tmp)."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    # Java reports whole milliseconds, truncated
+    return FileInfo(f"file:{path}", st.st_size, st.st_mtime_ns // 1_000_000)
+
+
+def _walk_error(err: OSError) -> None:
+    # a dir gone before it was read lists as empty (as a vanished file
+    # is skipped); any other error raises, as Hadoop's listing does
+    if not isinstance(err, FileNotFoundError):
+        raise err
+
+
 def list_files(
-    spark: SparkSession, root: str, pattern: str | None = None
+    spark: SparkSession | None, root: str, pattern: str | None = None
 ) -> list[FileInfo]:
-    """Recursive file listing under ``root`` (data files only; Spark
-    metadata like ``_SUCCESS`` is still listed — filter via
-    ``pattern`` e.g. ``*.parquet`` / ``*.csv`` if unwanted)."""
+    """Recursive file listing under ``root`` ([] when it does not
+    exist). Spark metadata like ``_SUCCESS`` is listed — filter via
+    ``pattern`` (e.g. ``*.parquet`` / ``*.csv``, matched on the file
+    name) if unwanted; checksum files never are."""
+    local = _local(root)
+    if local is not None:
+        top = os.path.abspath(local)
+        paths = [top] if os.path.isfile(top) else [
+            os.path.join(d, f)
+            for d, _dirnames, files in os.walk(top, onerror=_walk_error)
+            for f in files
+            if not (f.startswith(".") and f.endswith(".crc"))
+        ]
+        return [
+            info
+            for p in paths
+            if (pattern is None or fnmatch.fnmatch(posixpath.basename(p), pattern))
+            and (info := _local_info(p)) is not None
+        ]
     fs, hpath, _ = _fs(spark, root)
     if not fs.exists(hpath):
         return []
@@ -76,7 +130,32 @@ def list_files(
     return out
 
 
-def total_size(spark: SparkSession, root: str, pattern: str | None = None) -> int:
+def list_dirs(spark: SparkSession | None, root: str) -> list[FileInfo]:
+    """The immediate sub-directories of ``root`` with their mtimes
+    ([] when it does not exist)."""
+    local = _local(root)
+    if local is not None:
+        try:
+            with os.scandir(os.path.abspath(local)) as it:
+                subdirs = [e.path for e in it if e.is_dir()]
+        except (FileNotFoundError, NotADirectoryError):
+            return []
+        return [i for p in subdirs if (i := _local_info(p)) is not None]
+    fs, hpath, _ = _fs(spark, root)
+    if not fs.exists(hpath):
+        return []
+    return [
+        FileInfo(
+            st.getPath().toString(),
+            int(st.getLen()),
+            int(st.getModificationTime()),
+        )
+        for st in fs.listStatus(hpath)
+        if st.isDirectory()
+    ]
+
+
+def total_size(spark: SparkSession | None, root: str, pattern: str | None = None) -> int:
     """Total bytes under ``root`` from listing metadata (no data read)."""
     return sum(f.size for f in list_files(spark, root, pattern))
 

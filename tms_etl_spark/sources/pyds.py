@@ -18,14 +18,20 @@ contract): `<loom> ---> <status>` lines, unknown lines skipped,
 latin-1 fallback for the legacy encoding (`source.py:55` discipline).
 
 The versioned-table sources (``tms_versioned`` writer and stream
-reader, ``tms_versioned_cdf``) hold no manifest code of their own:
-their driver-side halves run in Python runners without a
+reader, ``tms_versioned_cdf``) hold no manifest or listing code of
+their own: their driver-side halves run in Python runners without a
 SparkSession, and they list, read and commit manifests through
 `operators/versioned.py` — `current_version`, `_read_json`,
 `_snapshot` and `_commit_landed_dir` take the stdlib branch for a
 local table, so the one protocol (commit-if-absent, ``committed_at``,
 carried table properties, `ConcurrentWriteError` on a lost race)
-needs no JVM. Only the executor-side data reads live here.
+needs no JVM. The stream readers plan from the manifest: a snapshot
+or append delta is the manifest's live-file rule
+(`_live_rel_files`, the same one the batch readers use), and the
+files a rule has no manifest entry for (change sidecars, deletion
+vectors, added dirs when costing a rate-limited trigger) come from
+`sources/fs.py`'s `list_files`. Only the executor-side data reads
+live here.
 """
 
 from __future__ import annotations
@@ -48,12 +54,15 @@ from tms_etl_spark.operators.versioned import (
     _cdf_step_kind,
     _commit_landed_dir,
     _footer_file_stats,
+    _live_rel_files,
     _manifest_path,
     _nullable_type,
     _read_json,
+    _rel_of,
     _snapshot,
     current_version,
 )
+from tms_etl_spark.sources.fs import list_files
 
 _STATUS_RE = re.compile(r"^(?P<loom>.+?)\s*--->\s*(?P<status>.+)$")
 _EXTS = (".log", ".txt")
@@ -279,10 +288,12 @@ class VersionedTableDataSource(DataSource):
         v, man = _snapshot(None, table)
         if man.get("schema"):
             return StructType.fromJson(_json.loads(man["schema"]))
-        files = _live_files_py(table, man)
-        if not files:
+        live = [r for rels in _live_rel_files(None, table, man).values() for r in rels]
+        if not live:
             raise ValueError(f"version {v} at {table} has no live files")
-        return from_arrow_schema(pq.ParquetFile(files[0]).schema_arrow)
+        return from_arrow_schema(
+            pq.ParquetFile(os.path.join(table, live[0])).schema_arrow
+        )
 
     def writer(self, schema, overwrite: bool) -> VersionedTableWriter:
         return VersionedTableWriter(schema, self.options, overwrite)
@@ -337,14 +348,13 @@ def _commit_pending_pure_python(
         # footers cannot prove the zonemaps (nested or oversized
         # values): record row counts only, so metadata COUNT(*) stays
         # exact and reads stay correct, just unpruned
-        pending = os.path.join(table_dir, pending_rel)
         return {
-            f"{pending_rel}/{f}": {
-                "__rows": pq.ParquetFile(os.path.join(pending, f))
-                .metadata.num_rows
+            rel: {
+                "__rows": pq.ParquetFile(
+                    os.path.join(table_dir, rel)
+                ).metadata.num_rows
             }
-            for f in sorted(os.listdir(pending))
-            if f.endswith(".parquet")
+            for rel in _parquet_rels(table_dir, pending_rel)
         }
 
     return _commit_landed_dir(
@@ -359,25 +369,13 @@ def _commit_pending_pure_python(
     )
 
 
-def _live_files_py(table_dir: str, man: dict) -> list[str]:
-    """Abs paths of a manifest's live parquet files (dead subtracted).
-    Recursive: hive-partitioned dirs nest files under ``col=value``
-    subdirectories, and their dead-file rel paths are nested too."""
-    import glob
-
-    dead = set(man.get("dead_files", []))
-    out: list[str] = []
-    for d in man["dirs"]:
-        for fp in sorted(
-            glob.glob(
-                os.path.join(table_dir, d, "**", "*.parquet"),
-                recursive=True,
-            )
-        ):
-            rel = os.path.relpath(fp, table_dir).replace(os.sep, "/")
-            if rel not in dead:
-                out.append(fp)
-    return out
+def _parquet_rels(table_dir: str, rel_dir: str) -> list[str]:
+    """Sorted rel paths (under ``table_dir``) of every parquet file
+    below ``rel_dir``, dead or alive — one `list_files` listing."""
+    return sorted(
+        _rel_of(fi.path, rel_dir)
+        for fi in list_files(None, f"{table_dir}/{rel_dir}", "*.parquet")
+    )
 
 
 def _tombstones_by_dir(table_dir: str, man: dict) -> dict:
@@ -404,9 +402,10 @@ class VersionedTableStreamReader(DataSourceStreamReader):
 
     The OFFSET is the committed version number: `latestOffset` reads
     one directory listing, `partitions(start, end)` diffs the two
-    manifests file-level (the `read_version_changes` append-chain
-    rule — the delta is exactly the files new in `end`, zero data
-    comparison) and emits ONE partition per new file, and
+    manifests' live files (`_live_rel_files`; the
+    `read_version_changes` append-chain rule — the delta is exactly
+    the files new in `end`, zero data comparison) and emits ONE
+    partition per new file, and
     `read(partition)` streams that file as Arrow record batches ON
     THE EXECUTOR — the driver never touches data, so a micro-batch
     over a 100 TB table costs only the new files. Offset-range replay
@@ -504,22 +503,18 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     def _added_cost(self, prev_man: dict | None, man: dict) -> tuple:
         """(files, bytes) NEW in ``man`` vs ``prev_man`` — listing
         metadata under the added dirs only (append commits add
-        dirs); ``prev_man=None`` costs the full live set (the
-        initial-snapshot step)."""
-        if prev_man is None:
-            fps = _live_files_py(self._table, man)
-            return len(fps), sum(os.path.getsize(f) for f in fps)
-        prev_dirs = set(prev_man["dirs"])
+        dirs; every parquet file there counts); ``prev_man=None``
+        costs the full live set (the initial-snapshot step)."""
+        prev_dirs = set(prev_man["dirs"]) if prev_man else set()
+        dead = set() if prev_man else set(man.get("dead_files", []))
         n = b = 0
         for d in man["dirs"]:
             if d in prev_dirs:
                 continue
-            full = os.path.join(self._table, d)
-            for dirpath, _dn, fns in os.walk(full):
-                for f in fns:
-                    if f.endswith(".parquet"):
-                        n += 1
-                        b += os.path.getsize(os.path.join(dirpath, f))
+            for fi in list_files(None, f"{self._table}/{d}", "*.parquet"):
+                if _rel_of(fi.path, d) not in dead:
+                    n += 1
+                    b += fi.size
         return n, b
 
     def latestOffset(self) -> dict:
@@ -636,12 +631,14 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                     "(overwrite/rollback/compact in between); pass "
                     "ignoreChanges to re-emit rewritten files"
                 )
-            old = set(_live_files_py(self._table, man_start))
-            new = [
-                f
-                for f in _live_files_py(self._table, man_end)
-                if f not in old
-            ]
+            old = set().union(
+                *_live_rel_files(None, self._table, man_start).values()
+            )
+            live_end = _live_rel_files(None, self._table, man_end)
+            new = {
+                d: [rel for rel in rels if rel not in old]
+                for d, rels in live_end.items()
+            }
         # a batch can span an append AND a later tombstone on the
         # appended rows (or a rewrite under ignoreChanges): apply the
         # END manifest's vectors to the emitted files so rows deleted
@@ -655,25 +652,17 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             if l != p
         )
         parts = []
-        for p in new:
-            rel = os.path.relpath(p, self._table).replace(os.sep, "/")
-            d = next(
-                (
-                    dd
-                    for dd in man_end["dirs"]
-                    if rel.startswith(dd + "/")
-                ),
-                None,
-            )
-            entries = dels.get(d, []) if d else []
-            parts.append(
-                _FilePartition(
-                    p,
-                    del_dirs=tuple(vd for vd, _ in entries),
-                    del_keys=entries[0][1] if entries else (),
-                    renames=renames,
+        for d, rels in new.items():
+            entries = dels.get(d, [])
+            for rel in rels:
+                parts.append(
+                    _FilePartition(
+                        os.path.join(self._table, rel),
+                        del_dirs=tuple(vd for vd, _ in entries),
+                        del_keys=entries[0][1] if entries else (),
+                        renames=renames,
+                    )
                 )
-            )
         return parts or [_FilePartition("")]
 
     def _snapshot_partitions(self, man: dict) -> list:
@@ -681,10 +670,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         deletion-vector dirs that cover its data dir (applied
         executor-side in read) and, for CDF readers, the constant
         change metadata."""
-        import glob
-
         dels = _tombstones_by_dir(self._table, man)
-        dead = set(man.get("dead_files", []))
         ctype = getattr(self, "_snapshot_ctype", None)
         version = man.get("version", 0) if ctype else 0
         # renamed columns: data files carry PHYSICAL names — ship the
@@ -696,24 +682,14 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             if l != p
         )
         parts: list[_FilePartition] = []
-        for d in man["dirs"]:
+        for d, rels in _live_rel_files(None, self._table, man).items():
             entries = dels.get(d, [])
             del_dirs = tuple(vd for vd, _ in entries)
             del_keys = entries[0][1] if entries else ()
-            for fp in sorted(
-                glob.glob(
-                    os.path.join(self._table, d, "**", "*.parquet"),
-                    recursive=True,
-                )
-            ):
-                rel = os.path.relpath(fp, self._table).replace(
-                    os.sep, "/"
-                )
-                if rel in dead:
-                    continue
+            for rel in rels:
                 parts.append(
                     _FilePartition(
-                        fp,
+                        os.path.join(self._table, rel),
                         ctype=ctype,
                         version=version,
                         del_dirs=del_dirs,
@@ -774,16 +750,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             }
             outside = [k for k in keys if k not in in_file]
             if all(k in path_vals for k in outside):
-                import glob as _glob
-
                 drop = set()
                 vec_schema = None
                 for vd in partition.del_dirs:
                     for f in sorted(
-                        _glob.glob(
-                            os.path.join(vd, "**", "*.parquet"),
-                            recursive=True,
-                        )
+                        fi.path.removeprefix("file:")
+                        for fi in list_files(None, vd, "*.parquet")
                     ):
                         t = pq.read_table(f, columns=keys)
                         vec_schema = t.schema
@@ -907,14 +879,8 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
         rel = man["changes"]
         if not rel:
             return 0, 0  # feed-on commit with zero changes
-        n = b = 0
-        full = os.path.join(self._table, rel)
-        for dirpath, _dn, fns in os.walk(full):
-            for f in fns:
-                if f.endswith(".parquet"):
-                    n += 1
-                    b += os.path.getsize(os.path.join(dirpath, f))
-        return n, b
+        files = list_files(None, f"{self._table}/{rel}", "*.parquet")
+        return len(files), sum(fi.size for fi in files)
 
     def _declared_cmap(self) -> dict:
         """{declared logical name → physical name} for the stream's
@@ -988,8 +954,6 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
         )
 
     def partitions(self, start: dict, end: dict):
-        import glob
-
         sv, ev = start["version"], end["version"]
         if self._cursor is None or ev > self._cursor:
             self._cursor = ev
@@ -1032,32 +996,22 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
                     for l, p in (man.get("column_map") or {}).items()
                 }
                 ren = _renames(rmap_v)
-                for fp in sorted(
-                    glob.glob(
-                        os.path.join(
-                            self._table, arg, "**", "*.parquet"
-                        ),
-                        recursive=True,
-                    )
-                ):
+                for rel in _parquet_rels(self._table, arg):
                     # sidecar rows carry their own _change_type
                     parts.append(
-                        _FilePartition(fp, version=v, renames=ren)
+                        _FilePartition(
+                            os.path.join(self._table, rel),
+                            version=v,
+                            renames=ren,
+                        )
                     )
             elif kind == "append":
                 ren = _renames(None)
                 for d in arg:
-                    for fp in sorted(
-                        glob.glob(
-                            os.path.join(
-                                self._table, d, "**", "*.parquet"
-                            ),
-                            recursive=True,
-                        )
-                    ):
+                    for rel in _parquet_rels(self._table, d):
                         parts.append(
                             _FilePartition(
-                                fp,
+                                os.path.join(self._table, rel),
                                 ctype="insert",
                                 version=v,
                                 renames=ren,

@@ -23,7 +23,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tms_etl_spark.sources.fs import _fs
+from tms_etl_spark.sources.fs import list_dirs
 from tms_etl_spark.tms.schema import RAW_SCHEMA, with_types
 
 MONTH_DIR_RE = r"^\d{4}-\d{2}$"  # /root/reference/src/main_02.py:812
@@ -32,17 +32,18 @@ MONTH_DIR_RE = r"^\d{4}-\d{2}$"  # /root/reference/src/main_02.py:812
 def _month_daily_dirs(spark: SparkSession, root: str) -> list[str]:
     """``{root}/<month>/daily/`` for every child of ``root`` that is
     named like a month (`MONTH_DIR_RE`, the reference's dir filter) and
-    has a ``daily`` subdirectory — one listing of the root, so stray
-    trees (``backup/daily/``) are never ingested and Spark is handed
-    plain dirs, not a glob its metadata probe warns about."""
-    fs, _, jvm = _fs(spark, root)
-    hits = fs.globStatus(jvm.org.apache.hadoop.fs.Path(f"{root}/*/daily"))
-    months = sorted(
-        st.getPath().getParent().getName()
-        for st in hits or []
-        if st.isDirectory()
-    )
-    return [f"{root}/{m}/daily/" for m in months if re.match(MONTH_DIR_RE, m)]
+    has a ``daily`` subdirectory — one listing of the root and of each
+    month dir, so stray trees (``backup/daily/``) are never ingested
+    and Spark is handed plain dirs, not a glob its metadata probe
+    warns about."""
+    months = []
+    for fi in list_dirs(spark, root):
+        m = fi.path.rsplit("/", 1)[-1]
+        if re.match(MONTH_DIR_RE, m) and any(
+            d.path.endswith("/daily") for d in list_dirs(spark, fi.path)
+        ):
+            months.append(m)
+    return [f"{root}/{m}/daily/" for m in sorted(months)]
 
 
 def read_daily_raw(

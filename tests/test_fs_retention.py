@@ -128,6 +128,55 @@ def test_local_listing_matches_hadoop(spark, tmp_path):
     assert list_dirs(None, str(tmp_path / "absent")) == []
 
 
+class _Session:
+    """Just enough of a SparkSession for `_local` to read a Hadoop
+    conf's ``fs.defaultFS``."""
+
+    def __init__(self, default_fs: str):
+        conf = type("Conf", (), {"get": lambda _s, k, d: default_fs})()
+        self._jsc = type("Jsc", (), {"hadoopConfiguration": lambda _s: conf})()
+
+
+def test_schemeless_path_follows_default_fs(tmp_path, monkeypatch):
+    """Hadoop resolves a path with no scheme against ``fs.defaultFS``,
+    so under an HDFS default the probes and listings must ask Hadoop:
+    answered from the driver's disk, an existing HDFS table would read
+    as absent and a merge writer's first-write branch overwrite it."""
+    import tms_etl_spark.sources.fs as fs_mod
+
+    calls = []
+
+    class _HadoopFs:
+        def exists(self, p):
+            calls.append("exists")
+            return True
+
+        def listFiles(self, p, recursive):
+            calls.append("listFiles")
+            return type("It", (), {"hasNext": lambda _s: False})()
+
+        def listStatus(self, p):
+            calls.append("listStatus")
+            return []
+
+    monkeypatch.setattr(fs_mod, "_fs", lambda spark, p: (_HadoopFs(), p, None))
+    path = str(tmp_path / "absent")  # no such dir on the local disk
+    hdfs = _Session("hdfs://namenode:8020")
+    assert fs_mod._local(path, hdfs) is None
+    assert path_exists(hdfs, path)  # Hadoop's answer, not the disk's
+    assert list_files(hdfs, path) == []
+    assert list_dirs(hdfs, path) == []
+    assert calls == ["exists", "exists", "listFiles", "exists", "listStatus"]
+
+    # a file: default, no session, or a file: path stay on the stdlib
+    local = _Session("file:///")
+    assert fs_mod._local(path, local) == path
+    assert fs_mod._local(path) == path
+    assert fs_mod._local(f"file:{path}", hdfs) == path
+    assert not path_exists(local, path)
+    assert calls == ["exists", "exists", "listFiles", "exists", "listStatus"]
+
+
 def test_upsert_partitioned_update_path(spark, tmp_path):
     """Second write MERGES with the existing table: colliding keys are
     updated, new keys inserted, untouched partitions left intact."""

@@ -68,7 +68,7 @@ def _manifest_path(table_dir: str, version: int) -> str:
 
 
 def _read_json(spark: SparkSession | None, path: str) -> dict:
-    local = _local(path)
+    local = _local(path, spark)
     if local is not None:
         with open(local, "rb") as fh:
             return json.loads(fh.read())
@@ -191,7 +191,7 @@ def _write_json_atomic(
     # `version_asof`); pre-stamped payloads (tests) pass through
     payload.setdefault("committed_at", time.time())
     data = json.dumps(payload).encode("utf-8")
-    local = _local(path)
+    local = _local(path, spark)
     if local is not None:
         os.makedirs(os.path.dirname(local), exist_ok=True)
         lock = local + ".lock"
@@ -348,6 +348,7 @@ def _footer_file_stats(
     rel_dir: str,
     schema,
     column_map: dict[str, str] | None = None,
+    spark: SparkSession | None = None,
 ) -> dict | None:
     """Parquet-FOOTER twin of the `_dir_file_stats` aggregation (r13,
     guide §1.2/§6): the zonemap min/max, per-column null counts and
@@ -380,19 +381,18 @@ def _footer_file_stats(
       the same min==max entry the aggregation derives via partition
       discovery; ``__HIVE_DEFAULT_PARTITION__`` → all-null.
 
-    Local filesystem only (footers via direct reads); any non-flat
+    Local filesystem only (footers via direct reads; ``spark`` tells
+    `_local` where a scheme-less ``table_dir`` lives); any non-flat
     schema (array/map/struct null counts are leaf-level in footers,
     not row-level), ambiguity (a partition column also present in
     the file), or decode surprise returns ``None``."""
     from urllib.parse import unquote
 
-    base = _local(table_dir)
-    if base is None or schema is None:
+    if _local(table_dir, spark) is None or schema is None:
         return None
     for f in schema.fields:
         if "<" in f.dataType.simpleString():
             return None  # nested type: footer null counts are leaf-level
-    root = os.path.join(base, *rel_dir.split("/"))
     try:
         import pyarrow.parquet as _pq
 
@@ -407,11 +407,18 @@ def _footer_file_stats(
 
         # pass 1 (serial, path-only): enumerate files and parse each
         # dir's hive partition values; any layout surprise → fallback
-        files: list[tuple[str, dict]] = []  # (fpath, part_vals)
-        for dirpath, _dirnames, filenames in sorted(os.walk(root)):
+        files: list[tuple[str, str, dict]] = []  # (rel, fpath, part_vals)
+        listed = {
+            _rel_of(fi.path, rel_dir): fi.path.removeprefix("file:")
+            for fi in list_files(spark, f"{table_dir}/{rel_dir}", "*.parquet")
+        }
+        # ordered by dir, then file name (a hive dir's files together)
+        for rel in sorted(listed, key=lambda r: r.rpartition("/")[::2]):
+            *segs, fname = rel[len(rel_dir) + 1 :].split("/")
+            if fname.startswith(("_", ".")):
+                continue
             part_vals: dict[str, object] = {}
-            seg_rel = os.path.relpath(dirpath, root)
-            for seg in () if seg_rel == "." else seg_rel.split(os.sep):
+            for seg in segs:
                 if "=" not in seg:
                     return None  # unexpected layout
                 name, _, raw = seg.partition("=")
@@ -433,12 +440,7 @@ def _footer_file_stats(
                     return None
                 else:
                     part_vals[name] = val  # string (or nulls-only type)
-            for fname in sorted(filenames):
-                if fname.startswith(("_", ".")) or not fname.endswith(
-                    ".parquet"
-                ):
-                    continue
-                files.append((os.path.join(dirpath, fname), part_vals))
+            files.append((rel, listed[rel], part_vals))
 
         class _Fallback(Exception):
             """This file cannot prove parity — whole dir falls back."""
@@ -533,19 +535,15 @@ def _footer_file_stats(
                 max_workers=min(16, len(files))
             ) as pool:
                 entries = list(
-                    pool.map(lambda fp: _one(fp[0], fp[1]), files)
+                    pool.map(lambda f: _one(f[1], f[2]), files)
                 )
         else:
-            entries = [_one(fp, pv) for fp, pv in files]
-        stats: dict[str, dict] = {}
-        for (fpath, _pv), entry in zip(files, entries):
-            if entry is None:
-                continue
-            rel = f"{rel_dir}/{os.path.relpath(fpath, root)}".replace(
-                os.sep, "/"
-            )
-            stats[rel] = entry
-        return stats
+            entries = [_one(fp, pv) for _rel, fp, pv in files]
+        return {
+            rel: entry
+            for (rel, _fp, _pv), entry in zip(files, entries)
+            if entry is not None
+        }
     except Exception:
         return None  # any surprise: prove-nothing → full aggregation
 
@@ -581,7 +579,9 @@ def _dir_file_stats(
     from pyspark.sql import functions as F
 
     if schema is not None:
-        fast = _footer_file_stats(table_dir, rel_dir, schema, column_map)
+        fast = _footer_file_stats(
+            table_dir, rel_dir, schema, column_map, spark
+        )
         if fast is not None:
             return fast
 
@@ -3671,7 +3671,7 @@ def _move_index_generations(
         d = Path(f"{dst}/{g}")
         if not fs.exists(d):
             fs.rename(Path(f"{src}/{g}"), d)
-    if not list_dirs(spark, src) and not list_files(spark, src):
+    if not list(fs.listStatus(hsrc)):
         fs.delete(hsrc, False)
 
 

@@ -1,12 +1,13 @@
 """Filesystem housekeeping — the one module that decides how a path
-is listed or probed. A LOCAL path (scheme '' or 'file', `_local`) goes
-through the stdlib: no py4j round trip, no session needed (the Python
-Data Source runners have none), and Hadoop's answer spelled Hadoop's
-way (``file:`` paths, millisecond mtimes, ``.*.crc`` checksum files
-hidden). Every other scheme (HDFS/S3A/ABFS — where the lake lives at
-100 TB) goes through ``org.apache.hadoop.fs.FileSystem`` via the
-session JVM; elsewhere `_fs` serves only mutations and remote
-manifest I/O.
+is listed or probed. A LOCAL path (`_local`: scheme 'file', or no
+scheme where Hadoop would resolve it locally too) goes through the
+stdlib: no py4j round trip, no session needed (the Python Data Source
+runners have none), and Hadoop's answer spelled Hadoop's way
+(``file:`` paths, millisecond mtimes, ``.*.crc`` checksum files
+hidden). Every other path (HDFS/S3A/ABFS — where the lake lives at
+100 TB — and a scheme-less path under a non-local ``fs.defaultFS``)
+goes through ``org.apache.hadoop.fs.FileSystem`` via the session JVM;
+elsewhere `_fs` serves only mutations and remote manifest I/O.
 
 Operators:
 
@@ -43,14 +44,38 @@ def _fs(spark: SparkSession, path: str):
     return fs, hpath, jvm
 
 
-def _local(path: str) -> str | None:
-    """The OS path of a LOCAL ``path`` (scheme '' or 'file'), None for
-    any other scheme — the one local/remote switch: every listing,
-    probe, manifest read and commit of a local path takes the stdlib
-    branch, every other scheme Hadoop's."""
+# {id(jsc): (jsc, whether its fs.defaultFS is local)} — see _local
+_DEFAULT_FS_LOCAL: dict[int, tuple[object, bool]] = {}
+
+
+def _default_fs_local(spark: SparkSession) -> bool:
+    """Whether ``spark``'s Hadoop conf resolves a scheme-less path to
+    the local filesystem (``fs.defaultFS`` is ``file:``). Read once
+    per SparkContext, like the warehouse path Spark qualifies at
+    startup: a default FS swapped on a live context is not seen."""
+    jsc = spark._jsc
+    hit = _DEFAULT_FS_LOCAL.get(id(jsc))
+    if hit is None or hit[0] is not jsc:
+        default = jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+        hit = (jsc, urlparse(default).scheme == "file")
+        _DEFAULT_FS_LOCAL[id(jsc)] = hit
+    return hit[1]
+
+
+def _local(path: str, spark: SparkSession | None = None) -> str | None:
+    """The OS path of ``path`` when Hadoop would resolve it to the
+    local filesystem, None otherwise — the one local/remote switch:
+    every listing, probe, manifest read and commit of a local path
+    takes the stdlib branch, every other path Hadoop's. Scheme 'file'
+    is local; no scheme is local with no session (the Data Source
+    runners, which only see local tables) or when the session's
+    ``fs.defaultFS`` is ``file:`` — on a cluster whose default FS is
+    HDFS, ``/lake/t`` names an HDFS dir, never the driver's disk."""
     parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
-        return parsed.path if parsed.scheme else path
+    if parsed.scheme == "file":
+        return parsed.path
+    if parsed.scheme == "" and (spark is None or _default_fs_local(spark)):
+        return path
     return None
 
 
@@ -58,7 +83,7 @@ def path_exists(spark: SparkSession | None, path: str) -> bool:
     """True iff ``path`` exists on its filesystem. An explicit probe —
     unlike catching ``Exception`` around a read, a transport error
     here surfaces instead of masquerading as 'no table'."""
-    local = _local(path)
+    local = _local(path, spark)
     if local is not None:
         return os.path.exists(local)
     fs, hpath, _ = _fs(spark, path)
@@ -97,7 +122,7 @@ def list_files(
     exist). Spark metadata like ``_SUCCESS`` is listed — filter via
     ``pattern`` (e.g. ``*.parquet`` / ``*.csv``, matched on the file
     name) if unwanted; checksum files never are."""
-    local = _local(root)
+    local = _local(root, spark)
     if local is not None:
         top = os.path.abspath(local)
         paths = [top] if os.path.isfile(top) else [
@@ -133,7 +158,7 @@ def list_files(
 def list_dirs(spark: SparkSession | None, root: str) -> list[FileInfo]:
     """The immediate sub-directories of ``root`` with their mtimes
     ([] when it does not exist)."""
-    local = _local(root)
+    local = _local(root, spark)
     if local is not None:
         try:
             with os.scandir(os.path.abspath(local)) as it:

@@ -348,13 +348,14 @@ def _commit_pending_pure_python(
         # footers cannot prove the zonemaps (nested or oversized
         # values): record row counts only, so metadata COUNT(*) stays
         # exact and reads stay correct, just unpruned
+        files = list_files(None, f"{table_dir}/{pending_rel}", "*.parquet")
         return {
-            rel: {
+            _rel_of(fi.path, pending_rel): {
                 "__rows": pq.ParquetFile(
-                    os.path.join(table_dir, rel)
+                    fi.path.removeprefix("file:")
                 ).metadata.num_rows
             }
-            for rel in _parquet_rels(table_dir, pending_rel)
+            for fi in sorted(files, key=lambda fi: fi.path)
         }
 
     return _commit_landed_dir(
@@ -369,12 +370,12 @@ def _commit_pending_pure_python(
     )
 
 
-def _parquet_rels(table_dir: str, rel_dir: str) -> list[str]:
-    """Sorted rel paths (under ``table_dir``) of every parquet file
-    below ``rel_dir``, dead or alive — one `list_files` listing."""
+def _parquet_files(d: str) -> list[str]:
+    """Sorted OS paths of every parquet file below local dir ``d``,
+    dead or alive — one `list_files` listing."""
     return sorted(
-        _rel_of(fi.path, rel_dir)
-        for fi in list_files(None, f"{table_dir}/{rel_dir}", "*.parquet")
+        fi.path.removeprefix("file:")
+        for fi in list_files(None, d, "*.parquet")
     )
 
 
@@ -753,10 +754,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 drop = set()
                 vec_schema = None
                 for vd in partition.del_dirs:
-                    for f in sorted(
-                        fi.path.removeprefix("file:")
-                        for fi in list_files(None, vd, "*.parquet")
-                    ):
+                    for f in _parquet_files(vd):
                         t = pq.read_table(f, columns=keys)
                         vec_schema = t.schema
                         drop.update(
@@ -996,22 +994,18 @@ class VersionedTableCdfStreamReader(VersionedTableStreamReader):
                     for l, p in (man.get("column_map") or {}).items()
                 }
                 ren = _renames(rmap_v)
-                for rel in _parquet_rels(self._table, arg):
+                for f in _parquet_files(f"{self._table}/{arg}"):
                     # sidecar rows carry their own _change_type
                     parts.append(
-                        _FilePartition(
-                            os.path.join(self._table, rel),
-                            version=v,
-                            renames=ren,
-                        )
+                        _FilePartition(f, version=v, renames=ren)
                     )
             elif kind == "append":
                 ren = _renames(None)
                 for d in arg:
-                    for rel in _parquet_rels(self._table, d):
+                    for f in _parquet_files(f"{self._table}/{d}"):
                         parts.append(
                             _FilePartition(
-                                os.path.join(self._table, rel),
+                                f,
                                 ctype="insert",
                                 version=v,
                                 renames=ren,

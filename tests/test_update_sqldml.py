@@ -450,6 +450,29 @@ def test_sql_dml_delete_key_named_column(spark, tmp_path):
     assert read_version(spark, tdir).count() == 0
 
 
+def test_sql_dml_takes_file_scheme_paths(spark, tmp_path):
+    """A target or MERGE source spelled as a ``file:`` URI is found the
+    way every verb finds it (`fs.path_exists`), not refused as "not a
+    versioned table dir" by an OS-path probe."""
+    tdir = str(tmp_path / "t")
+    srcp = str(tmp_path / "src")
+    write_version(
+        _mk(spark, [(k, k) for k in range(10)], "k int, v int").coalesce(1),
+        tdir,
+        "append",
+    )
+    _mk(spark, [(3, 30)], "k int, v int").write.parquet(srcp)
+    sql_dml(spark, f"DELETE FROM 'file:{tdir}' WHERE k = 7 KEY (k)")
+    sql_dml(spark, f"UPDATE 'file://{tdir}' SET v = v + 1 WHERE k = 1")
+    sql_dml(
+        spark,
+        f"MERGE INTO 'file:{tdir}' AS t USING 'file:{srcp}' AS s "
+        "ON t.k = s.k WHEN MATCHED THEN UPDATE SET *",
+    )
+    got = {r["k"]: r["v"] for r in read_version(spark, tdir).collect()}
+    assert got == {k: {1: 2, 3: 30}.get(k, k) for k in range(10) if k != 7}
+
+
 def test_sql_dml_case_when_inside_conditions_and_set(spark, tmp_path):
     """CASE WHEN … THEN … END inside a MERGE condition or a
     NOT-MATCHED-BY-SOURCE SET expression must not split the WHEN

@@ -497,6 +497,34 @@ def test_commit_existing_dir_validates_check_constraints(spark, tdir):
     assert sorted(r.id for r in read_version(spark, tdir).collect()) == [0, 1, 2]
 
 
+def test_refused_rewrites_release_their_pins(spark, tdir):
+    """The frames MERGE and UPDATE checkpoint for plan reuse are
+    released when the verb refuses, not only when it commits: a
+    conditional merge refused for duplicate source keys, an update and
+    a conditional merge refused by a CHECK constraint each leave the
+    session's persisted-RDD count where it was, and commit nothing."""
+    from tms_etl_spark.operators.versioned import merge_version, update_where
+
+    write_version(
+        _df(spark, 0, 5), tdir, "append", constraints={"nonneg": "val >= 0"}
+    )
+    sc = spark.sparkContext
+    start = len(sc._jsc.getPersistentRDDs())
+    guard = "source.val > target.val"
+    dup = spark.createDataFrame([(1, 50), (1, 60)], "id long, val long")
+    with pytest.raises(ValueError, match="duplicate key"):
+        merge_version(spark, tdir, dup, "id", when_matched_condition=guard)
+    assert len(sc._jsc.getPersistentRDDs()) == start
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        update_where(spark, tdir, "id = 2", {"val": "-1"})
+    assert len(sc._jsc.getPersistentRDDs()) == start
+    bad = spark.createDataFrame([(3, 99), (9, -9)], "id long, val long")
+    with pytest.raises(ValueError, match="CHECK constraint violation"):
+        merge_version(spark, tdir, bad, "id", when_matched_condition=guard)
+    assert len(sc._jsc.getPersistentRDDs()) == start
+    assert current_version(spark, tdir) == 1
+
+
 def test_delete_rows_logical_then_physical(spark, tdir):
     """delete_rows hides keys immediately without touching data
     files; optimize purges them physically and drops the vectors."""

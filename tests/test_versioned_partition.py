@@ -1924,3 +1924,41 @@ def test_where_bloom_dnf_never_misprunes_randomized(spark, tmp_path):
             .collect()
         )
         assert got == want, w
+
+
+def test_emptied_hive_table_stays_readable(spark, part_table):
+    """Rewrites that leave a hive-partitioned table with zero rows
+    commit a version referencing no dir (a partitioned write of zero
+    rows lands no part file). That snapshot reads as an empty frame
+    with the recorded columns — at the head and by time travel — and
+    the table keeps taking writes: a delete-merge of every key, a
+    compaction of the empty table, a deletion vector on it, a later
+    append, then a delete of every row compacted away
+    incrementally."""
+    from tms_etl_spark.operators.versioned import (
+        _snapshot,
+        delete_where,
+        optimize_incremental,
+    )
+
+    tdir, rows = part_table
+    cols = ["k", "seg", "val"]
+    keys = spark.createDataFrame([(r[0],) for r in rows], "k int")
+    v2 = merge_version(spark, tdir, keys, "k", when_matched="delete")
+    assert _snapshot(spark, tdir, v2)[1]["dirs"] == []
+    head = read_version(spark, tdir)
+    assert head.count() == 0 and head.columns == cols
+    assert read_version(spark, tdir, v2).count() == 0
+    assert read_version(spark, tdir, v2 - 1).count() == len(rows)
+    v3 = optimize_version(spark, tdir)
+    assert _snapshot(spark, tdir, v3)[1]["dirs"] == []
+    assert read_version(spark, tdir).columns == cols
+    delete_rows(spark, tdir, keys.limit(1))  # a vector covering no dir
+    assert read_version(spark, tdir).count() == 0
+    write_version(_mkdf(spark, rows[:4]), tdir, "append")
+    got = sorted(tuple(r) for r in read_version(spark, tdir).collect())
+    assert got == sorted(rows[:4])
+    delete_where(spark, tdir, "k >= 0", "k")
+    v7 = optimize_incremental(spark, tdir)
+    assert _snapshot(spark, tdir, v7)[1]["dirs"] == []
+    assert read_version(spark, tdir).count() == 0

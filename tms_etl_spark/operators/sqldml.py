@@ -35,7 +35,6 @@ misparse of DML would corrupt data.
 from __future__ import annotations
 
 import json
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +45,7 @@ from tms_etl_spark.operators.versioned import (
     _name_parts,
     _node_kind,
 )
+from tms_etl_spark.sources.fs import path_exists
 
 # a table reference: 'quoted path', `quoted path`, or a bare token
 # (path-ish characters allowed so /tmp/t works unquoted)
@@ -133,8 +133,8 @@ def _parse_assignments(spark: SparkSession, s: str) -> dict[str, str]:
     return _assignments(sql, jplan.assignments(), {})
 
 
-def _is_versioned_dir(path: str) -> bool:
-    return os.path.isdir(os.path.join(path, "_manifests"))
+def _is_versioned_dir(spark: SparkSession, path: str) -> bool:
+    return path_exists(spark, f"{path}/_manifests")
 
 
 def _load_source(spark: SparkSession, path: str) -> DataFrame:
@@ -142,9 +142,9 @@ def _load_source(spark: SparkSession, path: str) -> DataFrame:
     parquet path."""
     from tms_etl_spark.operators.versioned import read_version
 
-    if _is_versioned_dir(path):
+    if _is_versioned_dir(spark, path):
         return read_version(spark, path)
-    if os.path.exists(path):
+    if path_exists(spark, path):
         return spark.read.parquet(path)
     raise ValueError(
         f"MERGE source {path!r} is neither a versioned table dir nor "
@@ -152,8 +152,8 @@ def _load_source(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def _target_dir(path: str) -> str:
-    if not _is_versioned_dir(path):
+def _target_dir(spark: SparkSession, path: str) -> str:
+    if not _is_versioned_dir(spark, path):
         raise ValueError(
             f"DML target {path!r} is not a versioned table dir (no "
             "_manifests/) — only versioned tables take SQL DML"
@@ -234,7 +234,7 @@ def sql_dml(
             )
         return update_where(
             spark,
-            _target_dir(paths[0]),
+            _target_dir(spark, paths[0]),
             _text(text, jplan.condition().get(), {}),
             _assignments(text, jplan.assignments(), {}),
             txn_id=txn_id,
@@ -251,7 +251,7 @@ def sql_dml(
             key = key[0]
         return delete_where(
             spark,
-            _target_dir(paths[0]),
+            _target_dir(spark, paths[0]),
             _text(text, jplan.condition(), {}),
             key,
             txn_id=txn_id,
@@ -309,7 +309,7 @@ def sql_dml(
         )
     return merge_version(
         spark,
-        _target_dir(paths[0]),
+        _target_dir(spark, paths[0]),
         _load_source(spark, paths[1]),
         keys if len(keys) > 1 else keys[0],
         when_matched=when_matched,

@@ -27,6 +27,16 @@ lists, reads or writes manifests: local tables go through the stdlib
 functions), other filesystems through Hadoop, and every verb loads
 its snapshot through `_snapshot`.
 
+There are three commit paths, each ending in that conditional put:
+appends and overwrites land one new dir (`write_version`, and
+`_commit_landed_dir` for a dir written elsewhere); every
+copy-on-write rewrite — MERGE, UPDATE and the OPTIMIZE family —
+commits its added dir and its removed files through
+`_rewrite_commit`; and the commits that write no table data re-point
+or annotate the current dirs (`rollback`, `tag_version`, the ALTER
+verbs through `_alter_commit`, and `delete_rows`, whose deletion
+vector is a key file beside the dirs, not a rewrite).
+
 Scale properties: every operation except the data write itself is
 METADATA-ONLY — `read_version` is a multi-path parquet scan (Spark
 parallelizes listing; partition pruning and pushdown still apply
@@ -808,7 +818,7 @@ def _evolve_schema(prev, new, allow: bool):
 def _check_constraints(
     spark: SparkSession,
     dir_path: str,
-    constraints: dict[str, str],
+    constraints: dict[str, str] | None,
     schema,
     column_map: dict[str, str] | None = None,
 ) -> None:
@@ -1072,6 +1082,10 @@ def _read_files(
             r = r.option("basePath", base)
         return r
 
+    if not paths and schema_log is not None:
+        # an emptied snapshot (a rewrite that left zero rows references
+        # no dir): empty, with the recorded columns
+        return spark.createDataFrame([], schema_log)
     if not hive and schema is None:
         return spark.read.parquet(*paths)
     plain: list[str] = []
@@ -1526,7 +1540,7 @@ def _scan_with_deletes(
                 paths.extend(_live_paths(d))
         return _read_files(spark, table_dir, man, paths)
 
-    if not deletes:
+    if not deletes or not scan_dirs:
         return _read(scan_dirs)
     groups: dict[tuple, list[str]] = {}
     for d in scan_dirs:
@@ -2284,7 +2298,6 @@ def update_where(
     so zonemap pruning stays tight under update churn instead of
     degrading until the next OPTIMIZE; ``cluster_partitions`` pins
     the file split (AQE coalesces otherwise)."""
-    import uuid
     from functools import reduce as _reduce
     from operator import or_ as _or
 
@@ -2342,7 +2355,6 @@ def update_where(
             "the derived value follows"
         )
     part_cols = man.get("partition_by") or []
-    cmap = _column_map(man)
 
     # 1. zonemap candidates via the predicate's pruning groups (a
     # parse-empty group set admits everything — conservative)
@@ -2382,46 +2394,9 @@ def update_where(
             f"non-deterministic SET expression in {assign!r} — a "
             "replayed or retried update would write different values"
         )
-    probe = (
-        matched_probe.select("__f")
-        .distinct()
-        .limit(min(len(candidates), _MERGE_TOUCHED_CAP) + 1)
-    )
-    by_path = {
-        _canon_file_path(f"{table_dir}/{rel}"): rel for rel in candidates
-    }
-    hits = probe.collect()
-    if not hits:
+    touched = _touched_files(matched_probe, table_dir, candidates)
+    if not touched:
         return cur  # predicate matched nothing: no-op, no commit
-    if len(hits) > _MERGE_TOUCHED_CAP:
-        touched = sorted(candidates)  # coarser but correct CoW
-    else:
-        touched_rels = []
-        for r in hits:
-            p = _canon_file_path(r["__f"])
-            if p not in by_path:
-                raise ValueError(
-                    f"update probe returned file {r['__f']!r} not "
-                    "among the candidate live files — path "
-                    "canonicalization mismatch; refusing a "
-                    "possibly-wrong rewrite"
-                )
-            touched_rels.append(by_path[p])
-        touched = sorted(frozenset(touched_rels))
-
-    # 3. rewrite ONLY the touched files, tombstones purged in-pass
-    touched_by_dir: dict[str, list[str]] = {}
-    for rel in touched:
-        touched_by_dir.setdefault(_rel_dir(rel), []).append(
-            f"{table_dir}/{rel}"
-        )
-    scan = _scan_with_deletes(
-        spark,
-        table_dir,
-        man,
-        dirs=sorted(touched_by_dir),
-        paths_by_dir=touched_by_dir,
-    ).localCheckpoint(eager=False)  # one plan for keep/update/feed
 
     def _apply_set(df: DataFrame) -> DataFrame:
         out = df.select(
@@ -2442,140 +2417,84 @@ def update_where(
             )
         return out.select(*cols)
 
-    kept = scan.where(~hit)
-    upd_pre = scan.where(hit)
-    out = kept.unionByName(_apply_set(upd_pre))
-
-    # CHANGE DATA FEED sidecar: update_pre/update_post pairs for
-    # VALUE-CHANGED rows only (no-op SETs classify out, the merge
-    # feed's rule; map-typed SET targets disable suppression)
-    changes_rel: str | None = None
-    if man.get("change_feed"):
-        cmp_set = {
-            c: e
-            for c, e in assign.items()
-            if _equatable_type(rec_schema[c].dataType)
-        }
-        if len(cmp_set) < len(assign):
-            pre_c = upd_pre
-        else:
-            pre_c = upd_pre.where(
-                _reduce(
-                    _or,
-                    [
-                        ~F.expr(e)
-                        .cast(rec_schema[c].dataType)
-                        .eqNullSafe(F.col(c))
-                        for c, e in cmp_set.items()
-                    ],
-                )
-            )
-        chg = (
-            pre_c.select(*cols)
-            .withColumn("_change_type", F.lit("update_pre"))
-            .unionByName(
-                _apply_set(pre_c).withColumn(
-                    "_change_type", F.lit("update_post")
-                )
-            )
+    # 3. rewrite ONLY the touched files, tombstones purged in-pass
+    touched_by_dir: dict[str, list[str]] = {}
+    for rel in touched:
+        touched_by_dir.setdefault(_rel_dir(rel), []).append(
+            f"{table_dir}/{rel}"
         )
-        changes_rel = _write_change_sidecar(spark, table_dir, chg)
-
-    # 4. write + manifest (the merge commit shape: touched files die,
-    # fully-dead dirs drop out, vectors covering only dead dirs drop)
-    v = cur + 1
-    new_dir = f"{_DATA}/v{v:06d}-update-{uuid.uuid4().hex[:8]}"
-    hive_out = bool(part_cols)
-    if cluster_by is not None:
-        if cluster_by not in cols:
-            raise ValueError(f"unknown cluster_by column {cluster_by!r}")
-        # clustering-preserving rewrite (the merge_version recipe):
-        # range-partition on (partition cols, cluster key) so the CoW
-        # output's files keep disjoint cluster-key ranges
-        rb = (
-            [cluster_partitions] if cluster_partitions else []
-        ) + [F.col(c) for c in part_cols] + [F.col(cluster_by)]
-        out = out.repartitionByRange(*rb).sortWithinPartitions(
-            *part_cols, cluster_by
-        )
-    writer = _to_physical(out, cmap).write.mode("errorifexists")
-    if hive_out:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(f"{table_dir}/{new_dir}")
-    new_stats: dict = {}
-    dirs = list(man["dirs"])
-    if _dir_has_parquet(spark, f"{table_dir}/{new_dir}"):
-        _check_constraints(
-            spark,
-            f"{table_dir}/{new_dir}",
-            man.get("constraints") or {},
-            rec_schema,
-            column_map=cmap,
-        )
-        new_stats = _dir_file_stats(
-            spark, table_dir, new_dir, schema=rec_schema, column_map=cmap
-        )
-        dirs = dirs + [new_dir]
-    dead = _set_union(man.get("dead_files", []), touched)
-    kept_dirs = []
-    for d in dirs:
-        if d in live and all(rel in dead for rel in live[d]):
-            dead.difference_update(live[d])
-            continue
-        kept_dirs.append(d)
-    kept_set = frozenset(kept_dirs)
-    deletes = [
-        de
-        for de in man.get("deletes", [])
-        if any(c in kept_set for c in de["covers"])
-    ]
-    surviving_stats = {
-        rel: s
-        for rel, s in stats.items()
-        if rel not in dead and _rel_dir(rel) in kept_set
-    }
-    payload = {
-        "version": v,
-        "dirs": kept_dirs,
-        "op": "update",
-        "stats": {**surviving_stats, **new_stats},
-        "recent_txns": _carry_txns(man, txn_id, v),
-        "schema": rec_schema.json(),
-    }
-    if deletes:
-        payload["deletes"] = deletes
-    dead = {rel for rel in dead if _rel_dir(rel) in kept_set}
-    if dead:
-        payload["dead_files"] = sorted(dead)
-    if txn_id is not None:
-        payload["txn_id"] = txn_id
-    if changes_rel is not None:
-        payload["changes"] = changes_rel
-    if new_stats and hive_out:
-        payload["hive_dirs"] = [new_dir]
-    _carry_props(man, payload)
+    scan = _scan_with_deletes(
+        spark,
+        table_dir,
+        man,
+        dirs=sorted(touched_by_dir),
+        paths_by_dir=touched_by_dir,
+    ).localCheckpoint(eager=False)  # one plan for keep/update/feed
     try:
-        _write_json_atomic(spark, _manifest_path(table_dir, v), payload)
-    except ConcurrentWriteError as e:
-        e.retry_ctx = {
-            "op": "UPDATE WHERE",
-            "base_version": cur,
-            "read_rels": frozenset(candidates),
-            "where_groups": groups,
-            "read_whole_table": not groups,
-        }
-        unpersist_checkpoint(scan)
-        raise
-    unpersist_checkpoint(scan)  # committed: the plan-reuse pin is dead
-    return v
+        kept = scan.where(~hit)
+        upd_pre = scan.where(hit)
+        out = kept.unionByName(_apply_set(upd_pre))
 
+        # CHANGE DATA FEED sidecar: update_pre/update_post pairs for
+        # VALUE-CHANGED rows only (no-op SETs classify out, the merge
+        # feed's rule; map-typed SET targets disable suppression)
+        changes_rel: str | None = None
+        if man.get("change_feed"):
+            cmp_set = {
+                c: e
+                for c, e in assign.items()
+                if _equatable_type(rec_schema[c].dataType)
+            }
+            if len(cmp_set) < len(assign):
+                pre_c = upd_pre
+            else:
+                pre_c = upd_pre.where(
+                    _reduce(
+                        _or,
+                        [
+                            ~F.expr(e)
+                            .cast(rec_schema[c].dataType)
+                            .eqNullSafe(F.col(c))
+                            for c, e in cmp_set.items()
+                        ],
+                    )
+                )
+            chg = (
+                pre_c.select(*cols)
+                .withColumn("_change_type", F.lit("update_pre"))
+                .unionByName(
+                    _apply_set(pre_c).withColumn(
+                        "_change_type", F.lit("update_post")
+                    )
+                )
+            )
+            changes_rel = _write_change_sidecar(spark, table_dir, chg)
 
-def _set_union(a, b):
-    """set(a) | set(b) without the ``set`` name (update_where's SQL-
-    parity parameter shadows the builtin)."""
-    out = {x for x in a}
-    out.update(b)
-    return out
+        # 4. write + commit
+        if cluster_by is not None:
+            if cluster_by not in cols:
+                raise ValueError(
+                    f"unknown cluster_by column {cluster_by!r}"
+                )
+            out = _range_cluster(
+                out, part_cols, cluster_by, cluster_partitions
+            )
+        return _rewrite_commit(
+            spark, table_dir, cur, man, live, out, touched, "update",
+            "-update", part_cols, rec_schema,
+            constraints=man.get("constraints"),
+            changes_rel=changes_rel,
+            txn_id=txn_id,
+            retry_ctx={
+                "op": "UPDATE WHERE",
+                "base_version": cur,
+                "read_rels": frozenset(candidates),
+                "where_groups": groups,
+                "read_whole_table": not groups,
+            },
+        )
+    finally:
+        unpersist_checkpoint(scan)  # the plan-reuse pin dies on every exit
 
 
 _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "isnull", "notnull")
@@ -4232,12 +4151,8 @@ def optimize_version(
     # purge — the rewritten version carries no tombstones
     df = _scan_with_deletes(spark, table_dir, man)
 
-    import uuid
-
     if cluster_by is not None and zorder_by is not None:
         raise ValueError("cluster_by and zorder_by are mutually exclusive")
-    v = cur + 1
-    new_dir = f"{_DATA}/v{v:06d}-{uuid.uuid4().hex[:8]}"
     # a partitioned table ALWAYS compacts within its hive layout
     # (OPTIMIZE never unpartitions silently — Delta semantics);
     # cluster_by / zorder_by then order rows WITHIN the layout:
@@ -4278,9 +4193,7 @@ def optimize_version(
             )
     hive_out = bool(part_cols)
     if cluster_by is not None:
-        df = df.repartitionByRange(
-            n_files, *part_cols, cluster_by
-        ).sortWithinPartitions(*part_cols, cluster_by)
+        df = _range_cluster(df, part_cols, cluster_by, n_files)
     elif zorder_by is not None:
         from tms_etl_spark.operators.layout import zorder_key, zorder_key_k
 
@@ -4289,12 +4202,9 @@ def optimize_version(
             if len(zorder_by) == 2
             else zorder_key_k(list(zorder_by))
         )
-        df = (
-            df.withColumn("__zkey", zkey)
-            .repartitionByRange(n_files, *part_cols, "__zkey")
-            .sortWithinPartitions(*part_cols, "__zkey")
-            .drop("__zkey")
-        )
+        df = _range_cluster(
+            df.withColumn("__zkey", zkey), part_cols, "__zkey", n_files
+        ).drop("__zkey")
     elif hive_out:
         # plain compaction: each partition value's rows land in one
         # task → one compacted file per value (hot partitions make
@@ -4302,50 +4212,30 @@ def optimize_version(
         df = df.repartition(n_files, *part_cols)
     else:
         df = df.repartition(n_files)
-    cmap_o = _column_map(man)
-    writer = _to_physical(df, cmap_o).write.mode("errorifexists")
-    if hive_out:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(f"{table_dir}/{new_dir}")
-    payload = {
-        "version": v,
-        "dirs": [new_dir],
-        "op": (
-            f"optimize:{n_files}"
-            + (f":cluster_by={cluster_by}" if cluster_by else "")
-            + (
-                ":zorder_by=" + ",".join(zorder_by)
-                if zorder_by
-                else ""
-            )
-        ),
-        "stats": _dir_file_stats(
-            spark, table_dir, new_dir, schema=_man_schema(man),
-            column_map=cmap_o,
-        ),
-        "recent_txns": _carry_txns(man, None, v),
-    }
-    # hive compaction keeps the layout (new dir needs basePath reads);
-    # the partition spec survives as a table property for future
-    # appends — unless this call EVOLVED it, in which case the new
-    # spec (and only its generated-column expressions) is recorded
-    if hive_out:
-        payload["hive_dirs"] = [new_dir]
-    _carry_props(man, payload)
+    # every live file dies (legacy stat-less dirs included), so every
+    # old dir drops with its vectors and dead files; an EVOLVED spec
+    # (and only its generated-column expressions) replaces the carried
+    # one
+    live = _live_rel_files(spark, table_dir, man)
+    props = None
     if respec:
-        keep_exprs = {
-            c: e
-            for c, e in (man.get("partition_exprs") or {}).items()
-            if c in part_cols
+        props = {
+            "partition_by": part_cols,
+            "partition_exprs": {
+                c: e
+                for c, e in (man.get("partition_exprs") or {}).items()
+                if c in part_cols
+            },
         }
-        payload.pop("partition_by", None)
-        payload.pop("partition_exprs", None)
-        if part_cols:
-            payload["partition_by"] = part_cols
-        if keep_exprs:
-            payload["partition_exprs"] = keep_exprs
-    _write_json_atomic(spark, _manifest_path(table_dir, v), payload)
-    return v
+    return _rewrite_commit(
+        spark, table_dir, cur, man, live, df,
+        [rel for rels in live.values() for rel in rels],
+        f"optimize:{n_files}"
+        + (f":cluster_by={cluster_by}" if cluster_by else "")
+        + (":zorder_by=" + ",".join(zorder_by) if zorder_by else ""),
+        "", part_cols, _man_schema(man),
+        props=props,
+    )
 
 
 def _canon_file_path(p: str) -> str:
@@ -4415,6 +4305,174 @@ def _dir_has_parquet(spark: SparkSession, path: str) -> bool:
     return any(
         fi.path.endswith(".parquet") for fi in list_files(spark, path)
     )
+
+
+def _touched_files(
+    hits: DataFrame, table_dir: str, candidates: list[str]
+) -> list[str]:
+    """The sorted candidate rel files holding at least one hit row
+    (``hits`` carries each hit row's ``__f`` = input_file_name) — the
+    exact touched-file probe of the copy-on-write verbs. The collect
+    is one path string per hit file, capped at one more than the
+    candidates it could map and at `_MERGE_TOUCHED_CAP`; past the cap
+    every candidate rewrites (coarser copy-on-write, same rows —
+    documented in SCALE.md). Hits map back by CANONICAL FULL PATH, not
+    basename: `commit_existing_dir` admits arbitrary dirs, so two
+    candidates may share a basename, and a basename-keyed map would
+    mark the wrong file dead. A hit outside the candidates refuses."""
+    rows = (
+        hits.select("__f")
+        .distinct()
+        .limit(min(len(candidates), _MERGE_TOUCHED_CAP) + 1)
+        .collect()
+    )
+    if len(rows) > _MERGE_TOUCHED_CAP:
+        return sorted(candidates)
+    by_path = {
+        _canon_file_path(f"{table_dir}/{rel}"): rel for rel in candidates
+    }
+    touched = set()
+    for r in rows:
+        rel = by_path.get(_canon_file_path(r["__f"]))
+        if rel is None:
+            raise ValueError(
+                f"touched-file probe returned file {r['__f']!r} not "
+                "among the candidate live files — path canonicalization "
+                "mismatch; refusing a possibly-wrong rewrite"
+            )
+        touched.add(rel)
+    return sorted(touched)
+
+
+def _range_cluster(
+    df: DataFrame, part_cols: list[str], key: str, n: int | None = None
+) -> DataFrame:
+    """Range-partition on (partition cols, ``key``) and sort within
+    partitions: the output files keep DISJOINT ``key`` ranges inside
+    the hive layout, so per-file zonemaps on ``key`` come out tight.
+    ``n`` pins the file split (AQE coalesces the range shuffle
+    otherwise)."""
+    return df.repartitionByRange(
+        *([n] if n else []), *part_cols, key
+    ).sortWithinPartitions(*part_cols, key)
+
+
+def _rewrite_commit(
+    spark: SparkSession,
+    table_dir: str,
+    cur: int,
+    man: dict,
+    live: dict[str, list[str]],
+    out: DataFrame | None,
+    touched: Sequence[str],
+    op: str,
+    tag: str,
+    part_cols: list[str],
+    rec_schema,
+    constraints: dict[str, str] | None = None,
+    changes_rel: str | None = None,
+    txn_id: str | None = None,
+    retry_ctx: dict | None = None,
+    props: dict | None = None,
+) -> int:
+    """The copy-on-write commit every rewriting verb (MERGE, UPDATE,
+    the OPTIMIZE family) ends in — Delta's one commit of added plus
+    removed files. ``out`` (already laid out; None when nothing
+    lands) is written once to a writer-private dir, hive-partitioned
+    on ``part_cols``; a dir that holds parquet is validated against
+    ``constraints`` and gets per-file stats, an empty one is never
+    referenced. Then the manifest: the ``touched`` rel files join
+    ``dead_files``, a dir whose ``live`` files are all dead drops out
+    (with its dead-file entries), deletion vectors survive only while
+    they cover a kept dir, stats only for live files of kept dirs, and
+    the new dir is a hive dir when it has stats. Table properties
+    carry over; ``props`` then sets (or, with a falsy value, removes)
+    single properties — partition spec evolution. A lost commit race
+    carries ``retry_ctx`` (the verb's read+write set) on the raised
+    ConcurrentWriteError. Returns the committed version."""
+    import uuid
+
+    v = cur + 1
+    new_dir = f"{_DATA}/v{v:06d}{tag}-{uuid.uuid4().hex[:8]}"
+    dirs = list(man["dirs"])
+    new_stats: dict = {}
+    if out is not None:
+        cmap = _column_map(man)
+        path = f"{table_dir}/{new_dir}"
+        writer = _to_physical(out, cmap).write.mode("errorifexists")
+        if part_cols:
+            # partition columns are never renameable: physical names
+            writer = writer.partitionBy(*part_cols)
+        writer.parquet(path)
+        if _dir_has_parquet(spark, path):
+            _check_constraints(
+                spark, path, constraints, rec_schema, column_map=cmap
+            )
+            new_stats = _dir_file_stats(
+                spark, table_dir, new_dir, schema=rec_schema, column_map=cmap
+            )
+            dirs.append(new_dir)
+    dead = set(man.get("dead_files", [])) | set(touched)
+    kept_dirs = []
+    for d in dirs:
+        if d in live and all(rel in dead for rel in live[d]):
+            dead.difference_update(live[d])  # dir gone → entries moot
+            continue
+        kept_dirs.append(d)
+    kept = set(kept_dirs)
+    payload = {
+        "version": v,
+        "dirs": kept_dirs,
+        "op": op,
+        "stats": {
+            **{
+                rel: s
+                for rel, s in man.get("stats", {}).items()
+                if rel not in dead and _rel_dir(rel) in kept
+            },
+            **new_stats,
+        },
+        "recent_txns": _carry_txns(man, txn_id, v),
+    }
+    if rec_schema is not None:
+        # pre-set so _carry_props keeps an EVOLVED schema, not man's
+        payload["schema"] = rec_schema.json()
+    deletes = [
+        de
+        for de in man.get("deletes", [])
+        if any(c in kept for c in de["covers"])
+    ]
+    if deletes:
+        payload["deletes"] = deletes
+    dead_kept = sorted(rel for rel in dead if _rel_dir(rel) in kept)
+    if dead_kept:
+        payload["dead_files"] = dead_kept
+    if txn_id is not None:
+        payload["txn_id"] = txn_id
+    if changes_rel is not None:
+        # change-feed pointer: the sidecar dir, or "" for a
+        # feed-enabled commit that changed zero rows (readers emit
+        # nothing instead of refusing an un-sidecared DML commit)
+        payload["changes"] = changes_rel
+    if part_cols and new_stats:
+        payload["hive_dirs"] = [new_dir]
+    _carry_props(man, payload)
+    for prop, val in (props or {}).items():
+        if val:
+            payload[prop] = val
+        else:
+            payload.pop(prop, None)
+    try:
+        _write_json_atomic(spark, _manifest_path(table_dir, v), payload)
+    except ConcurrentWriteError as e:
+        # lost the race: the verb's read+write set lets
+        # `_with_commit_retries` prove (or refute) that a re-run
+        # against the winner's head preserves snapshot semantics. The
+        # orphaned data dir is expire-grace debris, as for a lost append
+        if retry_ctx is not None:
+            e.retry_ctx = retry_ctx
+        raise
+    return v
 
 
 def _insert_filter(df: DataFrame, cond: str) -> DataFrame:
@@ -5017,7 +5075,6 @@ def merge_version(
     the append retry documents. Full-sync merges read the whole
     table, so ANY concurrent data commit conflicts (the honest
     answer for a snapshot-sync)."""
-    import uuid
     from functools import reduce as _reduce
     from operator import and_ as _and, or_ as _or
 
@@ -5131,608 +5188,490 @@ def merge_version(
         _guard_revived_names(man, rec_schema, "MERGE")
     cmap = _column_map(man)
     phys_keys = [cmap.get(k, k) for k in keys]
+    part_cols = man.get("partition_by") or []
 
     conditional = when_matched_condition is not None or (
         when_not_matched_condition is not None
         and when_matched == "update"
     )
     # checkpointed frames this merge pins for plan reuse — dead state
-    # once the commit returns/raises, released at both exits (r13)
+    # once the verb returns or raises
     _pins: list[DataFrame] = []
-    if conditional and not nmbs:
-        # the conditional rewrite's one full outer join (guard-kept
-        # pairs, updated pairs, conditional inserts and unmatched
-        # survivors from one projection) reads the source, and so do
-        # the key-stat aggregates / touched-file probe below —
-        # localCheckpoint materializes the batch-sized source ONCE,
-        # before ANY derivation, so a non-deterministic source
-        # cannot disagree between the probe/src_keys and the write
-        # branches (deriving src_keys from the un-checkpointed plan
-        # could drop or double-land rows). Skipped under full-sync,
-        # where a second materialized copy of a table-sized scan is
-        # exactly the memory pressure to avoid (branches re-scan).
-        # r14 note (measured, then reverted): extending this pin to
-        # ALL non-NMBS merges removed ~2 source passes per commit but
-        # made the source an opaque LogicalRDD with no size estimate,
-        # so the CoW/update branches lost their broadcast decisions
-        # and went sort-merge — lakehouse_cdf_feed 3.5 s -> 7.3 s,
-        # merge_state 1.2 -> 1.5 s in the alternating solo A/B. The
-        # un-pinned source's re-scans are pushdown-pruned parquet
-        # reads and strictly cheaper than de-broadcast joins; the
-        # conditional case keeps the pin because there determinism
-        # (not cost) requires it.
-        source_df = source_df.localCheckpoint(eager=False)
-        _pins.append(source_df)
+    try:
+        if conditional and not nmbs:
+            # the conditional rewrite's one full outer join (guard-kept
+            # pairs, updated pairs, conditional inserts and unmatched
+            # survivors from one projection) reads the source, and so do
+            # the key-stat aggregates / touched-file probe below —
+            # localCheckpoint materializes the batch-sized source ONCE,
+            # before ANY derivation, so a non-deterministic source
+            # cannot disagree between the probe/src_keys and the write
+            # branches (deriving src_keys from the un-checkpointed plan
+            # could drop or double-land rows). Skipped under full-sync,
+            # where a second materialized copy of a table-sized scan is
+            # exactly the memory pressure to avoid (branches re-scan).
+            # r14 note (measured, then reverted): extending this pin to
+            # ALL non-NMBS merges removed ~2 source passes per commit but
+            # made the source an opaque LogicalRDD with no size estimate,
+            # so the CoW/update branches lost their broadcast decisions
+            # and went sort-merge — lakehouse_cdf_feed 3.5 s -> 7.3 s,
+            # merge_state 1.2 -> 1.5 s in the alternating solo A/B. The
+            # un-pinned source's re-scans are pushdown-pruned parquet
+            # reads and strictly cheaper than de-broadcast joins; the
+            # conditional case keeps the pin because there determinism
+            # (not cost) requires it.
+            source_df = source_df.localCheckpoint(eager=False)
+            _pins.append(source_df)
 
-    # one row per NON-NULL source key tuple, or the merge is
-    # nondeterministic. count_distinct ignores NULL-component tuples,
-    # so NULL keys need their own check — conflating them with
-    # duplicates gives a misleading error (and a tuple with any NULL
-    # component can never match a target row).
-    any_null = _reduce(_or, [F.col(k).isNull() for k in keys])
-    # ONE aggregation job for uniqueness/NULL checks AND the per-key
-    # [min, max] bounds (r13, guide §1.2 — the bounds used to be a
-    # second full pass over the source)
-    bexprs = []
-    for k in keys:
-        bexprs.append(F.min(k).alias(f"__mn_{k}"))
-        bexprs.append(F.max(k).alias(f"__mx_{k}"))
-    nd = source_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_distinct(*[F.col(k) for k in keys]).alias("d"),
-        F.count(F.when(any_null, F.lit(1))).alias("nulls"),
-        *bexprs,
-    ).head()
-    if nd["nulls"]:
-        raise ValueError(
-            f"source has {nd['nulls']} NULL-keyed rows on {keys} — "
-            "MERGE keys must be non-null (a NULL key component can "
-            "never match)"
-        )
-    if nd["n"] != nd["d"]:
-        raise ValueError(
-            f"source has {nd['n'] - nd['d']} duplicate key rows — "
-            "dedupe (e.g. max_by precedence) before merging"
-        )
-    src_empty = nd["n"] == 0
-    bounds = nd  # same fused row: __mn_/__mx_ fields ride along
-    src_keys = source_df.select(*keys).distinct()
-    # stats-driven broadcast for BOTH source/target joins (the probe
-    # semi-join and the CoW anti-join): the exact distinct count from
-    # the duplicate check above × key-tuple width (ANALYZE sidecar
-    # for string avg_len) proves the key side small even when
-    # Catalyst's estimate of an opaque source (post-shuffle,
-    # deletion-vectored snapshot) says otherwise — see
-    # `_source_keys_broadcastable`
-    if use_stats and _source_keys_broadcastable(
-        spark,
-        table_dir,
-        [source_df.schema[k] for k in keys],
-        int(nd["d"]),
-    ):
-        src_keys = F.broadcast(src_keys)
-
-    # 1. zonemap skip + 2. exact discovery. A file is provably
-    # untouched when ANY key column's recorded [min, max] is disjoint
-    # from the source's range for that column (per-column cuts — the
-    # tuple can only match inside the intersection of all of them).
-    # Full-sync merges skip nothing: every file may hold rows whose
-    # key has no source match, and those rows must be REMOVED.
-    def _disjoint(entry: dict | None) -> bool:
-        if src_empty or not entry:
-            return False
+        # one row per NON-NULL source key tuple, or the merge is
+        # nondeterministic. count_distinct ignores NULL-component tuples,
+        # so NULL keys need their own check — conflating them with
+        # duplicates gives a misleading error (and a tuple with any NULL
+        # component can never match a target row).
+        any_null = _reduce(_or, [F.col(k).isNull() for k in keys])
+        # ONE aggregation job for uniqueness/NULL checks AND the per-key
+        # [min, max] bounds (r13, guide §1.2 — the bounds used to be a
+        # second full pass over the source)
+        bexprs = []
         for k in keys:
-            if k in entry and (
-                entry[k][1] < bounds[f"__mn_{k}"]
-                or entry[k][0] > bounds[f"__mx_{k}"]
-            ):
-                return True
-        return False
-
-    stats = man.get("stats", {})
-    live = _live_rel_files(spark, table_dir, man)
-    candidates = []
-    for d, rels in live.items():
-        for rel in rels:
-            entry = stats.get(rel)
-            if full_sync:
-                pass  # unconditional sync: every live file rewrites
-            elif nmbs_groups is not None:
-                # conditional NOT-MATCHED-BY-SOURCE: a file is
-                # provably untouchable only when it is BOTH
-                # key-disjoint (no matched rows) AND the condition's
-                # pruning groups prove it empty (no doomed unmatched
-                # rows) — 'delete unmatched WHERE stale' on a
-                # time-clustered table rewrites the stale files plus
-                # the key hits, not the table
-                if _disjoint(entry) and not _entry_may_match_where(
-                    entry, nmbs_groups
-                ):
-                    continue
-            elif _disjoint(entry):
-                continue  # proven disjoint from every source key
-            candidates.append(rel)
-    touched: list[str] = []
-    if nmbs:
-        # every candidate rewrites: NOT-MATCHED-BY-SOURCE rows must
-        # be deleted/updated wherever they live (the unconditional
-        # form is the documented O(table) clause; a condition prunes
-        # candidates above)
-        touched = sorted(candidates)
-    elif candidates and not src_empty:
-        probe = (
-            spark.read.parquet(
-                *[f"{table_dir}/{rel}" for rel in candidates]
+            bexprs.append(F.min(k).alias(f"__mn_{k}"))
+            bexprs.append(F.max(k).alias(f"__mx_{k}"))
+        nd = source_df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(*[F.col(k) for k in keys]).alias("d"),
+            F.count(F.when(any_null, F.lit(1))).alias("nulls"),
+            *bexprs,
+        ).head()
+        if nd["nulls"]:
+            raise ValueError(
+                f"source has {nd['nulls']} NULL-keyed rows on {keys} — "
+                "MERGE keys must be non-null (a NULL key component can "
+                "never match)"
             )
-            # raw file read: the keys live under their PHYSICAL names
-            .select(
-                *[
-                    F.col(pk).alias(k)
-                    for pk, k in zip(phys_keys, keys)
-                ],
-                F.input_file_name().alias("__f"),
+        if nd["n"] != nd["d"]:
+            raise ValueError(
+                f"source has {nd['n'] - nd['d']} duplicate key rows — "
+                "dedupe (e.g. max_by precedence) before merging"
             )
-            .join(src_keys, keys, "left_semi")
-            .select("__f")
-            .distinct()
-            # Driver-side bound on the touched-file discovery: the
-            # collect below is one path string per hit file — fine for
-            # batch-sized merges, but a merge whose keys touch
-            # millions of files would build an unbounded driver list.
-            # Cap the collect at one more than the candidate count we
-            # could possibly map (candidates is already manifest-
-            # resident metadata) AND the absolute _MERGE_TOUCHED_CAP;
-            # past the cap, fall back to rewriting every candidate
-            # file — a coarser but correct copy-on-write (documented
-            # in SCALE.md).
-            .limit(min(len(candidates), _MERGE_TOUCHED_CAP) + 1)
-        )
-        # Map probe hits back to rel paths by CANONICAL FULL PATH, not
-        # basename: `commit_existing_dir` admits arbitrary dirs, so two
-        # candidates may share a basename — a basename-keyed dict would
-        # silently mark the wrong file dead and leave the truly-touched
-        # file live (matched rows surviving alongside the merged rows).
-        by_path = {
-            _canon_file_path(f"{table_dir}/{rel}"): rel
-            for rel in candidates
-        }
-        hits = probe.collect()
-        if len(hits) > _MERGE_TOUCHED_CAP:
-            # cap exceeded: the merge touches (nearly) everything —
-            # rewrite all candidates instead of enumerating hits
-            touched = sorted(candidates)
-        else:
-            touched_set = set()
-            for r in hits:
-                p = _canon_file_path(r["__f"])
-                if p not in by_path:
-                    raise ValueError(
-                        f"merge probe returned file {r['__f']!r} not "
-                        "among the candidate live files — path "
-                        "canonicalization mismatch; refusing a "
-                        "possibly-wrong rewrite"
-                    )
-                touched_set.add(by_path[p])
-            touched = sorted(touched_set)
-
-    # 3. rewrite only the touched files (tombstones applied = purge)
-    parts: list[DataFrame] = []
-    src_effective: DataFrame | None = (
-        source_df if when_matched == "update" else None
-    )
-    if touched:
-        touched_by_dir: dict[str, list[str]] = {}
-        for rel in touched:
-            d = _rel_dir(rel)
-            touched_by_dir.setdefault(d, []).append(f"{table_dir}/{rel}")
-        scan = _scan_with_deletes(
+        src_empty = nd["n"] == 0
+        bounds = nd  # same fused row: __mn_/__mx_ fields ride along
+        src_keys = source_df.select(*keys).distinct()
+        # stats-driven broadcast for BOTH source/target joins (the probe
+        # semi-join and the CoW anti-join): the exact distinct count from
+        # the duplicate check above × key-tuple width (ANALYZE sidecar
+        # for string avg_len) proves the key side small even when
+        # Catalyst's estimate of an opaque source (post-shuffle,
+        # deletion-vectored snapshot) says otherwise — see
+        # `_source_keys_broadcastable`
+        if use_stats and _source_keys_broadcastable(
             spark,
             table_dir,
-            man,
-            dirs=sorted(touched_by_dir),
-            paths_by_dir=touched_by_dir,
-        )
-        if conditional and not nmbs:
-            # same plan-reuse move for the touched scan (the source
-            # was already checkpointed up front, before src_keys /
-            # the probe were derived from it): materialize the
-            # batch-sized touched scan once for the one-join write
-            # and the change-feed sidecar. Skipped under full-sync, where
-            # "touched" is the whole table and a second materialized
-            # copy is exactly the memory pressure to avoid.
-            scan = scan.localCheckpoint(eager=False)
-            _pins.append(scan)
-        if conditional:
-            # WHEN MATCHED AND <guard> / WHEN NOT MATCHED AND <cond>:
-            # ONE full outer join of the touched scan and the source
-            # yields the guard-kept targets, the updated pairs, the
-            # conditional inserts and (without a NOT-MATCHED-BY-SOURCE
-            # clause) the unmatched survivors in one pass over both
-            # pinned inputs — see `_conditional_merge_rows`
-            parts.append(
-                _conditional_merge_rows(
-                    scan,
-                    source_df,
-                    keys,
-                    when_matched == "update",
-                    when_matched_condition,
-                    when_not_matched_condition,
-                    rec_schema,
-                    keep_unmatched_target=not nmbs,
-                )
-            )
-            src_effective = None
-        elif not nmbs:
-            # unmatched target rows survive
-            parts.append(scan.join(src_keys, keys, "left_anti"))
-        if nmbs:
-            # WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN
-            # DELETE/UPDATE: unmatched target rows failing the
-            # condition (NULL counts as fail — the row is KEPT, the
-            # conservative fate) survive untouched; passing rows are
-            # dropped (delete) or land with the SET expressions
-            # applied (update)
-            unmatched = scan.join(src_keys, keys, "left_anti").alias(
-                "target"
-            )
-            if nmbs_cond is not None:
-                hit = F.coalesce(F.expr(nmbs_cond), F.lit(False))
-                kept = unmatched.where(~hit)
-                if not _filter_deterministic(kept):
-                    raise ValueError(
-                        "non-deterministic "
-                        f"when_not_matched_by_source_condition "
-                        f"{nmbs_cond!r} — a replayed or retried merge "
-                        "would pick different rows"
-                    )
-                parts.append(kept)
-                doomed = unmatched.where(hit)
-            else:
-                doomed = unmatched
-            if when_not_matched_by_source == "update":
-                bad_set = [
-                    c for c in nmbs_set if c not in scan.columns
-                ]
-                if bad_set:
-                    raise ValueError(
-                        f"when_not_matched_by_source_set names "
-                        f"column(s) {bad_set} not in the table"
-                    )
-                bad_keys = [c for c in nmbs_set if c in keys]
-                if bad_keys:
-                    raise ValueError(
-                        "when_not_matched_by_source_set must not "
-                        f"touch the merge key(s) {bad_keys}"
-                    )
-                for c, e in nmbs_set.items():
-                    if not _filter_deterministic(
-                        doomed.where(F.expr(e).isNotNull())
+            [source_df.schema[k] for k in keys],
+            int(nd["d"]),
+        ):
+            src_keys = F.broadcast(src_keys)
+
+        # 1. zonemap skip + 2. exact discovery. A file is provably
+        # untouched when ANY key column's recorded [min, max] is disjoint
+        # from the source's range for that column (per-column cuts — the
+        # tuple can only match inside the intersection of all of them).
+        # Full-sync merges skip nothing: every file may hold rows whose
+        # key has no source match, and those rows must be REMOVED.
+        def _disjoint(entry: dict | None) -> bool:
+            if src_empty or not entry:
+                return False
+            for k in keys:
+                if k in entry and (
+                    entry[k][1] < bounds[f"__mn_{k}"]
+                    or entry[k][0] > bounds[f"__mx_{k}"]
+                ):
+                    return True
+            return False
+
+        stats = man.get("stats", {})
+        live = _live_rel_files(spark, table_dir, man)
+        candidates = []
+        for d, rels in live.items():
+            for rel in rels:
+                entry = stats.get(rel)
+                if full_sync:
+                    pass  # unconditional sync: every live file rewrites
+                elif nmbs_groups is not None:
+                    # conditional NOT-MATCHED-BY-SOURCE: a file is
+                    # provably untouchable only when it is BOTH
+                    # key-disjoint (no matched rows) AND the condition's
+                    # pruning groups prove it empty (no doomed unmatched
+                    # rows) — 'delete unmatched WHERE stale' on a
+                    # time-clustered table rewrites the stale files plus
+                    # the key hits, not the table
+                    if _disjoint(entry) and not _entry_may_match_where(
+                        entry, nmbs_groups
                     ):
-                        raise ValueError(
-                            "non-deterministic SET expression "
-                            f"{e!r} for column {c!r}"
-                        )
-                parts.append(
-                    doomed.select(
-                        *[
-                            (
-                                F.expr(nmbs_set[c])
-                                .cast(scan.schema[c].dataType)
-                                .alias(c)
-                                if c in nmbs_set
-                                else F.col(c)
-                            )
-                            for c in scan.columns
-                        ]
-                    )
+                        continue
+                elif _disjoint(entry):
+                    continue  # proven disjoint from every source key
+                candidates.append(rel)
+        touched: list[str] = []
+        if nmbs:
+            # every candidate rewrites: NOT-MATCHED-BY-SOURCE rows must
+            # be deleted/updated wherever they live (the unconditional
+            # form is the documented O(table) clause; a condition prunes
+            # candidates above)
+            touched = sorted(candidates)
+        elif candidates and not src_empty:
+            touched = _touched_files(
+                spark.read.parquet(
+                    *[f"{table_dir}/{rel}" for rel in candidates]
                 )
-            # delete action: doomed rows simply do not land
-    if src_effective is not None:
-        if when_not_matched_condition is not None:
-            # zero-touched-files path: the whole source is inserts
-            src_effective = _insert_filter(
-                src_effective, when_not_matched_condition
-            )
-        parts.append(src_effective)
-
-    # CHANGE DATA FEED sidecar (r12 — Delta's CDF as the public
-    # analog): while the table property is on, the merge also writes
-    # the row-level changes it is making — update_pre/update_post
-    # pairs for guard-passing VALUE-CHANGED matches (no-op rewrites
-    # classify out, parity with `read_version_rowdiff`), delete
-    # pre-images for delete-merges and NOT-MATCHED-BY-SOURCE rows,
-    # inserts for unmatched source rows — to a writer-private pending
-    # dir recorded in the manifest. Cost: one extra batch-sized write
-    # built on the SAME checkpointed scan/source the CoW plan uses.
-    # A lost commit race leaves the sidecar as expire-grace debris,
-    # same as the data dir.
-    changes_rel: str | None = None
-    if man.get("change_feed"):
-        if rec_schema is None:
-            raise ValueError(
-                "change feed requires a recorded table schema "
-                "(legacy stat-less manifest) — rewrite the table or "
-                "disable the feed"
-            )
-        out_cols = [f.name for f in rec_schema.fields]
-        s_have = set(source_df.columns)
-
-        def _chg_aligned(df: DataFrame, have: set, ctype: str) -> DataFrame:
-            return df.select(
-                *[
-                    (
-                        F.col(c)
-                        if c in have
-                        else F.lit(None).cast(rec_schema[c].dataType)
-                    ).alias(c)
-                    for c in out_cols
-                ]
-            ).withColumn("_change_type", F.lit(ctype))
-
-        chg_parts: list[DataFrame] = []
-        if touched:
-            t_have = set(scan.columns)
-            prs = scan.alias("target").join(
-                source_df.alias("source"),
-                _reduce(
-                    _and,
-                    [
-                        F.col(f"target.{k}") == F.col(f"source.{k}")
-                        for k in keys
+                # raw file read: the keys live under their PHYSICAL names
+                .select(
+                    *[
+                        F.col(pk).alias(k)
+                        for pk, k in zip(phys_keys, keys)
                     ],
-                ),
-                "inner",
+                    F.input_file_name().alias("__f"),
+                )
+                .join(src_keys, keys, "left_semi"),
+                table_dir,
+                candidates,
             )
-            if when_matched_condition is not None:
-                prs = prs.where(
-                    F.coalesce(
-                        F.expr(when_matched_condition), F.lit(False)
+
+        # 3. rewrite only the touched files (tombstones applied = purge)
+        parts: list[DataFrame] = []
+        src_effective: DataFrame | None = (
+            source_df if when_matched == "update" else None
+        )
+        if touched:
+            touched_by_dir: dict[str, list[str]] = {}
+            for rel in touched:
+                d = _rel_dir(rel)
+                touched_by_dir.setdefault(d, []).append(f"{table_dir}/{rel}")
+            scan = _scan_with_deletes(
+                spark,
+                table_dir,
+                man,
+                dirs=sorted(touched_by_dir),
+                paths_by_dir=touched_by_dir,
+            )
+            if conditional and not nmbs:
+                # same plan-reuse move for the touched scan (the source
+                # was already checkpointed up front, before src_keys /
+                # the probe were derived from it): materialize the
+                # batch-sized touched scan once for the one-join write
+                # and the change-feed sidecar. Skipped under full-sync, where
+                # "touched" is the whole table and a second materialized
+                # copy is exactly the memory pressure to avoid.
+                scan = scan.localCheckpoint(eager=False)
+                _pins.append(scan)
+            if conditional:
+                # WHEN MATCHED AND <guard> / WHEN NOT MATCHED AND <cond>:
+                # ONE full outer join of the touched scan and the source
+                # yields the guard-kept targets, the updated pairs, the
+                # conditional inserts and (without a NOT-MATCHED-BY-SOURCE
+                # clause) the unmatched survivors in one pass over both
+                # pinned inputs — see `_conditional_merge_rows`
+                parts.append(
+                    _conditional_merge_rows(
+                        scan,
+                        source_df,
+                        keys,
+                        when_matched == "update",
+                        when_matched_condition,
+                        when_not_matched_condition,
+                        rec_schema,
+                        keep_unmatched_target=not nmbs,
                     )
                 )
+                src_effective = None
+            elif not nmbs:
+                # unmatched target rows survive
+                parts.append(scan.join(src_keys, keys, "left_anti"))
+            if nmbs:
+                # WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN
+                # DELETE/UPDATE: unmatched target rows failing the
+                # condition (NULL counts as fail — the row is KEPT, the
+                # conservative fate) survive untouched; passing rows are
+                # dropped (delete) or land with the SET expressions
+                # applied (update)
+                unmatched = scan.join(src_keys, keys, "left_anti").alias(
+                    "target"
+                )
+                if nmbs_cond is not None:
+                    hit = F.coalesce(F.expr(nmbs_cond), F.lit(False))
+                    kept = unmatched.where(~hit)
+                    if not _filter_deterministic(kept):
+                        raise ValueError(
+                            "non-deterministic "
+                            f"when_not_matched_by_source_condition "
+                            f"{nmbs_cond!r} — a replayed or retried merge "
+                            "would pick different rows"
+                        )
+                    parts.append(kept)
+                    doomed = unmatched.where(hit)
+                else:
+                    doomed = unmatched
+                if when_not_matched_by_source == "update":
+                    bad_set = [
+                        c for c in nmbs_set if c not in scan.columns
+                    ]
+                    if bad_set:
+                        raise ValueError(
+                            f"when_not_matched_by_source_set names "
+                            f"column(s) {bad_set} not in the table"
+                        )
+                    bad_keys = [c for c in nmbs_set if c in keys]
+                    if bad_keys:
+                        raise ValueError(
+                            "when_not_matched_by_source_set must not "
+                            f"touch the merge key(s) {bad_keys}"
+                        )
+                    for c, e in nmbs_set.items():
+                        if not _filter_deterministic(
+                            doomed.where(F.expr(e).isNotNull())
+                        ):
+                            raise ValueError(
+                                "non-deterministic SET expression "
+                                f"{e!r} for column {c!r}"
+                            )
+                    parts.append(
+                        doomed.select(
+                            *[
+                                (
+                                    F.expr(nmbs_set[c])
+                                    .cast(scan.schema[c].dataType)
+                                    .alias(c)
+                                    if c in nmbs_set
+                                    else F.col(c)
+                                )
+                                for c in scan.columns
+                            ]
+                        )
+                    )
+                # delete action: doomed rows simply do not land
+        if src_effective is not None:
+            if when_not_matched_condition is not None:
+                # zero-touched-files path: the whole source is inserts
+                src_effective = _insert_filter(
+                    src_effective, when_not_matched_condition
+                )
+            parts.append(src_effective)
 
-            def _img(pfx: str, have: set):
-                return F.struct(
+        # CHANGE DATA FEED sidecar (r12 — Delta's CDF as the public
+        # analog): while the table property is on, the merge also writes
+        # the row-level changes it is making — update_pre/update_post
+        # pairs for guard-passing VALUE-CHANGED matches (no-op rewrites
+        # classify out, parity with `read_version_rowdiff`), delete
+        # pre-images for delete-merges and NOT-MATCHED-BY-SOURCE rows,
+        # inserts for unmatched source rows — to a writer-private pending
+        # dir recorded in the manifest. Cost: one extra batch-sized write
+        # built on the SAME checkpointed scan/source the CoW plan uses.
+        # A lost commit race leaves the sidecar as expire-grace debris,
+        # same as the data dir.
+        changes_rel: str | None = None
+        if man.get("change_feed"):
+            if rec_schema is None:
+                raise ValueError(
+                    "change feed requires a recorded table schema "
+                    "(legacy stat-less manifest) — rewrite the table or "
+                    "disable the feed"
+                )
+            out_cols = [f.name for f in rec_schema.fields]
+            s_have = set(source_df.columns)
+
+            def _chg_aligned(
+                df: DataFrame, have: set, ctype: str
+            ) -> DataFrame:
+                return df.select(
                     *[
                         (
-                            F.col(f"{pfx}.{c}")
+                            F.col(c)
                             if c in have
-                            else F.lit(None).cast(
-                                rec_schema[c].dataType
-                            )
+                            else F.lit(None).cast(rec_schema[c].dataType)
                         ).alias(c)
                         for c in out_cols
                     ]
-                )
+                ).withColumn("_change_type", F.lit(ctype))
 
-            if when_matched == "delete":
-                pre = prs.select("target.*")
-                chg_parts.append(_chg_aligned(pre, t_have, "delete"))
-            else:
-                cmp_cols = [
-                    c
-                    for c in out_cols
-                    if _equatable_type(rec_schema[c].dataType)
-                ]
-                if len(cmp_cols) < len(out_cols):
-                    # a map-typed column cannot equality-compare, so
-                    # no-op suppression is off: every guard-passing
-                    # pair emits (Delta CDF records what the MERGE
-                    # did — this is that contract)
-                    changed = prs
-                else:
-                    changed = prs.where(
-                        ~_img("target", t_have).eqNullSafe(
-                            _img("source", s_have)
+            chg_parts: list[DataFrame] = []
+            if touched:
+                t_have = set(scan.columns)
+                prs = scan.alias("target").join(
+                    source_df.alias("source"),
+                    _reduce(
+                        _and,
+                        [
+                            F.col(f"target.{k}") == F.col(f"source.{k}")
+                            for k in keys
+                        ],
+                    ),
+                    "inner",
+                )
+                if when_matched_condition is not None:
+                    prs = prs.where(
+                        F.coalesce(
+                            F.expr(when_matched_condition), F.lit(False)
                         )
                     )
-                pre = changed.select("target.*")
-                chg_parts.append(
-                    _chg_aligned(pre, t_have, "update_pre")
-                )
-                post_keys = changed.select(
-                    *[F.col(f"target.{k}").alias(k) for k in keys]
-                ).distinct()
-                post = source_df.join(post_keys, keys, "left_semi")
-                chg_parts.append(
-                    _chg_aligned(post, s_have, "update_post")
-                )
-            if nmbs:
-                doomed_c = scan.join(
-                    src_keys, keys, "left_anti"
-                ).alias("target")
-                if nmbs_cond is not None:
-                    doomed_c = doomed_c.where(
-                        F.coalesce(F.expr(nmbs_cond), F.lit(False))
-                    )
-                if when_not_matched_by_source == "delete":
-                    chg_parts.append(
-                        _chg_aligned(doomed_c, t_have, "delete")
-                    )
-                else:
-                    # update-by-source: pre/post pair per VALUE-CHANGED
-                    # row (a SET landing identical values classifies
-                    # out, same rule as the matched-update feed)
-                    cmp_set = {
-                        c: e
-                        for c, e in nmbs_set.items()
-                        if _equatable_type(scan.schema[c].dataType)
-                    }
-                    if len(cmp_set) < len(nmbs_set):
-                        # map-typed SET target: no-op suppression off
-                        pre_c = doomed_c
-                    else:
-                        changed_c = _reduce(
-                            _or,
-                            [
-                                ~F.expr(e).eqNullSafe(F.col(c))
-                                for c, e in cmp_set.items()
-                            ],
-                        )
-                        pre_c = doomed_c.where(changed_c)
-                    chg_parts.append(
-                        _chg_aligned(pre_c, t_have, "update_pre")
-                    )
-                    post_c = pre_c.select(
+
+                def _img(pfx: str, have: set):
+                    return F.struct(
                         *[
                             (
-                                F.expr(nmbs_set[c])
-                                .cast(scan.schema[c].dataType)
-                                .alias(c)
-                                if c in nmbs_set
-                                else F.col(c)
-                            )
-                            for c in scan.columns
+                                F.col(f"{pfx}.{c}")
+                                if c in have
+                                else F.lit(None).cast(
+                                    rec_schema[c].dataType
+                                )
+                            ).alias(c)
+                            for c in out_cols
                         ]
                     )
-                    chg_parts.append(
-                        _chg_aligned(post_c, t_have, "update_post")
-                    )
-        if when_matched == "update" and not src_empty:
-            ins = source_df
-            if touched:
-                ins = ins.join(
-                    scan.select(*keys).distinct(), keys, "left_anti"
-                )
-            if when_not_matched_condition is not None:
-                ins = _insert_filter(ins, when_not_matched_condition)
-            chg_parts.append(_chg_aligned(ins, s_have, "insert"))
-        chg = None
-        if chg_parts:
-            chg = chg_parts[0]
-            for p in chg_parts[1:]:
-                chg = chg.unionByName(p)
-        changes_rel = _write_change_sidecar(spark, table_dir, chg)
-    v = cur + 1
-    new_dir = f"{_DATA}/v{v:06d}-merge-{uuid.uuid4().hex[:8]}"
-    new_stats: dict = {}
-    dirs = list(man["dirs"])
-    if parts:
-        out = parts[0]
-        for p in parts[1:]:
-            # evolution: survivors lack source-added columns (they
-            # null-fill); union coercion widens int→long/float→double
-            out = out.unionByName(p, allowMissingColumns=merge_schema)
-        # partitioned table: the rewrite ALWAYS keeps the hive layout
-        # so partition pruning stays directory-exact under merge
-        # churn; cluster_by then orders rows WITHIN the layout (range
-        # partition on (partition cols, cluster key) — hot partitions
-        # split into files with disjoint cluster ranges).
-        part_cols = man.get("partition_by") or []
-        hive_out = bool(part_cols)
-        if cluster_by is not None:
-            # clustering-preserving rewrite: the merge output's files
-            # keep DISJOINT cluster-key ranges — zonemap pruning stays
-            # tight under merge churn instead of degrading until the
-            # next OPTIMIZE. With no explicit count AQE coalesces the
-            # range shuffle for small rewrites; pass
-            # cluster_partitions to pin the file split.
-            rb = (
-                [cluster_partitions] if cluster_partitions else []
-            ) + [F.col(c) for c in part_cols] + [F.col(cluster_by)]
-            out = out.repartitionByRange(*rb).sortWithinPartitions(
-                *part_cols, cluster_by
-            )
-        writer = _to_physical(out, cmap).write.mode("errorifexists")
-        if hive_out:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(f"{table_dir}/{new_dir}")
-        if _dir_has_parquet(spark, f"{table_dir}/{new_dir}"):
-            # table CHECK constraints hold across MERGE too: the CoW
-            # output (rewritten survivors + source rows) validates in
-            # one pass; a violating merge is refused pre-manifest
-            _check_constraints(
-                spark,
-                f"{table_dir}/{new_dir}",
-                man.get("constraints") or {},
-                rec_schema,
-                column_map=cmap,
-            )
-            new_stats = _dir_file_stats(
-                spark, table_dir, new_dir, schema=rec_schema,
-                column_map=cmap,
-            )
-            dirs = dirs + [new_dir]
 
-    # 4. manifest: touched files die; fully-dead dirs drop out
-    dead = set(man.get("dead_files", [])) | set(touched)
-    kept_dirs = []
-    for d in dirs:
-        if d in live and all(rel in dead for rel in live[d]):
-            dead.difference_update(live[d])  # dir gone → entries moot
-            continue
-        kept_dirs.append(d)
-    kept_set = set(kept_dirs)
-    deletes = [
-        de
-        for de in man.get("deletes", [])
-        if any(c in kept_set for c in de["covers"])
-    ]
-    surviving_stats = {
-        rel: s
-        for rel, s in stats.items()
-        if rel not in dead and _rel_dir(rel) in kept_set
-    }
-    payload = {
-        "version": v,
-        "dirs": kept_dirs,
-        "op": f"merge:{when_matched}",
-        "stats": {**surviving_stats, **new_stats},
-        "recent_txns": _carry_txns(man, txn_id, v),
-    }
-    if rec_schema is not None:
-        # pre-set so _carry_props keeps the EVOLVED schema, not prev's
-        payload["schema"] = rec_schema.json()
-    if deletes:
-        payload["deletes"] = deletes
-    dead = {rel for rel in dead if _rel_dir(rel) in kept_set}
-    if dead:
-        payload["dead_files"] = sorted(dead)
-    if txn_id is not None:
-        payload["txn_id"] = txn_id
-    if changes_rel is not None:
-        # change-feed pointer: the sidecar dir, or "" for a
-        # feed-enabled commit that changed zero rows (readers emit
-        # nothing instead of refusing an un-sidecared DML commit)
-        payload["changes"] = changes_rel
-    # a hive-layout merge output dir needs basePath reads; surviving
-    # hive dirs keep their layout via the carry's intersect
-    if parts and new_stats and hive_out:
-        payload["hive_dirs"] = [new_dir]
-    _carry_props(man, payload)
-    try:
-        _write_json_atomic(spark, _manifest_path(table_dir, v), payload)
-    except ConcurrentWriteError as e:
-        # lost the race: attach this attempt's read+write set so
-        # `_with_commit_retries` can prove (or refute) that a re-run
-        # against the winner's head preserves snapshot semantics.
-        # The happy path pays nothing — everything here was already
-        # computed. The orphaned data dir is expire-grace debris,
-        # same as a lost append.
-        e.retry_ctx = {
+                if when_matched == "delete":
+                    pre = prs.select("target.*")
+                    chg_parts.append(_chg_aligned(pre, t_have, "delete"))
+                else:
+                    cmp_cols = [
+                        c
+                        for c in out_cols
+                        if _equatable_type(rec_schema[c].dataType)
+                    ]
+                    if len(cmp_cols) < len(out_cols):
+                        # a map-typed column cannot equality-compare, so
+                        # no-op suppression is off: every guard-passing
+                        # pair emits (Delta CDF records what the MERGE
+                        # did — this is that contract)
+                        changed = prs
+                    else:
+                        changed = prs.where(
+                            ~_img("target", t_have).eqNullSafe(
+                                _img("source", s_have)
+                            )
+                        )
+                    pre = changed.select("target.*")
+                    chg_parts.append(
+                        _chg_aligned(pre, t_have, "update_pre")
+                    )
+                    post_keys = changed.select(
+                        *[F.col(f"target.{k}").alias(k) for k in keys]
+                    ).distinct()
+                    post = source_df.join(post_keys, keys, "left_semi")
+                    chg_parts.append(
+                        _chg_aligned(post, s_have, "update_post")
+                    )
+                if nmbs:
+                    doomed_c = scan.join(
+                        src_keys, keys, "left_anti"
+                    ).alias("target")
+                    if nmbs_cond is not None:
+                        doomed_c = doomed_c.where(
+                            F.coalesce(F.expr(nmbs_cond), F.lit(False))
+                        )
+                    if when_not_matched_by_source == "delete":
+                        chg_parts.append(
+                            _chg_aligned(doomed_c, t_have, "delete")
+                        )
+                    else:
+                        # update-by-source: pre/post pair per VALUE-CHANGED
+                        # row (a SET landing identical values classifies
+                        # out, same rule as the matched-update feed)
+                        cmp_set = {
+                            c: e
+                            for c, e in nmbs_set.items()
+                            if _equatable_type(scan.schema[c].dataType)
+                        }
+                        if len(cmp_set) < len(nmbs_set):
+                            # map-typed SET target: no-op suppression off
+                            pre_c = doomed_c
+                        else:
+                            changed_c = _reduce(
+                                _or,
+                                [
+                                    ~F.expr(e).eqNullSafe(F.col(c))
+                                    for c, e in cmp_set.items()
+                                ],
+                            )
+                            pre_c = doomed_c.where(changed_c)
+                        chg_parts.append(
+                            _chg_aligned(pre_c, t_have, "update_pre")
+                        )
+                        post_c = pre_c.select(
+                            *[
+                                (
+                                    F.expr(nmbs_set[c])
+                                    .cast(scan.schema[c].dataType)
+                                    .alias(c)
+                                    if c in nmbs_set
+                                    else F.col(c)
+                                )
+                                for c in scan.columns
+                            ]
+                        )
+                        chg_parts.append(
+                            _chg_aligned(post_c, t_have, "update_post")
+                        )
+            if when_matched == "update" and not src_empty:
+                ins = source_df
+                if touched:
+                    ins = ins.join(
+                        scan.select(*keys).distinct(), keys, "left_anti"
+                    )
+                if when_not_matched_condition is not None:
+                    ins = _insert_filter(ins, when_not_matched_condition)
+                chg_parts.append(_chg_aligned(ins, s_have, "insert"))
+            chg = None
+            if chg_parts:
+                chg = chg_parts[0]
+                for p in chg_parts[1:]:
+                    chg = chg.unionByName(p)
+            changes_rel = _write_change_sidecar(spark, table_dir, chg)
+        out = None
+        if parts:
+            out = parts[0]
+            for p in parts[1:]:
+                # evolution: survivors lack source-added columns (they
+                # null-fill); union coercion widens int→long/float→double
+                out = out.unionByName(p, allowMissingColumns=merge_schema)
+            if cluster_by is not None:
+                # clustering-preserving rewrite: the merge output's files
+                # keep DISJOINT cluster-key ranges inside the hive layout —
+                # zonemap pruning stays tight under merge churn instead of
+                # degrading until the next OPTIMIZE
+                out = _range_cluster(
+                    out, part_cols, cluster_by, cluster_partitions
+                )
+        retry_ctx = {
             "op": f"MERGE ({when_matched})",
             "base_version": cur,
             "read_rels": set(candidates),
             "key_bounds": {
-                k: (bounds[f"__mn_{k}"], bounds[f"__mx_{k}"])
-                for k in keys
+                k: (bounds[f"__mn_{k}"], bounds[f"__mx_{k}"]) for k in keys
             },
             "read_whole_table": full_sync,
             # an empty source is only a NO-OP without a
-            # NOT-MATCHED-BY-SOURCE clause (with one, it still reads
-            # and deletes/updates unmatched rows)
+            # NOT-MATCHED-BY-SOURCE clause (with one, it still reads and
+            # deletes/updates unmatched rows)
             "source_empty": src_empty and not nmbs,
         }
         if nmbs_groups is not None:
-            # an appended row conflicts when it may match the merge
-            # keys OR the NOT-MATCHED-BY-SOURCE condition
-            e.retry_ctx["where_groups"] = nmbs_groups
-            e.retry_ctx["append_test"] = "either"
+            # an appended row conflicts when it may match the merge keys
+            # OR the NOT-MATCHED-BY-SOURCE condition
+            retry_ctx["where_groups"] = nmbs_groups
+            retry_ctx["append_test"] = "either"
+        # 4. commit: touched files die, fully-dead dirs drop out; a
+        # partitioned table's rewrite keeps the hive layout, so partition
+        # pruning stays directory-exact under merge churn
+        return _rewrite_commit(
+            spark, table_dir, cur, man, live, out, touched,
+            f"merge:{when_matched}", "-merge", part_cols, rec_schema,
+            constraints=man.get("constraints"),
+            changes_rel=changes_rel,
+            txn_id=txn_id,
+            retry_ctx=retry_ctx,
+        )
+    finally:
         for p in _pins:
             unpersist_checkpoint(p)
-        raise
-    for p in _pins:  # committed: the plan-reuse pins are dead state
-        unpersist_checkpoint(p)
-    return v
 
 
 def optimize_incremental(
@@ -5807,65 +5746,22 @@ def optimize_incremental(
     if not (small and worth_packing) and not needs_purge:
         return cur  # no debt — don't burn a version on a no-op
 
-    import uuid
-
-    v = cur + 1
-    new_dir = f"{_DATA}/v{v:06d}-compact-{uuid.uuid4().hex[:8]}"
-    dirs = list(big)
-    new_stats: dict = {}
-    part_cols = man.get("partition_by")
+    out = None
+    part_cols = man.get("partition_by") or []
     if small:
         df = _scan_with_deletes(spark, table_dir, man, dirs=small)
-        cmap_c = _column_map(man)
         n_files = max(1, ceil(small_bytes / max(1, target_file_bytes)))
         # partitioned table: consolidate WITHIN the hive layout, same
         # posture as optimize_version — pruning stays directory-exact
-        if part_cols:
-            _to_physical(
-                df.repartition(n_files, *part_cols), cmap_c
-            ).write.mode(
-                "errorifexists"
-            ).partitionBy(*part_cols).parquet(f"{table_dir}/{new_dir}")
-        else:
-            _to_physical(df.repartition(n_files), cmap_c).write.mode(
-                "errorifexists"
-            ).parquet(f"{table_dir}/{new_dir}")
-        if _dir_has_parquet(spark, f"{table_dir}/{new_dir}"):
-            new_stats = _dir_file_stats(
-                spark, table_dir, new_dir, schema=_man_schema(man),
-                column_map=cmap_c,
-            )
-            dirs = dirs + [new_dir]
-    big_set = set(big)
-    deletes = [
-        de
-        for de in man.get("deletes", [])
-        if any(c in big_set for c in de["covers"])
-    ]
-    stats = {
-        rel: s
-        for rel, s in man.get("stats", {}).items()
-        if _rel_dir(rel) in big_set and rel not in dead
-    }
-    payload = {
-        "version": v,
-        "dirs": dirs,
-        "op": f"compact:{len(small)}dirs",
-        "stats": {**stats, **new_stats},
-        "recent_txns": _carry_txns(man, None, v),
-    }
-    if deletes:
-        payload["deletes"] = deletes
-    remaining_dead = sorted(
-        rel for rel in dead if _rel_dir(rel) in big_set
+        out = df.repartition(n_files, *part_cols)
+    # every live file of a debt dir dies, so those dirs (and their
+    # vectors and dead files) drop; healthy dirs stay as they are
+    return _rewrite_commit(
+        spark, table_dir, cur, man, live, out,
+        [rel for d in small for rel in live[d]],
+        f"compact:{len(small)}dirs", "-compact", part_cols,
+        _man_schema(man),
     )
-    if remaining_dead:
-        payload["dead_files"] = remaining_dead
-    if part_cols and new_stats:
-        payload["hive_dirs"] = [new_dir]
-    _carry_props(man, payload)
-    _write_json_atomic(spark, _manifest_path(table_dir, v), payload)
-    return v
 
 
 def optimize_where(
@@ -5916,10 +5812,6 @@ def optimize_where(
             ),
         )
     from math import ceil
-
-    import uuid
-
-    from pyspark.sql import functions as F
 
     if op not in _PRUNE_OPS:
         raise ValueError(f"unknown op {op!r} (use one of {_PRUNE_OPS})")
@@ -5981,74 +5873,19 @@ def optimize_where(
             for d, rels in scope_by_dir.items()
         },
     )
-    v = cur + 1
-    new_dir = f"{_DATA}/v{v:06d}-optw-{uuid.uuid4().hex[:8]}"
     n_files = max(1, ceil(scope_bytes / max(1, target_file_bytes)))
     part_cols = man.get("partition_by") or []
     if cluster_by is not None:
         # tight per-file [min,max] on the cluster key inside the
-        # preserved layout — same recipe as merge_version's
-        # clustering-preserving rewrite
-        rb = [n_files] + [F.col(c) for c in part_cols] + [
-            F.col(cluster_by)
-        ]
-        out = df.repartitionByRange(*rb).sortWithinPartitions(
-            *part_cols, cluster_by
-        )
+        # preserved layout
+        out = _range_cluster(df, part_cols, cluster_by, n_files)
     else:
         out = df.coalesce(n_files)
-    cmap_w = _column_map(man)
-    writer = _to_physical(out, cmap_w).write.mode("errorifexists")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(f"{table_dir}/{new_dir}")
-    new_stats: dict = {}
-    dirs = list(man["dirs"])
-    if _dir_has_parquet(spark, f"{table_dir}/{new_dir}"):
-        new_stats = _dir_file_stats(
-            spark, table_dir, new_dir, schema=_man_schema(man),
-            column_map=cmap_w,
-        )
-        dirs = dirs + [new_dir]
-
-    # manifest mechanics mirror merge_version's step 4: scoped files
-    # die, fully-dead dirs drop out, tombstones survive only while
-    # they still cover a kept dir
-    dead = set(man.get("dead_files", [])) | set(scope)
-    kept_dirs = []
-    for d in dirs:
-        if d in live and all(rel in dead for rel in live[d]):
-            dead.difference_update(live[d])
-            continue
-        kept_dirs.append(d)
-    kept_set = set(kept_dirs)
-    deletes = [
-        de
-        for de in man.get("deletes", [])
-        if any(c in kept_set for c in de["covers"])
-    ]
-    surviving_stats = {
-        rel: s
-        for rel, s in stats.items()
-        if rel not in dead and _rel_dir(rel) in kept_set
-    }
-    payload = {
-        "version": v,
-        "dirs": kept_dirs,
-        "op": f"optimize:where:{col}{op}{value!r}",
-        "stats": {**surviving_stats, **new_stats},
-        "recent_txns": _carry_txns(man, None, v),
-    }
-    if deletes:
-        payload["deletes"] = deletes
-    dead = {rel for rel in dead if _rel_dir(rel) in kept_set}
-    if dead:
-        payload["dead_files"] = sorted(dead)
-    if part_cols and new_stats:
-        payload["hive_dirs"] = [new_dir]
-    _carry_props(man, payload)
-    _write_json_atomic(spark, _manifest_path(table_dir, v), payload)
-    return v
+    return _rewrite_commit(
+        spark, table_dir, cur, man, live, out, scope,
+        f"optimize:where:{col}{op}{value!r}", "-optw", part_cols,
+        _man_schema(man),
+    )
 
 
 def stream_read_versioned(

@@ -194,7 +194,7 @@ def test_extend_after_compaction_drops_dead_postings(spark, tdir):
         spark, _manifest_path(tdir, current_version(spark, tdir))
     )
     live = {
-        f"{tdir}/{rel}"
+        rel
         for rels in _live_rel_files(spark, tdir, man).values()
         for rel in rels
     }
@@ -290,27 +290,40 @@ def test_extend_model_based_matches_rebuild_across_ops(spark, tdir):
         assert routed == plain, (step, op, w)
 
 
+def _fed_rows(monkeypatch, module, facts_name):
+    """Spy on an index kind's per-file facts function: the list it
+    returns collects, per call, the ``(file, value)`` rows the facts
+    were computed from."""
+    facts = getattr(module, facts_name)
+    fed = []
+
+    def _spy(values):
+        fed.append(values.select("file", "value").collect())
+        return facts(values)
+
+    monkeypatch.setattr(module, facts_name, _spy)
+    return fed
+
+
 def test_extend_is_incremental_not_full_rebuild(spark, tdir, monkeypatch):
     """Pin the INCREMENTAL contract itself, not just output equality:
-    with a prior sidecar on disk, extend_text_index must detect it
-    (prev_v > 0) and must NOT fall back to build_text_index. A
-    regression in the sidecar-dir detection (e.g. matching r'-tokens$'
+    with a prior sidecar on disk, extend_text_index must find it and
+    tokenize ONLY the appended file, carrying the rest. A regression
+    in the prior-generation detection (e.g. matching r'-tokens$'
     against file paths, which never ends a path) silently turns every
-    extend into an O(table) rebuild."""
+    extend into an O(table) rebuild with the same output rows."""
     import tms_etl_spark.operators.textindex as ti
 
     write_version(_docs(spark, 0, 30, "old").repartition(1), tdir, "append")
     build_text_index(spark, tdir, "text")
     write_version(_docs(spark, 30, 40, "novel").repartition(1), tdir, "append")
 
-    def _boom(*a, **k):  # fallback taken == incremental path broken
-        raise AssertionError(
-            "extend_text_index fell back to a full rebuild despite a "
-            "prior sidecar being present"
-        )
-
-    monkeypatch.setattr(ti, "build_text_index", _boom)
+    fed = _fed_rows(monkeypatch, ti, "_postings")
     out = ti.extend_text_index(spark, tdir, "text")
+    assert len(fed) == 1 and len({r["file"] for r in fed[0]}) == 1
+    assert sorted(r["value"] for r in fed[0]) == sorted(
+        f"Alpha novel beta-{i}" for i in range(30, 40)
+    )
     got = search_token(spark, tdir, "text", "novel")
     assert len(got.inputFiles()) == 1
     assert {r["doc_id"] for r in got.collect()} == set(range(30, 40))
@@ -327,9 +340,8 @@ def test_extend_is_incremental_not_full_rebuild(spark, tdir, monkeypatch):
 
 
 def test_extend_bloom_is_incremental_not_full_rebuild(spark, tdir, monkeypatch):
-    """Same detection pin for the Bloom sidecar: a prior vNNN-bloom dir
-    must be found from list_files() FILE paths and the full-build
-    fallback must not run."""
+    """Same detection pin for the Bloom sidecar: the prior vNNN-bloom
+    generation must be found and only the appended file hashed."""
     import tms_etl_spark.operators.bloomindex as bi
 
     df = spark.range(0, 30).select(F.col("id").alias("doc_id"))
@@ -343,14 +355,10 @@ def test_extend_bloom_is_incremental_not_full_rebuild(spark, tdir, monkeypatch):
         "append",
     )
 
-    def _boom(*a, **k):
-        raise AssertionError(
-            "extend_bloom_index fell back to a full rebuild despite a "
-            "prior sidecar being present"
-        )
-
-    monkeypatch.setattr(bi, "build_bloom_index", _boom)
+    fed = _fed_rows(monkeypatch, bi, "_bitmaps")
     out = bi.extend_bloom_index(spark, tdir, "doc_id")
+    assert len(fed) == 1 and len({r["file"] for r in fed[0]}) == 1
+    assert sorted(r["value"] for r in fed[0]) == list(range(30, 40))
     files = {
         r["file"]
         for r in spark.read.parquet(out).select("file").distinct().collect()

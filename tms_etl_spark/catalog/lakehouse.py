@@ -849,8 +849,9 @@ def lakehouse_bloom_after_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_version_where`): the customer table lands as 8 randomly-laid-
     out files (zonemaps span the whole key domain — useless for a
     point predicate), the key column gets a Bloom sidecar, a
-    deterministic slice of keys is tombstoned, and the sidecar is
-    EXTENDED (bitmap carry, no rebuild). The IN-list read then probes
+    deterministic slice of keys is tombstoned, and the extend is a
+    no-op: a delete adds no data file, so the build's generation still
+    covers every live file and serves. The IN-list read then probes
     the bloom per value and routes the admitted files through the
     tombstone-subtracting scan — before r9 one tombstone demoted this
     to a full scan, so on a streaming-upsert table (every snapshot
@@ -1100,8 +1101,9 @@ def lakehouse_scan_where_not(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lakehouse_nightly_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The one-call nightly window end to end (r9,
     `operators/versioned.py:maintain_table`): commit half of part and
-    build a Bloom sidecar, append the other half (stranding the
-    sidecar at v1 — the day-2 decay mode of any indexed table), then
+    build a Bloom sidecar, append the other half (the v1 generation
+    no longer covers every live file and stops serving — the day-2
+    decay mode of any indexed table), then
     `maintain_table` compacts the small-file debt AND extends every
     ``_indexes/`` family to the post-compaction version (bitmap
     carry + hash only the new files). The IN-list read that follows

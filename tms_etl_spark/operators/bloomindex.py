@@ -10,42 +10,82 @@ plan time — a `key = value` read then scans only the files whose
 bloom admits the value (plus rare false positives; the residual
 filter keeps results exact).
 
+Generations follow the one sidecar protocol of `fileindex`: rows are
+keyed by the manifest's relative file path, and a generation serves a
+version only when it is published, the newest one at or before it,
+and covers every file live there — otherwise reads take the plain
+(zonemap-pruned) scan. This module keeps what is Bloom-specific: the
+bit words, and the probe.
+
 The index build is fully distributed and JVM-side: each row emits its
 k hash positions as (word, mask) pairs ARRAY-SIDE (one explode of a
 k-element array), and `bit_or` — a partial-combining aggregate —
 folds them into the per-(file, word) bitmap words. No Python in the
 hot path, no driver-side bitsets; the sidecar is (files x words)
-rows, written once per indexed version like any other data.
+rows.
 
-Hashes: xxhash64(col, seed=i) for i in 0..k-1 — deterministic across
-engines/runs, so an index built anywhere prunes the same files."""
+Hashes: xxhash64(value, i) for i in 0..k-1 — deterministic across
+engines/runs, so an index built anywhere prunes the same files.
+xxhash64 is type-sensitive, so build, extend and probe hash integral
+values as ``bigint`` and floating values as ``double``: a type
+widening (`versioned._TYPE_WIDENINGS`) never splits a generation into
+two hash domains."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import operator
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tms_etl_spark.operators import fileindex
 from tms_etl_spark.operators.versioned import (
-    _live_rel_files,
-    _read_files,
+    _man_schema,
+    _pruned_scan,
     _scan_with_deletes,
     _snapshot,
-    path_exists,
+    resolve_tag,
+    version_asof,
 )
 
 _BITS = 1 << 20  # 1 Mi bits per file ≈ 131 kB; ~1% FP at ~100k keys
 _K = 4
+_SIDECAR = "file string, word bigint, bits bigint"
+# integral types and the bit width of their range
+_INTEGRAL = {"tinyint": 7, "smallint": 15, "int": 31, "bigint": 63}
 
 
-def _canon(p: str) -> str:
-    """Normalize file:///x, file:/x, /x to one canonical /x form."""
-    import re
+def _hash_domain(c: Column, col_type: str) -> Column:
+    if col_type in _INTEGRAL:
+        return c.cast("bigint")
+    if col_type in ("float", "double"):
+        return c.cast("double")
+    return c
 
-    return re.sub(r"^file:/+", "/", p)
+
+def _positions(c: Column) -> list[Column]:
+    """The k bit positions of value ``c`` (already in its hash domain)."""
+    return [F.abs(F.xxhash64(c, F.lit(i))) % F.lit(_BITS) for i in range(_K)]
 
 
-def _index_dir(table_dir: str, col: str, version: int) -> str:
-    return f"{table_dir}/_indexes/{col}/v{version:06d}-bloom"
+def _word_mask(p: str) -> list[Column]:
+    """(word, mask) of bit position column ``p``."""
+    return [
+        (F.col(p) / 64).cast("long").alias("word"),
+        F.expr(f"shiftleft(1L, cast({p} % 64 as int))").alias("mask"),
+    ]
+
+
+def _bitmaps(values: DataFrame) -> DataFrame:
+    """Per-(file, word) bitmap words of a ``(file, value)`` frame."""
+    v = _hash_domain(F.col("value"), dict(values.dtypes)["value"])
+    return (
+        values.select("file", F.explode(F.array(*_positions(v))).alias("p"))
+        .select("file", *_word_mask("p"))
+        .groupBy("file", "word")
+        .agg(F.bit_or("mask").alias("bits"))
+    )
 
 
 def build_bloom_index(
@@ -55,67 +95,16 @@ def build_bloom_index(
     version: int | None = None,
 ) -> str:
     """Build the per-file Bloom sidecar for ``col`` at ``version``
-    (default: current). One pass over the version's data projected to
-    (file, col); returns the sidecar path. Rebuild after commits that
-    add files (an index is valid for the exact file set it indexed —
-    readers fall back to scanning un-indexed files). Bits-per-file
-    and hash count are module constants so build and probe can never
-    disagree.
-
-    The build scans the version's LIVE FILES directly — deliberately
-    NOT through `_scan_with_deletes`: if the tombstone anti-join
-    executed as a shuffle join (large delete vector, broadcast
-    disabled), `input_file_name()` returns '' past the shuffle and
-    the sidecar would index no real files — silently degrading every
-    point read to a full scan. Skipping tombstone subtraction is
-    sound for a Bloom PRE-FILTER: a deleted key admitted to a file's
-    bloom can only cause a false-positive file read; the residual
-    `col = value` filter plus the reader's tombstone handling keep
-    results exact."""
-    bits, n_hashes = _BITS, _K
-    v, man = _snapshot(spark, table_dir, version)
-    live = _live_rel_files(spark, table_dir, man)
-    paths = [
-        f"{table_dir}/{rel}" for rels in live.values() for rel in rels
-    ]
-    if not paths:
-        raise ValueError(
-            f"version {v} of {table_dir} has no live files to index"
-        )
-    from tms_etl_spark.operators.versioned import _column_map
-
-    # raw file read: a renamed column lives under its PHYSICAL name
-    col_phys = _column_map(man).get(col, col)
-    df = spark.read.parquet(*paths).select(
-        F.input_file_name().alias("file"), F.col(col_phys).alias("__v")
+    (default: current) from one pass over its live files; returns the
+    sidecar path. The generation serves this version and every later
+    one that adds no file (deletes, ALTERs, tags); after an append,
+    merge or compaction `extend_bloom_index` brings it up to date,
+    and until then point reads take the plain scan. Bits-per-file and
+    hash count are module constants so build and probe can never
+    disagree."""
+    return fileindex.write_generation(
+        spark, table_dir, "bloom", col, version, _bitmaps, carry=False
     )
-    # k hash positions per row, array-side; split into (word, mask)
-    pos = df.select(
-        "file",
-        F.explode(
-            F.array(
-                *[
-                    (
-                        F.abs(F.xxhash64(F.col("__v"), F.lit(i)))
-                        % F.lit(bits)
-                    )
-                    for i in range(n_hashes)
-                ]
-            )
-        ).alias("p"),
-    ).select(
-        "file",
-        (F.col("p") / 64).cast("long").alias("word"),
-        F.expr("shiftleft(1L, cast(p % 64 as int))").alias("mask"),
-    )
-    words = pos.groupBy("file", "word").agg(
-        F.bit_or("mask").alias("bits")
-    )
-    out = _index_dir(table_dir, col, v)
-    words.withColumn(
-        "file", F.regexp_replace("file", "^file:/+", "/")
-    ).write.mode("overwrite").parquet(out)
-    return out
 
 
 def extend_bloom_index(
@@ -125,89 +114,14 @@ def extend_bloom_index(
     version: int | None = None,
 ) -> str:
     """Incrementally bring the Bloom sidecar up to ``version`` —
-    per-file bitmaps are independent facts, so the new sidecar is the
-    newest prior sidecar's rows restricted to files still live at
-    ``version`` (broadcast semi-join against the metadata-sized live
-    list) plus bitmaps computed only for live-but-unindexed files.
-    Cost: O(new files + sidecar), never O(table); same maintenance
-    contract as `textindex.extend_text_index`. Falls back to a full
-    build when no prior sidecar exists."""
-    import re as _re
-
-    from tms_etl_spark.operators.versioned import _live_rel_files
-    from tms_etl_spark.sources.fs import list_files
-
-    v, man = _snapshot(spark, table_dir, version)
-    root = f"{table_dir}/_indexes/{col}"
-    prev_v = 0
-    for fi in list_files(spark, root):
-        # list_files yields FILE paths (…/vNNN-bloom/part-*.parquet);
-        # match the dir segment, not end-of-string, else prev_v stays 0
-        # and extend always falls back to a full-table rebuild.
-        m = _re.search(r"v(\d+)-bloom(?:/|$)", fi.path)
-        if m and int(m.group(1)) < v:
-            prev_v = max(prev_v, int(m.group(1)))
-    if prev_v == 0:
-        return build_bloom_index(spark, table_dir, col, v)
-
-    live = _live_rel_files(spark, table_dir, man)
-    live_paths = sorted(
-        _canon(f"{table_dir}/{rel}")
-        for rels in live.values()
-        for rel in rels
+    per-file bitmaps are independent facts, so the still-live files'
+    bitmaps carry over from the newest published generation and only
+    the other live files are hashed (a build when none exists; a
+    no-op when one already serves). Same maintenance contract as
+    `textindex.extend_text_index`."""
+    return fileindex.write_generation(
+        spark, table_dir, "bloom", col, version, _bitmaps
     )
-    if not live_paths:
-        raise ValueError(
-            f"version {v} of {table_dir} has no live files to index"
-        )
-    prev = spark.read.parquet(_index_dir(table_dir, col, prev_v))
-    live_df = spark.createDataFrame(
-        [(p,) for p in live_paths], "file string"
-    )
-    carried = prev.join(F.broadcast(live_df), "file", "left_semi")
-    indexed = {
-        _canon(r["file"])
-        for r in prev.select("file").distinct().collect()
-    }
-    new_files = [p for p in live_paths if p not in indexed]
-    parts = [carried]
-    if new_files:
-        from tms_etl_spark.operators.versioned import _column_map
-
-        col_phys = _column_map(man).get(col, col)
-        fresh = spark.read.parquet(*new_files).select(
-            F.regexp_replace(F.input_file_name(), "^file:/+", "/").alias(
-                "file"
-            ),
-            F.col(col_phys).alias("__v"),
-        )
-        pos = fresh.select(
-            "file",
-            F.explode(
-                F.array(
-                    *[
-                        (
-                            F.abs(F.xxhash64(F.col("__v"), F.lit(i)))
-                            % F.lit(_BITS)
-                        )
-                        for i in range(_K)
-                    ]
-                )
-            ).alias("p"),
-        ).select(
-            "file",
-            (F.col("p") / 64).cast("long").alias("word"),
-            F.expr("shiftleft(1L, cast(p % 64 as int))").alias("mask"),
-        )
-        parts.append(
-            pos.groupBy("file", "word").agg(F.bit_or("mask").alias("bits"))
-        )
-    out_df = parts[0]
-    for p in parts[1:]:
-        out_df = out_df.unionByName(p)
-    out = _index_dir(table_dir, col, v)
-    out_df.write.mode("overwrite").parquet(out)
-    return out
 
 
 def bloom_admitted_files(
@@ -219,20 +133,19 @@ def bloom_admitted_files(
     version: int,
     col_type: str,
 ) -> set[str] | None:
-    """The set of canon file paths of version ``version`` that MAY
-    contain ``col = value`` per the Bloom sidecar: bloom-admitted
-    files plus every live-but-unindexed file (conservative). None
-    when no sidecar exists for the column. ``value`` may be a
-    list/tuple — the admission is then the UNION over the values
-    (``col IN (…)``), probed in ONE sidecar pass instead of one per
-    value (r9: an IN-list probe is k·|values| broadcast word lookups
-    in a single join, so plan-time cost stays flat as the list
-    grows). This is the reusable skipping primitive behind
-    `read_version_point`; the WHERE front door
-    (`versioned.read_version_where`) intersects it with zonemap
-    pruning so equality conjuncts stack both cuts."""
-    idx = _index_dir(table_dir, col, version)
-    if not path_exists(spark, idx):
+    """The rel paths of the live files of snapshot ``(version, man)``
+    whose bloom MAY hold ``col = value``; None when no generation
+    serves the snapshot. ``value`` may be a list/tuple — the
+    admission is then the UNION over the values (``col IN (…)``),
+    probed in ONE sidecar pass instead of one per value (r9: an
+    IN-list probe is k·|values| word lookups in a single
+    pass, so plan-time cost stays flat as the list grows). Two Spark
+    jobs: the values' hash positions, then the sidecar hits. This is
+    the reusable skipping primitive behind `read_version_point`; the
+    WHERE front door (`versioned.read_version_where`) intersects it
+    with zonemap pruning so equality conjuncts stack both cuts."""
+    idx = fileindex.serving(spark, table_dir, "bloom", col, version, man)
+    if idx is None:
         return None
     values = (
         list(value) if isinstance(value, (list, tuple, set)) else [value]
@@ -242,71 +155,68 @@ def bloom_admitted_files(
         # rather than building a zero-element F.array() (analysis
         # error in Spark)
         return set()
-    # xxhash64 is TYPE-sensitive: probe with the column's exact type
-    # or a long column never matches an int literal's hashes. All
-    # values' k positions come back in ONE 1-row job.
-    pos_structs = [
-        F.struct(
-            F.lit(vi).alias("vid"),
-            (
-                F.abs(F.xxhash64(F.lit(v).cast(col_type), F.lit(i)))
-                % F.lit(_BITS)
-            ).alias("p"),
-        )
+    # probe with the column's type, then its hash domain
+    probes = [
+        F.struct(F.lit(vi).alias("vid"), p.alias("p"))
         for vi, v in enumerate(values)
-        for i in range(_K)
+        for p in _positions(_hash_domain(F.lit(v).cast(col_type), col_type))
     ]
     rows = (
         spark.range(1)
-        .select(F.explode(F.array(*pos_structs)).alias("s"))
-        .select(
-            F.col("s.vid").alias("vid"),
-            (F.col("s.p") / 64).cast("long").alias("word"),
-            F.expr("shiftleft(1L, cast(s.p % 64 as int))").alias("mask"),
-        )
+        .select(F.explode(F.array(*probes)).alias("s"))
+        .select(F.col("s.vid").alias("vid"), *_word_mask("s.p"))
         .collect()
     )
     # a file admits a value iff EVERY distinct probed (word, mask)
     # bit of THAT value is set (hash collisions can make < _K
-    # distinct probes per value)
+    # distinct probes per value). Only sidecar rows setting at least
+    # one probed bit come back — a metadata-sized collect, no join.
     by_vid: dict[int, set] = {}
+    by_word: dict[int, set] = {}
     for r in rows:
-        by_vid.setdefault(int(r["vid"]), set()).add(
-            (int(r["word"]), int(r["mask"]))
-        )
-    probe_rows = [
-        (vid, w, mk, len(ps))
-        for vid, ps in by_vid.items()
-        for w, mk in sorted(ps)
-    ]
-    words = spark.read.parquet(idx)
-    probe_df = spark.createDataFrame(
-        probe_rows, "vid int, word long, mask long, n_probes int"
+        w, mk = int(r["word"]), int(r["mask"])
+        by_vid.setdefault(int(r["vid"]), set()).add((w, mk))
+        by_word.setdefault(w, set()).add(mk)
+    any_bit = reduce(
+        operator.or_,
+        [
+            (F.col("word") == w) & (F.col("bits").bitwiseAND(F.lit(mk)) == mk)
+            for w, mks in by_word.items()
+            for mk in mks
+        ],
     )
-    hits = (
-        words.join(F.broadcast(probe_df), "word")
-        .where(F.col("bits").bitwiseAND(F.col("mask")) == F.col("mask"))
-        .groupBy("file", "vid", "n_probes")
-        .agg(F.count("*").alias("k_hit"))
-        .where(F.col("k_hit") >= F.col("n_probes"))
-    )
-    keep = [_canon(r["file"]) for r in hits.select("file").collect()]
-    indexed = {
-        _canon(r["file"])
-        for r in words.select("file").distinct().collect()
+    set_bits: dict[str, set] = {}
+    for r in (
+        spark.read.schema(_SIDECAR)
+        .parquet(idx)
+        .where(F.col("word").isin(list(by_word)) & any_bit)
+        .collect()
+    ):
+        for mk in by_word[r["word"]]:
+            if r["bits"] & mk == mk:
+                set_bits.setdefault(r["file"], set()).add((r["word"], mk))
+    return {
+        f
+        for f, got in set_bits.items()
+        if any(ps <= got for ps in by_vid.values())
     }
-    # files in the version but not in the index: scan conservatively.
-    # `_live_rel_files` is hive-aware (nested rel paths), so the dead
-    # check holds on partitioned tables too — a basename-built rel
-    # would never match a nested dead entry and resurrect merged rows.
-    live = _live_rel_files(spark, table_dir, man)
-    all_files = [
-        _canon(f"{table_dir}/{rel}")
-        for rels in live.values()
-        for rel in rels
-    ]
-    unindexed = [f for f in all_files if f not in indexed]
-    return set(keep) | set(unindexed)
+
+
+def _zonemap_eq(col: str, value, col_type: str) -> list[tuple]:
+    """``[(col, '=', value)]`` when the zonemap's Python comparison is
+    the residual's — the literal casts to ``col_type`` unchanged —
+    else no zonemap predicate (a float cut to an int column, say)."""
+    bits = _INTEGRAL.get(col_type)
+    exact = (
+        (
+            bits is not None
+            and type(value) is int
+            and -(1 << bits) <= value < (1 << bits)
+        )
+        or (col_type == "string" and isinstance(value, str))
+        or (col_type == "double" and type(value) is float)
+    )
+    return [(col, "=", value)] if exact else []
 
 
 def read_version_point(
@@ -318,25 +228,20 @@ def read_version_point(
     asof=None,
     tag: str | None = None,
 ) -> DataFrame:
-    """Point read `col = value` using the Bloom sidecar for file
-    skipping. Exact: bloom-admitted files still pass through the
-    residual filter; files not covered by the sidecar (added after
-    the index build) are conservatively scanned. Falls back to a
-    plain filtered scan when no index exists. The sidecar probe is a
-    metadata-scale aggregate (k words per file), collected as one
-    file list — the same plan-time footprint as zonemap pruning.
+    """Point read `col = value` with file skipping: the zonemap cut
+    and, when a Bloom generation serves the snapshot, the bloom
+    admission — both through the one pruned scan, which subtracts
+    deletion vectors over the surviving files only. Exact:
+    admitted files still pass the residual filter. A generation
+    serves the snapshot only when it covers every live file (see
+    `fileindex`); otherwise — e.g. after an append or a merge, until
+    the next extend — the read is the plain zonemap-pruned scan,
+    never a partial index.
 
     Snapshot selection mirrors `read_version_where` (r10):
     ``version``, ``asof`` (TIMESTAMP AS OF) and ``tag`` are mutually
     exclusive — "point-read the release-blessed snapshot" is
-    ``tag='release'``, no by-hand tag resolution. The sidecar probes
-    at the RESOLVED version: an index generation at or before it
-    covers the files it indexed, later files scan conservatively."""
-    from tms_etl_spark.operators.versioned import (
-        resolve_tag,
-        version_asof,
-    )
-
+    ``tag='release'``, no by-hand tag resolution."""
     if sum(x is not None for x in (version, asof, tag)) > 1:
         raise ValueError("version, asof and tag are mutually exclusive")
     if tag is not None:
@@ -344,51 +249,14 @@ def read_version_point(
     if asof is not None:
         version = version_asof(spark, table_dir, asof)
     v, man = _snapshot(spark, table_dir, version)
-    pred_scan = _scan_with_deletes(spark, table_dir, man)
-    lit = F.lit(value).cast(dict(pred_scan.dtypes)[col])
+    schema = _man_schema(man)
+    if schema is None:  # manifests from before schemas were recorded
+        schema = _scan_with_deletes(spark, table_dir, man).schema
+    col_type = schema[col].dataType.simpleString()
     admitted = bloom_admitted_files(
-        spark, table_dir, man, col, value, v,
-        dict(pred_scan.dtypes)[col],
+        spark, table_dir, man, col, value, v, col_type
     )
-    if admitted is None:
-        return pred_scan.where(F.col(col) == lit)
-    scan_files = sorted(admitted)
-    if not scan_files:
-        return pred_scan.where(F.col(col) == lit).limit(0)
-    if man.get("deletes"):
-        # tombstoned tables (r9): Bloom admission is a PRE-filter, so
-        # it composes with deletion vectors exactly like the zonemap
-        # cut does — the admitted file set routes through
-        # `_scan_with_deletes(paths_by_dir=)` (the seam
-        # `versioned._pruned_scan` already uses), which anti-joins
-        # tombstones over ONLY the surviving files. A deleted key
-        # still present in a file's bloom merely admits a
-        # false-positive file read (the soundness note in this
-        # module's build docstring); before r9 one tombstone demoted
-        # every point read here to the full subtracted scan — dead
-        # weight on streaming-upsert tables, whose every snapshot
-        # carries deletes.
-        live = _live_rel_files(spark, table_dir, man)
-        keep_dirs: list[str] = []
-        paths_by_dir: dict[str, list[str]] = {}
-        for d in man["dirs"]:
-            files = [
-                f"{table_dir}/{rel}"
-                for rel in live.get(d, [])
-                if _canon(f"{table_dir}/{rel}") in admitted
-            ]
-            if files:
-                keep_dirs.append(d)
-                paths_by_dir[d] = files
-        if not keep_dirs:
-            return pred_scan.where(F.col(col) == lit).limit(0)
-        return _scan_with_deletes(
-            spark, table_dir, man,
-            dirs=keep_dirs, paths_by_dir=paths_by_dir,
-        ).where(F.col(col) == lit)
-    # _read_files (not a bare explicit-file read): hive partition
-    # columns live in the PATH and need basePath + the recorded
-    # schema to come back — a plain read would drop them
-    return _read_files(spark, table_dir, man, scan_files).where(
-        F.col(col) == lit
-    )
+    return _pruned_scan(
+        spark, table_dir, _zonemap_eq(col, value, col_type), v,
+        allowed_files=admitted, man=man,
+    ).where(F.col(col) == F.lit(value).cast(col_type))

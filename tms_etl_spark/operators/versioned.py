@@ -1001,6 +1001,14 @@ def _carry_props(src: dict | None, payload: dict) -> None:
 _HIVE_UNION_MAX = 32
 
 
+def _uri_decode(col):
+    """One URI-decoding layer of a string column, JVM-side — a literal
+    '+' protected from url_decode's form rule (+ → space)."""
+    from pyspark.sql import functions as F
+
+    return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
+
+
 def _hive_collapsed_scan(reader, paths, schema, part_cols) -> DataFrame:
     """ONE scan for many hive version dirs: read the files plainly
     (recorded schema applied, so path-encoded partition columns come
@@ -1025,15 +1033,11 @@ def _hive_collapsed_scan(reader, paths, schema, part_cols) -> DataFrame:
     # partition columns are recovered explicitly below instead
     df = reader.option("recursiveFileLookup", "true").parquet(*paths)
     fname = F.input_file_name()
-
-    def _decode(col):
-        return F.url_decode(F.regexp_replace(col, r"\+", "%2B"))
-
     for c in part_cols:
         seg = F.regexp_extract(
             fname, "/" + _re.escape(c) + "=([^/]+)/", 1
         )
-        raw = _decode(_decode(seg))
+        raw = _uri_decode(_uri_decode(seg))
         parsed = F.when(
             (seg == "") | (raw == "__HIVE_DEFAULT_PARTITION__"),
             F.lit(None),
@@ -1660,10 +1664,9 @@ def describe_detail(
     for de in man.get("deletes", []):
         for fi in list_files(spark, f"{table_dir}/{de['dir']}", "*.parquet"):
             tomb_rows += 1  # tombstone FILES (row count would open them)
-    indexes = sorted(
-        fi.path.rsplit("/", 1)[-1]
-        for fi in list_dirs(spark, f"{table_dir}/_indexes")
-    )
+    from tms_etl_spark.operators.fileindex import generations
+
+    indexes = sorted({g.family for g in generations(spark, table_dir)})
     return {
         "version": v,
         "current_version": cur,
@@ -2744,7 +2747,7 @@ def _pruned_scan(
 ) -> DataFrame:
     """The file-pruned snapshot scan shared by `read_version_pruned`
     variants: files skipped when ANY conjunct's zonemap (or a derived
-    partition predicate) proves them empty. ``allowed_files`` (canon
+    partition predicate) proves them empty. ``allowed_files`` (rel
     paths) intersects an EXTERNAL admission set — e.g. Bloom-sidecar
     hits — on top of the zonemap cut. NO residual applied — callers
     attach their own row filter.
@@ -2783,11 +2786,9 @@ def _pruned_scan(
                 for g in prune_groups
             ):
                 continue
-            full = f"{table_dir}/{rel}"
-            if allowed_files is not None:
-                if re.sub(r"^file:/+", "/", full) not in allowed_files:
-                    continue
-            files.append(full)
+            if allowed_files is not None and rel not in allowed_files:
+                continue
+            files.append(f"{table_dir}/{rel}")
         if files:
             keep_dirs.append(d)
             paths_by_dir[d] = files
@@ -3021,8 +3022,9 @@ def read_version_where(
     ``table scan --where`` routes here.
 
     Equality conjuncts additionally consult the column's Bloom
-    sidecar when one exists (and the snapshot carries no deletion
-    vectors): the admitted-file set INTERSECTS the zonemap cut, so a
+    sidecar when a generation serves the snapshot (`fileindex` trust
+    rule: published, newest at or before it, covering every live
+    file): the admitted-file set INTERSECTS the zonemap cut, so a
     point predicate on a randomly-laid-out column still skips files
     zonemaps alone cannot.
 
@@ -3228,15 +3230,15 @@ def _semijoin_allowed_files(
     col: str,
     keys: list,
 ) -> set[str]:
-    """Canonical paths of the manifest's live files whose zonemap MAY
+    """Rel paths of the manifest's live files whose zonemap MAY
     hold one of the sorted ``keys`` on ``col`` — the DPP file cut as a
     plain admission set (conservative: stat-less files are admitted),
     so it can INTERSECT other admission sets (zonemap conjuncts, Bloom
     sidecars) in one read. Binary search per file over the sorted
     keys: O(files · log keys) driver metadata work, plus one Spark job
     per monotone generated-partition expression sourced from ``col``
-    (`_semijoin_image_preds`). Paths use the same ``file:`` -scheme
-    canon as `_pruned_scan`'s ``allowed_files`` membership test."""
+    (`_semijoin_image_preds`). Rel paths, like every admission set
+    `_pruned_scan` takes."""
     import bisect
 
     stats = man.get("stats", {})
@@ -3263,7 +3265,7 @@ def _semijoin_allowed_files(
                 for pc, op, imgs in image_preds
             ):
                 continue
-            allowed.add(re.sub(r"^file:/+", "/", f"{table_dir}/{rel}"))
+            allowed.add(rel)
     return allowed
 
 
@@ -3559,41 +3561,6 @@ def _alter_commit(
         raise
 
 
-def _move_index_generations(
-    spark: SparkSession,
-    table_dir: str,
-    src_name: str,
-    dst_name: str,
-    suffix: str,
-) -> None:
-    """Move the generation dirs of one index KIND (``-bloom`` or
-    ``-tokens``) from sidecar family dir ``src_name`` to
-    ``dst_name``, leaving other-kind generations behind — a family
-    dir can legally hold both kinds when a column is literally named
-    ``text_<x>`` (its Bloom gens live beside x's token gens). The
-    source dir is removed only when the move emptied it."""
-    src = f"{table_dir}/_indexes/{src_name}"
-    moving = [
-        g
-        for fi in list_dirs(spark, src)
-        if (g := fi.path.rsplit("/", 1)[-1]).endswith(suffix)
-    ]
-    if not moving:
-        return
-    fs, hsrc, jvm = _fs(spark, src)
-    Path = jvm.org.apache.hadoop.fs.Path
-    dst = f"{table_dir}/_indexes/{dst_name}"
-    hdst = Path(dst)
-    if not fs.exists(hdst):
-        fs.mkdirs(hdst)
-    for g in moving:
-        d = Path(f"{dst}/{g}")
-        if not fs.exists(d):
-            fs.rename(Path(f"{src}/{g}"), d)
-    if not list(fs.listStatus(hsrc)):
-        fs.delete(hsrc, False)
-
-
 def rename_column(
     spark: SparkSession,
     table_dir: str,
@@ -3719,27 +3686,11 @@ def rename_column(
     if not payload["column_map"]:
         del payload["column_map"]
     _alter_commit(spark, table_dir, v, payload, cur, "ALTER RENAME COLUMN")
-    # sidecar families are named by LOGICAL column: move them so
-    # future probes/maintenance find them under the new name (their
-    # content is column-name-free). Routed by GENERATION-DIR SUFFIX,
-    # not dir name — same disambiguation as maintain_table: the dir
-    # ``_indexes/text_x`` is column x's TOKEN family unless its gens
-    # end in ``-bloom`` (a Bloom family on a column literally named
-    # ``text_x``), so renaming ``text_x`` must move only the
-    # ``-bloom`` gens out of ``_indexes/text_x`` and leave x's
-    # ``-tokens`` gens attached. Per-generation moves make the mixed
-    # dir case exact. Best-effort — a failed move only degrades the
-    # index to "missing", never the data.
-    for src_name, dst_name, suffix in (
-        (old, new, "-bloom"),
-        (f"text_{old}", f"text_{new}", "-tokens"),
-    ):
-        try:
-            _move_index_generations(
-                spark, table_dir, src_name, dst_name, suffix
-            )
-        except Exception:  # noqa: BLE001 — index move is advisory
-            pass
+    # index families are named by LOGICAL column: move them so
+    # future probes/maintenance find them under the new name
+    from tms_etl_spark.operators.fileindex import move_generations
+
+    move_generations(spark, table_dir, old, new)
     return v
 
 
@@ -5708,10 +5659,10 @@ def optimize_incremental(
 
     cur, man = _snapshot(spark, table_dir)
     live = _live_rel_files(spark, table_dir, man)
-    dead = set(man.get("dead_files", []))
-    covered = set()
+    # purge debt: dirs owning a merge-dead file or covered by a vector
+    purge = {_rel_dir(rel) for rel in man.get("dead_files", [])}
     for de in man.get("deletes", []):
-        covered.update(de["covers"])
+        purge.update(de["covers"])
 
     small: list[str] = []
     big: list[str] = []
@@ -5726,24 +5677,17 @@ def optimize_incremental(
             for fi in list_files(spark, f"{table_dir}/{d}", "*.parquet")
             if _rel_of(fi.path, d) in live_set
         )
-        has_debt = (
-            nbytes / len(rels) < min_file_bytes
-            or d in covered
-            or any(rel in dead for rel in rels)
-        )
-        if has_debt:
+        if nbytes / len(rels) < min_file_bytes or d in purge:
             small.append(d)
             small_bytes += nbytes
         else:
             big.append(d)
-    needs_purge = bool(
-        covered or dead or len(big) + len(small) < len(man["dirs"])
-    )
     n_small_files = sum(len(live[d]) for d in small)
     worth_packing = len(small) >= 2 or n_small_files > max(
         1, ceil(small_bytes / max(1, target_file_bytes))
     )
-    if not (small and worth_packing) and not needs_purge:
+    dropped = len(big) + len(small) < len(man["dirs"])
+    if not (worth_packing or purge.intersection(small) or dropped):
         return cur  # no debt — don't burn a version on a no-op
 
     out = None
@@ -6037,19 +5981,11 @@ def stream_write_versioned(
                 partition_exprs=partition_exprs,
             )
         if maintain_indexes:
-            spark = batch_df.sparkSession
-            for col in maintain_indexes.get("bloom", []):
-                from tms_etl_spark.operators.bloomindex import (
-                    extend_bloom_index,
-                )
+            from tms_etl_spark.operators.fileindex import KINDS, extend
 
-                extend_bloom_index(spark, table_dir, col)
-            for col in maintain_indexes.get("text", []):
-                from tms_etl_spark.operators.textindex import (
-                    extend_text_index,
-                )
-
-                extend_text_index(spark, table_dir, col)
+            for kind in KINDS:
+                for col in maintain_indexes.get(kind, []):
+                    extend(batch_df.sparkSession, table_dir, kind, col)
 
     w = sdf.writeStream.foreachBatch(_sink).option(
         "checkpointLocation", checkpoint_dir
@@ -6667,28 +6603,15 @@ def vacuum_indexes(
     keep_last: int = 2,
 ) -> int:
     """GC for index sidecars (`_indexes/<name>/v<N>-…`): keep the
-    newest ``keep_last`` sidecar versions per index, delete the rest.
+    newest ``keep_last`` generations per index, delete the rest.
     Sidecars are derived data — rebuildable from any version — so
     this never affects correctness, only reclaims the space that
-    per-version builds/extends accumulate. Time-travel reads at an
-    expired sidecar's version silently fall back to unindexed scans
-    (the read paths already handle a missing sidecar). Returns the
-    number of sidecar dirs removed."""
-    import re as _re
+    builds/extends accumulate: a read whose serving generation was
+    removed takes the plain scan. Returns the number of generation
+    dirs removed."""
+    from tms_etl_spark.operators.fileindex import vacuum
 
-    removed = 0
-    for idx_dir in list_dirs(spark, f"{table_dir}/_indexes"):
-        versions = []
-        for gen in list_dirs(spark, idx_dir.path):
-            m = _re.match(r"v(\d+)-", gen.path.rsplit("/", 1)[-1])
-            if m:
-                versions.append((int(m.group(1)), gen.path))
-        versions.sort()
-        for _, p in versions[: max(0, len(versions) - keep_last)]:
-            fs, hp, _ = _fs(spark, p)
-            fs.delete(hp, True)
-            removed += 1
-    return removed
+    return vacuum(spark, table_dir, keep_last)
 
 
 def apply_rowdiff(
@@ -7043,9 +6966,9 @@ def maintain_table(
        (``text_<col>``) — is brought up to the post-compaction
        version via its incremental extend (bitmap/posting carry +
        hash only the new files, O(new files + sidecar)). Without
-       this, every commit strands the sidecars at an old version and
-       point reads silently degrade to full scans — the day-2 decay
-       mode of any indexed table. A family that fails to extend
+       this, the first commit that adds a file stops a generation
+       from serving and point reads degrade to plain scans — the
+       day-2 decay mode of any indexed table. An index that fails to extend
        (e.g. its column was dropped by an overwrite) is REPORTED in
        the summary and skipped, never fatal to the window;
     4. `expire_versions` (only when ``keep_last`` is given — version
@@ -7074,50 +6997,20 @@ def maintain_table(
     out["compacted"] = after != before
     out["version"] = after
     if extend_indexes:
+        from tms_etl_spark.operators.fileindex import extend, generations
+
         exts: dict[str, str] = {}
-        for fam in list_dirs(spark, f"{table_dir}/_indexes"):
-            name = fam.path.rsplit("/", 1)[-1]
-            # route by SIDECAR LAYOUT, not name prefix: a Bloom
-            # family on a column literally named ``text_<x>``
-            # shares the ``text_`` prefix with token sidecars, and
-            # a prefix route would misroute it to the text
-            # extender, fail, and let its point reads silently
-            # decay. Generation dirs disambiguate unambiguously —
-            # bloom gens end in ``-bloom``, token gens in
-            # ``-tokens`` — and one family dir may legally hold
-            # both (bloom on ``text_x`` + tokens on ``x``).
-            gens = [
-                g.path.rsplit("/", 1)[-1]
-                for g in list_dirs(spark, fam.path)
-            ]
-            kinds: list[tuple[str, str]] = []
-            if any(g.endswith("-tokens") for g in gens) and (
-                name.startswith("text_")
-            ):
-                kinds.append(("text", name[5:]))
-            if any(g.endswith("-bloom") for g in gens):
-                kinds.append(("bloom", name))
-            if not kinds:
-                exts[name] = "skipped: no recognizable generations"
-            for kind, col_k in kinds:
-                try:
-                    if kind == "text":
-                        from tms_etl_spark.operators.textindex import (
-                            extend_text_index,
-                        )
-
-                        extend_text_index(spark, table_dir, col_k)
-                    else:
-                        from tms_etl_spark.operators.bloomindex import (
-                            extend_bloom_index,
-                        )
-
-                        extend_bloom_index(spark, table_dir, col_k)
-                    exts[f"{name}:{kind}"] = "extended"
-                except Exception as e:  # noqa: BLE001 — reported,
-                    # not silent: one stale family (dropped column,
-                    # legacy layout) must not kill the window
-                    exts[f"{name}:{kind}"] = f"error: {e}"
+        for g in generations(spark, table_dir):
+            key = f"{g.family}:{g.kind}"
+            if key in exts:
+                continue
+            try:
+                extend(spark, table_dir, g.kind, g.col)
+                exts[key] = "extended"
+            except Exception as e:  # noqa: BLE001 — reported, not
+                # silent: one stale index (dropped column) must not
+                # kill the window
+                exts[key] = f"error: {e}"
         out["extended_indexes"] = exts
     if keep_last is not None:
         out["expired_versions"] = expire_versions(
@@ -7278,12 +7171,25 @@ def count_rows(
 
 def _write_json_overwrite(spark: SparkSession, path: str, payload: dict):
     """Plain last-writer-wins JSON write for DERIVED sidecars (table
-    statistics) — no conditional-commit ceremony: rebuilding derived
-    data twice is harmless, unlike manifests."""
+    statistics, index markers) — no conditional-commit ceremony:
+    rebuilding derived data twice is harmless, unlike manifests. A
+    local path is replaced atomically through the stdlib, so a reader
+    never sees a half-written file."""
+    data = json.dumps(payload).encode("utf-8")
+    local = _local(path, spark)
+    if local is not None:
+        import uuid
+
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        tmp = f"{local}.{uuid.uuid4().hex[:8]}.tmp"
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.replace(tmp, local)
+        return
     fs, jvm_path, _ = _fs(spark, path)
     out = fs.create(jvm_path, True)
     try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
 
